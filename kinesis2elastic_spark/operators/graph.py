@@ -193,6 +193,18 @@ def _symmetrize(df: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
     return df.select(both, *extra).select("__e.src", "__e.dst", *extra)
 
 
+def _cust_node(key: Column) -> Column:
+    """Customer key k → BIGINT node id 2k.  The key is widened before the
+    arithmetic: for an int32 key ≥ 2^30, ``k * 2`` would overflow int32."""
+    return key.cast("long") * 2
+
+
+def _supp_node(key: Column) -> Column:
+    """Supplier key k → BIGINT node id 2k+1 (widened first, as
+    :func:`_cust_node`)."""
+    return key.cast("long") * 2 + 1
+
+
 def _node_str(col: Column) -> Column:
     """Decode a numeric trade-graph node id back to its string form:
     2k → 'c'+k (customer), 2k+1 → 's'+k (supplier).  Pure integer bit
@@ -229,8 +241,8 @@ def _trade_edges(
     joined = li.join(o, li.l_orderkey == o.o_orderkey)
     if numeric:
         trade = joined.select(
-            (F.col("o_custkey") * 2).cast("long").alias("cust"),
-            (F.col("l_suppkey") * 2 + 1).cast("long").alias("supp"),
+            _cust_node(F.col("o_custkey")).alias("cust"),
+            _supp_node(F.col("l_suppkey")).alias("supp"),
         )
     else:
         trade = joined.select(
@@ -449,7 +461,7 @@ def q_graph_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reduction's min/max/checksum see the exact original strings.
     seeds = supplier.filter(
         F.col("s_suppkey") % REACH_SEED_MOD == REACH_SEED_REM
-    ).select((F.col("s_suppkey") * 2 + 1).cast("long").alias("node"))
+    ).select(_supp_node(F.col("s_suppkey")).alias("node"))
     # loop-width hint: 2x the lineitem row count bounds the symmetrized
     # distinct trade-edge count from above (each lineitem contributes at
     # most one (cust, supp) pair) — read from the parquet FOOTER
@@ -897,8 +909,8 @@ def _trade_edges_sparse(
     joined = li.join(o, li.l_orderkey == o.o_orderkey)
     if numeric:  # r15: BIGINT ids (see _trade_edges)
         out = joined.select(
-            (F.col("o_custkey") * 2).cast("long").alias("src"),
-            (F.col("l_suppkey") * 2 + 1).cast("long").alias("dst"),
+            _cust_node(F.col("o_custkey")).alias("src"),
+            _supp_node(F.col("l_suppkey")).alias("dst"),
         )
     else:
         out = joined.select(
@@ -1896,13 +1908,13 @@ def _trade_edges_weighted(
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     w = (
-        F.lit(1) + (F.col("o_custkey") + F.col("l_suppkey")) % F.lit(SSSP_W_MOD)
-    ).cast("long").alias("w")
+        F.lit(1) + (F.col("o_custkey").cast("long") + F.col("l_suppkey")) % F.lit(SSSP_W_MOD)
+    ).alias("w")
     joined = li.join(o, li.l_orderkey == o.o_orderkey)
     if numeric:  # r15: BIGINT ids (see _trade_edges) — weights untouched
         trade = joined.select(
-            (F.col("o_custkey") * 2).cast("long").alias("cust"),
-            (F.col("l_suppkey") * 2 + 1).cast("long").alias("supp"),
+            _cust_node(F.col("o_custkey")).alias("cust"),
+            _supp_node(F.col("l_suppkey")).alias("supp"),
             w,
         )
     else:
@@ -1936,7 +1948,7 @@ def q_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the strings are decoded once on the node-rate output.
     seeds = supplier.filter(
         F.col("s_suppkey") % REACH_SEED_MOD == REACH_SEED_REM
-    ).select((F.col("s_suppkey") * 2 + 1).cast("long").alias("node"))
+    ).select(_supp_node(F.col("s_suppkey")).alias("node"))
     hint = 2 * table_rows(sf_dir, "lineitem")  # parquet-footer metadata
     stats: dict = {}
     dist = sssp_weighted(

@@ -4,10 +4,10 @@ The reference keeps field-level parsing in OpenSearch ingest pipelines
 (ingest/one-pipeline-to-rule-them-all.json dispatches on logGroup ~ /axway/;
 ingest/axway-ingest.json runs a 19-processor chain: grok → uri_parts → set /
 remove / rename → date promotion → geoip → painless scripts → on_failure).
-Here every processor becomes a null-safe Catalyst column expression; the
-chain is a pure ``DataFrame -> DataFrame`` function, so at 100 TB the whole
-pipeline is one whole-stage-codegen'd projection (plus one broadcast join
-for geoip) — no per-document interpreter loop.
+Here every processor becomes a null-safe Catalyst column expression, one
+oracle query per processor; the whole chain (``q_pipeline_axway``) runs
+through ``pipeline_dsl.PipelineInterpreter`` over the committed fixture
+spec, the same execution path as the service — no per-document loop.
 
 Order sensitivity is preserved exactly where the reference depends on it:
 ``event.created`` copies @timestamp *before* the date processor overwrites
@@ -40,6 +40,7 @@ from .grok import (
     grok_matched,
     named_group_regex,
 )
+from .pipeline_dsl import PipelineInterpreter, fixture_spec
 
 AXWAY = compile_grok(AXWAY_ACCESS_TEMPLATE)
 IP_OR_HOST = compile_grok(IP_OR_HOSTNAME_TEMPLATE)
@@ -524,60 +525,41 @@ def q_dead_letter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pipeline_axway(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A17-A31 end-to-end, ORACLE-CHECKED: dispatch + full axway chain
-    over a mixed stream — axway-routed rows get the whole enrichment
-    (grok, uri_parts, sets, date promotion, geoip, renames), others pass
-    through; garbage lines in the axway branch dead-letter.  Every stage
-    has its own green oracle precedent (q_grok, q_case_when,
-    q_date_parse, q_geoip_join, q_dispatch, q_dead_letter); this oracle
-    composes the same SQL pieces over the same synthesized lines, so the
-    full composed pipeline is value-hash-checked end to end."""
+    """A17-A31 end to end, oracle-checked, on the service's execution
+    path: the synthesized lines as the service's flat dotted-path columns
+    (with a NULL ``@timestamp``) run through :class:`PipelineInterpreter`
+    over the committed fixture spec.  Non-axway rows pass through; garbage
+    lines in the axway branch dead-letter.  The final select maps the
+    output to this query's column names, with ``error.message`` reduced to
+    the oracle's marker.  The oracle composes the per-stage SQL (q_grok,
+    q_case_when, q_date_parse, q_geoip_join, q_dispatch, q_dead_letter)
+    over the same lines."""
     lines = synth_lines(spark, sf_dir)
     log_group = F.when(
         F.col("user_id") % 3 == 0, F.lit("/aws/axway/gateway")
     ).otherwise(F.lit("/aws/app/service"))
     msg = F.when(F.col("event_id") % 17 == 0, F.lit("not an access log")).otherwise(F.col("line"))
-    staged = lines.select("event_id", log_group.alias("logGroup"), msg.alias("message_text"))
-
-    # Materialize the match/dispatch guards once: every output column below
-    # references them, and leaving them as inline expressions would re-run
-    # the (expensive) whole-pattern rlike per column.
-    staged = staged.withColumn(
-        "_matched", grok_matched(F.col("message_text"), AXWAY)
-    ).withColumn("_active", F.col("logGroup").rlike("axway") & F.col("_matched"))
-
-    g = grok_columns(F.col("message_text"), AXWAY)
-    active = F.col("_active")
-    status = F.when(active, g["http.response.status_code"])
-    enriched = staged.select(
+    flat = lines.select(
         "event_id",
-        "logGroup",
-        status.alias("status_code"),
-        F.when(active, g["_tmp.url_orig"]).alias("url_orig"),
-        F.when(active & (g["http.response.status_code"] < 400), "success")
-        .when(active & (g["http.response.status_code"] > 399), "failure")
-        .alias("event_outcome"),
-        F.when(active, F.try_to_timestamp(g["apache.access.time"], F.lit("dd/MMM/yyyy:H:m:s Z"))).alias(
-            "timestamp_promoted"
-        ),
-        F.when(active, g["source.address"]).alias("source.ip"),
-        F.when(
-            F.col("logGroup").rlike("axway") & ~F.col("_matched"),
-            F.lit("grok pattern did not match"),
-        ).alias("error_message"),
+        log_group.alias("records.data.logGroup"),
+        msg.alias("records.data.logEvents.message.text"),
+        F.lit(None).cast("timestamp").alias("@timestamp"),
     )
-    out = geoip_enrich(enriched, synthetic_geoip_dim(spark), "source.ip")
+    interp = PipelineInterpreter(fixture_spec(), geoip_dim=synthetic_geoip_dim(spark))
+    out = interp.run(flat, "route")
     return out.select(
         "event_id",
-        "logGroup",
-        "status_code",
-        "url_orig",
-        "event_outcome",
-        "timestamp_promoted",
+        F.col("`records.data.logGroup`").alias("logGroup"),
+        F.col("`http.response.status_code`").alias("status_code"),
+        F.col("`url.original`").alias("url_orig"),
+        F.col("`event.outcome`").alias("event_outcome"),
+        F.col("`@timestamp`").alias("timestamp_promoted"),
         F.col("`source.ip`").alias("source_ip"),
         F.col("`source.geo.country_iso_code`").alias("geo_country"),
         F.col("`source.as.number`").alias("as_number"),
-        "error_message",
+        F.when(F.col("`error.message`").isNotNull(), F.lit("grok pattern did not match")).alias(
+            "error_message"
+        ),
     )
 
 

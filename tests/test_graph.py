@@ -690,3 +690,39 @@ def test_double_sweep_finds_path_diameter(spark):
     )
     assert b2.agg(F.max("dist")).first()[0] == 5  # double sweep exact on paths
     assert b2.count() == 6  # sweep 2 covers the whole component
+
+
+def test_numeric_node_ids_do_not_overflow_int32_keys(spark, tmp_path):
+    """Int32 keys ≥ 2^30: the BIGINT node ids 2k / 2k+1 and the SSSP
+    weight's key sum are computed in 64 bits, so they neither wrap nor
+    raise, and the ids decode back to the original keys."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cust, supp = 2**30 + 5, 2**31 - 2  # supp % CC_SUPP_MOD == 0: kept by the sparse graph
+    i32 = pa.int32()
+    pq.write_table(
+        pa.table({
+            "l_orderkey": pa.array([1], i32),
+            "l_suppkey": pa.array([supp], i32),
+            "l_quantity": pa.array([float(graph.CC_QTY)]),
+        }),
+        tmp_path / "lineitem.parquet",
+    )
+    pq.write_table(
+        pa.table({"o_orderkey": pa.array([1], i32), "o_custkey": pa.array([cust], i32)}),
+        tmp_path / "orders.parquet",
+    )
+    d = str(tmp_path)
+    c_id, s_id = 2 * cust, 2 * supp + 1
+    both = {(c_id, s_id), (s_id, c_id)}
+
+    sym = graph._trade_edges(spark, d, numeric=True)
+    assert {(r.src, r.dst) for r in sym.collect()} == both
+    sparse = graph._trade_edges_sparse(spark, d, numeric=True)
+    assert {(r.src, r.dst) for r in sparse.collect()} == {(c_id, s_id)}
+    weighted = graph._trade_edges_weighted(spark, d, numeric=True)
+    w = 1 + (cust + supp) % graph.SSSP_W_MOD
+    assert {(r.src, r.dst, r.w) for r in weighted.collect()} == {(a, b, w) for a, b in both}
+    decoded = {r.n for r in sym.select(graph._node_str(F.col("src")).alias("n")).collect()}
+    assert decoded == {f"c{cust}", f"s{supp}"}

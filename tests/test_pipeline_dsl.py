@@ -8,7 +8,12 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from kinesis2elastic_spark.operators.pipeline_dsl import PipelineInterpreter, parse_condition
+from kinesis2elastic_spark.operators.grok import AXWAY_ACCESS_TEMPLATE
+from kinesis2elastic_spark.operators.pipeline_dsl import (
+    PipelineInterpreter,
+    fixture_spec,
+    parse_condition,
+)
 from kinesis2elastic_spark.sources.geoip import synthetic_geoip_dim
 
 GOOD = (
@@ -20,78 +25,9 @@ BAD_STATUS = GOOD.replace(" 200 ", " 503 ")
 GARBAGE = "GARBAGE NOT A LOG LINE"
 
 # Same semantics as ingest/axway-ingest.json, written from the operator
-# inventory (SURVEY §2 A17-A31), not copied.
-SPEC = {
-    "route": {
-        "processors": [
-            {
-                "pipeline": {
-                    "name": "enrich",
-                    "if": "ctx.records?.data?.logGroup =~ /axway/",
-                }
-            }
-        ]
-    },
-    "enrich": {
-        "processors": [
-            {
-                "grok": {
-                    "field": "records.data.logEvents.message.text",
-                    "patterns": [
-                        "%{HOSTNAME:remote.host} - %{HTTPDUSER:user.name} "
-                        "\\[%{HTTPDATE:apache.access.time}\\]  "
-                        '"(?:%{WORD:http.request.method} %{DATA:_tmp.url_orig} '
-                        'HTTP/%{NUMBER:http.version}|-)?" '
-                        "%{NUMBER:http.response.status_code:long} "
-                        "(?:%{NUMBER:http.response.body.bytes:long}|-) "
-                        '%{NUMBER:http.response.time:long} '
-                        '"(?<x_forwarded_for>%{IP:source.address}(?:,[^,]+)*)" '
-                        "%{DATA:hc.request.clientid} (%{DATA:hc.transactionid}|-) "
-                        "%{GREEDYDATA:hc.correlationid}"
-                    ],
-                    "ignore_missing": True,
-                }
-            },
-            {"uri_parts": {"field": "_tmp.url_orig"}},
-            {"remove": {"field": ["_tmp.url_orig"], "ignore_missing": True}},
-            {"set": {"field": "event.kind", "value": "event"}},
-            {
-                "set": {
-                    "field": "event.outcome",
-                    "value": "success",
-                    "if": "ctx?.http?.response?.status_code != null && ctx.http.response.status_code < 400",
-                }
-            },
-            {
-                "set": {
-                    "field": "event.outcome",
-                    "value": "failure",
-                    "if": "ctx?.http?.response?.status_code != null && ctx.http.response.status_code > 399",
-                }
-            },
-            {"set": {"copy_from": "@timestamp", "field": "event.created"}},
-            {
-                "date": {
-                    "field": "apache.access.time",
-                    "target_field": "@timestamp",
-                    "formats": ["dd/MMM/yyyy:H:m:s Z"],
-                    "ignore_failure": True,
-                }
-            },
-            {"remove": {"field": "apache.access.time", "ignore_failure": True}},
-            {"grok": {"field": "source.address", "ignore_missing": True,
-                      "patterns": ["^(%{IP:source.ip}|%{HOSTNAME:source.domain})$"]}},
-            {"geoip": {"field": "source.ip", "target_field": "source.geo", "ignore_missing": True}},
-            {"geoip": {"field": "source.ip", "target_field": "source.as",
-                       "properties": ["asn", "organization_name"], "ignore_missing": True}},
-            {"rename": {"field": "source.as.asn", "target_field": "source.as.number",
-                        "ignore_missing": True}},
-        ],
-        "on_failure": [
-            {"set": {"field": "error.message", "value": "{{ _ingest.on_failure_message }}"}}
-        ],
-    },
-}
+# inventory (SURVEY §2 A17-A31), not copied: the committed package fixture
+# that the service tests, q_pipeline_axway and perfbench all run.
+SPEC = fixture_spec()
 
 
 @pytest.fixture(scope="module")
@@ -151,6 +87,88 @@ def test_non_axway_passthrough(result):
     assert r["http.response.status_code"] is None
     assert r["event.kind"] is None
     assert r["@timestamp"].year == 2021
+
+
+def test_fixture_grok_is_the_axway_template():
+    """q_pipeline_axway's oracle extracts with AXWAY_ACCESS_TEMPLATE's
+    compiled regex, so the fixture must run exactly that grok."""
+    assert SPEC["enrich"]["processors"][0]["grok"]["patterns"] == [AXWAY_ACCESS_TEMPLATE]
+
+
+def test_dispatch_keeps_values_outside_branch(spark):
+    """Rows outside a ``pipeline`` branch keep their input values for the
+    columns the branch overwrites (``@timestamp`` via ``date``, a preset
+    ``event.kind``); a scratch column the branch creates and removes is
+    absent from the output."""
+    spec = {
+        "route": {"processors": [{"pipeline": {"name": "sub", "if": "ctx.lg =~ /axway/"}}]},
+        "sub": {
+            "processors": [
+                {"set": {"field": "tmp.scratch", "value": "x"}},
+                {"set": {"field": "event.kind", "value": "event"}},
+                {"date": {"field": "t", "formats": ["dd/MMM/yyyy:H:m:s Z"]}},
+                {"remove": {"field": "tmp.scratch"}},
+            ]
+        },
+    }
+    t = "13/Aug/2026:10:15:32 +0000"
+    df = spark.createDataFrame(
+        [(1, "/aws/axway/gw", t, "preset"), (2, "/aws/app/svc", t, "preset"), (3, None, t, None)],
+        "id bigint, lg string, t string, kind string",
+    ).select(
+        "id", "lg", "t", F.col("kind").alias("event.kind"),
+        F.lit("2021-10-30 19:35:18").cast("timestamp").alias("@timestamp"),
+    )
+    out = PipelineInterpreter(spec).run(df, "route")
+    assert out.columns == ["id", "lg", "t", "event.kind", "@timestamp"]
+    rows = {r.id: r for r in out.collect()}
+    assert rows[1]["event.kind"] == "event" and rows[1]["@timestamp"].year == 2026
+    assert rows[2]["event.kind"] == "preset" and rows[2]["@timestamp"].year == 2021
+    assert rows[3]["event.kind"] is None and rows[3]["@timestamp"].year == 2021
+
+
+def test_nested_pipeline_dispatch(spark):
+    """A ``pipeline`` inside a branch writes only where both conditions
+    hold.  Each condition is evaluated once, at dispatch: the inner branch
+    overwriting ``g`` (and the grok materializing that) does not move
+    rows out of the outer branch."""
+    spec = {
+        "outer": {"processors": [{"pipeline": {"name": "mid", "if": "ctx.g =~ /a|b/"}}]},
+        "mid": {
+            "processors": [
+                {"set": {"field": "m", "value": "mid"}},
+                {"pipeline": {"name": "inner", "if": "ctx.g =~ /a/"}},
+                {"grok": {"field": "v", "patterns": ["^%{WORD:w}$"]}},
+                {"set": {"field": "after", "value": "{{v}}"}},
+            ]
+        },
+        "inner": {"processors": [{"set": {"field": "v", "value": "inner"}},
+                                 {"set": {"field": "g", "value": "z"}}]},
+    }
+    df = spark.createDataFrame([(1, "a", "x"), (2, "b", "y"), (3, "c", "w")], "id bigint, g string, v string")
+    out = PipelineInterpreter(spec).run(df, "outer")
+    assert out.columns == ["id", "g", "v", "m", "w", "after"]
+    got = {r.id: (r.g, r.v, r.m, r.w, r.after) for r in out.collect()}
+    assert got == {
+        1: ("z", "inner", "mid", "inner", "inner"),
+        2: ("b", "y", "mid", "y", "y"),
+        3: ("c", "w", None, None, None),
+    }
+
+
+def test_spec_plan_stays_flat(spark):
+    """Writes stay symbolic until a grok or geoip needs a materialized
+    column, so SPEC over the service's flattened documents analyzes to a
+    bounded number of projections, not one per processor write."""
+    from kinesis2elastic_spark.operators.decode import decode_envelopes
+    from kinesis2elastic_spark.schemas import FIREHOSE_ENVELOPE
+    from kinesis2elastic_spark.service import flatten_for_pipeline
+
+    flat = flatten_for_pipeline(decode_envelopes(spark.createDataFrame([], FIREHOSE_ENVELOPE)))
+    out = PipelineInterpreter(SPEC, geoip_dim=synthetic_geoip_dim(spark)).run(flat, "route")
+    plan = out._jdf.queryExecution().analyzed().treeString()
+    n_projects = sum(1 for line in plan.splitlines() if line.lstrip(" :+-").startswith("Project ["))
+    assert n_projects <= 25, n_projects
 
 
 def test_condition_parser_rejects_unknown():

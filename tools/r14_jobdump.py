@@ -2,8 +2,9 @@
 
 Runs each named query on a warm session, then dumps EVERY Spark job the
 query launched (construct + noop write) with its description, duration,
-and stage count, via the local UI REST API — the attribution tool the
-coarse per-phase job counts in r14_profile.py cannot provide.
+and stage count, via the local UI REST API — per-job attribution that the
+per-pass job, stage and task totals of ``perfbench/run.py --trace 1`` do
+not give.
 
 Usage: python tools/r14_jobdump.py [--sf DIR] q_name [q_name ...]
 """
