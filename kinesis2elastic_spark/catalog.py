@@ -135,13 +135,16 @@ def read_parquet_footer(spark: SparkSession, *paths: str) -> DataFrame:
     snapshot and interop readers scan.  ``prefer_timestamp_ntz`` matches
     Spark 4's parquet inference default, so the resulting schema is the
     one inference would have produced."""
+    return spark.read.schema(parquet_footer_schema(paths[0])).parquet(*paths)
+
+
+def parquet_footer_schema(path: str):
+    """The Spark schema of one parquet file's footer (see
+    ``read_parquet_footer``) — driver-side metadata, no cluster job."""
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    schema = from_arrow_schema(
-        pq.read_schema(paths[0]), prefer_timestamp_ntz=True
-    )
-    return spark.read.schema(schema).parquet(*paths)
+    return from_arrow_schema(pq.read_schema(path), prefer_timestamp_ntz=True)
 
 
 def dim(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -1880,9 +1880,9 @@ def collocations_detail(
     docs: DataFrame | None = None,
 ) -> DataFrame:
     """Parameterized collocation kernel (q_collocations pins the
-    contract constants; tools/r10_tier.py sweeps ``top_v`` over a
-    vocabulary-inflated corpus via ``docs`` to carry the
-    never-all-pairs-over-vocab claim as a measured slope in V)."""
+    contract constants; ``top_v`` sweeps over a vocabulary-inflated
+    corpus via ``docs`` carry the never-all-pairs-over-vocab claim as a
+    measured slope in V — SCALING.md, round-10 addendum 4)."""
     d = docs if docs is not None else load(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",

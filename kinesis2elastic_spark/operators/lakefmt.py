@@ -404,24 +404,13 @@ def q_iceberg_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         tt.commit_delete(
             spark, src, o.filter(k7 == 3).select("o_orderkey"), 2
         )
-        data_paths = [
-            e["path"]
-            for e in tt.manifest_entries(src, 2)
-            if e["kind"] == "data"
-        ]
-        from ..catalog import read_parquet_footer
+        from ..sources.scan import POS_PATH, POS_ROW, scan
 
+        # v1 holds the same data files as v2, before any delete
         pairs = (
-            read_parquet_footer(spark, *data_paths)
-            .select(
-                "o_orderkey",
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:", ""
-                ).alias("file_path"),
-                F.col("_metadata.row_index").cast("long").alias("row_index"),
-            )
+            scan(spark, tt.snapshot_plan(src, 1), row_identity=True)
             .filter(k11 == 5)
-            .select("file_path", "row_index")
+            .selectExpr(f"{POS_PATH} AS file_path", f"{POS_ROW} AS row_index")
         )
         tt.commit_positional_delete(spark, src, pairs, 3)
         tt.commit_snapshot(

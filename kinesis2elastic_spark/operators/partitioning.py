@@ -23,7 +23,10 @@ written under plus that file's partition values, so a table re-specced
 at v2 prunes v0 files by the OLD spec and v2 files by the new one in
 the same read (Iceberg's per-spec split planning).  A file whose spec
 cannot decide a predicate is scanned — pruning is an optimization,
-never a semantics change (the B150 rule).
+never a semantics change (the B150 rule).  This module owns the
+transforms and the partitioned writer; pruning and reading are the
+scan core's (sources/scan.py), reached through the native manifest
+resolver ``timetravel.snapshot_plan``.
 
 Reference parity note: the reference (Go relay) has no partitioning
 layer; this extends the repo's lakehouse (B138/B150/B152) the way a
@@ -45,6 +48,8 @@ from .timetravel import (
     _list_data_files,
     _write_manifest,
     manifest_entries,
+    prune_files,
+    read_where,
     snapshot_versions,
 )
 
@@ -218,71 +223,16 @@ def commit_partitioned(
     return [e["path"] for e in live]
 
 
-# ops a transform can decide: bucket only equality; calendar/truncate/
-# identity are monotone in their input, so ranges map to value ranges
-_MONOTONE = {"identity", "truncate", "year", "month", "day", "hour"}
-
-
-def _entry_may_match(entry: dict, col: str, op: str, val) -> bool:
-    """Can this file contain a row with ``col <op> val``, judged ONLY by
-    its recorded partition values?  Unknown → True (scan)."""
-    pj = entry.get("partition_json")
-    if not pj:
-        return True
-    info = json.loads(pj)
-    ok = True
-    for (scol, t) in info["spec"]:
-        if scol != col:
-            continue
-        fval = info["values"].get(f"{scol}:{t}")
-        if fval is None:
-            continue
-        kind, _ = _parse_transform(t)
-        if op == "=":
-            pv = _transform_value(val, t)
-            if pv is not None and fval != pv:
-                return False
-        elif kind in _MONOTONE and op in ("<", "<=", ">", ">=", "between"):
-            lo, hi = (val if op == "between" else (None, None))
-            if op in ("<", "<="):
-                hi = val
-            if op in (">", ">="):
-                lo = val
-            plo = _transform_value(lo, t) if lo is not None else None
-            phi = _transform_value(hi, t) if hi is not None else None
-            # transforms are monotone non-decreasing, and partition
-            # values of one transform compare consistently (numeric
-            # strings for identity-int/truncate-int, zero-padded dates
-            # for calendar) — normalize numerics for safety
-            def norm(x):
-                try:
-                    return (0, int(x))
-                except (TypeError, ValueError):
-                    return (1, x)
-
-            if plo is not None and norm(fval) < norm(plo):
-                return False
-            if phi is not None and norm(fval) > norm(phi):
-                return False
-    return ok
-
-
 def prune_partitions(
     table_dir: str, filters: list[tuple], version: int | None = None
 ) -> tuple[list[str], int]:
     """Manifest-rate hidden-partition pruning: keep files whose recorded
     partition values MAY satisfy every filter on SOURCE columns.  Files
-    written under an older spec prune by that spec; files with no
-    partition info are kept (scan)."""
-    entries = [
-        e for e in manifest_entries(table_dir, version) if e["kind"] == "data"
-    ]
-    kept = [
-        e["path"]
-        for e in entries
-        if all(_entry_may_match(e, c, op, v) for (c, op, v) in filters)
-    ]
-    return kept, len(entries)
+    written under an older spec prune by that spec; a spec that cannot
+    decide a filter (range op on a bucket, unknown transform) keeps the
+    file.  The manifest resolver and pruner are the scan core's
+    (``timetravel.prune_files``), so recorded stats prune too."""
+    return prune_files(table_dir, filters, version)
 
 
 def read_partitioned(
@@ -292,25 +242,10 @@ def read_partitioned(
     version: int | None = None,
 ) -> DataFrame:
     """Read with hidden-partition pruning + the residual filter applied
-    (pruning is an optimization, never a semantics change).  The
-    derived ``__pt_*`` columns come back from the partitioned layout;
-    they are stripped so the reader sees the logical schema."""
-    from .timetravel import _filters_to_column
-
-    kept, total = prune_partitions(table_dir, filters, version)
-    if total == 0:
-        raise ValueError(f"no committed snapshot <= {version} in {table_dir}")
-    if not kept:
-        one = [
-            e["path"]
-            for e in manifest_entries(table_dir, version)
-            if e["kind"] == "data"
-        ][0]
-        df = spark.read.parquet(one).limit(0)
-    else:
-        df = spark.read.parquet(*kept)
-    df = df.drop(*[c for c in df.columns if c.startswith(_PT)])
-    return df.filter(_filters_to_column(filters))
+    (pruning is an optimization, never a semantics change) — the scan
+    core's ``timetravel.read_where``; the read schema is the data files'
+    footer, so the derived partition columns never appear."""
+    return read_where(spark, table_dir, filters, version)
 
 
 def q_hidden_partition(spark: SparkSession, sf_dir: str) -> DataFrame:

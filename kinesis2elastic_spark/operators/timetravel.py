@@ -18,13 +18,13 @@ Commit protocol (the Iceberg/Delta snapshot discipline, format-free):
    (they appear in no manifest), and concurrent readers of different
    versions never block each other: snapshot isolation by construction.
 
-Scale shape: the manifest is metadata-rate (one row per file — ~10⁶
-rows per 100 TB at 128 MB files; written driver-side via pyarrow, read
-as a normal DataFrame when it outgrows the driver).  The AS-OF read
-passes the explicit file list to the parquet scan, so partition pruning,
-predicate pushdown, and column pruning all still apply within the
-snapshot — time travel costs nothing at plan time beyond the manifest
-read.
+Reading: ``snapshot_plan`` resolves a manifest into the scan core's
+``ScanPlan`` (sources/scan.py — where file pruning, merge-on-read and
+scanning live); ``read_asof`` / ``read_where`` hand it to the core's
+executor.  The manifest is metadata-rate (one row per file — ~10⁶ rows
+per 100 TB at 128 MB files; written driver-side via pyarrow), and the
+scan gets the explicit file list, so partition pruning, predicate
+pushdown and column pruning all still apply within the snapshot.
 
 No reference parity (the ~900-LoC Go forwarder has no storage layer);
 extends the Part-B table-maintenance family (B126/B135) per the driver
@@ -36,6 +36,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from dataclasses import replace
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -44,6 +45,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..sources.scan import (
+    POS_PATH,
+    POS_ROW,
+    DataFile,
+    EqualityDelete,
+    PositionDelete,
+    ScanPlan,
+    _bloom_probes,
+    _BLOOM_K,
+    may_match,
+    position_frame,
+    prune,
+    scan,
+)
 
 
 def _manifest_dir(table_dir: str) -> str:
@@ -191,22 +206,7 @@ class CommitConflict(Exception):
 # to sidecar filter files, same math (documented caveat, not built).
 _BLOOM_MIN_M = 8192        # 1 KiB floor
 _BLOOM_MAX_M = 1 << 20     # 128 KiB ceiling per (file, column)
-_BLOOM_BITS_PER_KEY = 16
-_BLOOM_K = 6               # probes (double hashing off one md5)
-
-
-def _bloom_probes(value, m: int) -> list[int] | None:
-    """Bit indices for a value in an m-bit filter, or None if the type
-    has no canonical cross-engine string form (floats excluded: repr
-    instability)."""
-    import hashlib
-
-    if isinstance(value, bool) or not isinstance(value, (int, str)):
-        return None
-    d = hashlib.md5(str(value).encode("utf-8")).digest()
-    h1 = int.from_bytes(d[:8], "big")
-    h2 = int.from_bytes(d[8:], "big") | 1
-    return [(h1 + i * h2) % m for i in range(_BLOOM_K)]
+_BLOOM_BITS_PER_KEY = 16  # probes and the reader's check: sources/scan.py
 
 
 def _file_bloom_filters(path: str, cols: list[str]) -> dict:
@@ -243,27 +243,6 @@ def _file_bloom_filters(path: str, cols: list[str]) -> dict:
                 "b64": base64.b64encode(bytes(bits)).decode("ascii"),
             }
     return out
-
-
-def _bloom_may_contain(bloom: dict | None, col: str, value) -> bool:
-    """Three-valued 'is value possibly in this file?' collapsed to bool:
-    no filter / unsupported value type / foreign parameters → True
-    (scan it); only a definite all-k-bits-unset answers False."""
-    import base64
-
-    ent = (bloom or {}).get(col)
-    if not ent or ent.get("k") != _BLOOM_K or not ent.get("m") or not ent.get("b64"):
-        return True
-    probes = _bloom_probes(value, int(ent["m"]))
-    if probes is None:
-        return True
-    try:
-        bits = base64.b64decode(ent["b64"])
-    except Exception:
-        return True  # truncated/corrupt bitmap: degrade to "scan it"
-    if len(bits) * 8 != int(ent["m"]):
-        return True  # corrupt/foreign bitmap: cannot trust a negative
-    return all(bits[p >> 3] & (1 << (p & 7)) for p in probes)
 
 
 def _write_manifest(
@@ -581,16 +560,13 @@ def merge_rows_positional(
     accumulates.  Returns {"n_deleted_pos", "n_inserted", "version"}."""
     base = int(version) - 1 if parent is None else int(parent)
     prev = manifest_entries(table_dir, base)
-    tgt = _read_asof_impl(spark, table_dir, base, None, with_pos=True)
+    tgt = scan(spark, snapshot_plan(table_dir, base), row_identity=True)
     src_keys = source_df.select(*key_cols).dropDuplicates()
     # no broadcast hint: a dashboard-sized source broadcasts via AQE on
     # its own; a bulk-merge source must be allowed to shuffle-join
     pos_pairs = (
         tgt.join(src_keys, key_cols)
-        .select(
-            F.col(_POS_PATH).alias("file_path"),
-            F.col(_POS_ROW).alias("row_index"),
-        )
+        .selectExpr(f"{POS_PATH} AS file_path", f"{POS_ROW} AS row_index")
         .dropDuplicates()
     )
     pd_dir = os.path.join(table_dir, "data", f"c{int(version)}p")
@@ -1131,17 +1107,11 @@ def read_changes(
     incremental consumer pays for the delta, never a table scan — the
     read-side twin of the B126 delta-merge discipline."""
     files = snapshot_diff_files(table_dir, v_from, v_to)
-    if not files:
-        if schema is None:
-            raise ValueError(
-                f"no files added between v{v_from} and v{v_to} in {table_dir}"
-            )
-        return spark.createDataFrame([], schema)
-    if schema is not None:
-        return spark.read.schema(schema).parquet(*files)
-    from ..catalog import read_parquet_footer
-
-    return read_parquet_footer(spark, *files)
+    if not files and schema is None:
+        raise ValueError(
+            f"no files added between v{v_from} and v{v_to} in {table_dir}"
+        )
+    return scan(spark, ScanPlan([DataFile(p) for p in files], schema))
 
 
 def read_change_feed(
@@ -1164,18 +1134,15 @@ def read_change_feed(
       the delete keys (the B152 seq rule makes visible-at-v−1 exactly
       the seq<v population the delete applies to) as 'delete' @ v;
     - a positional delete at v → the visible-at-v−1 rows whose
-      (file, row_index) identity matches the pairs, via the same
-      ``_metadata`` position scan the merge writer used;
+      (file, row_index) identity matches the pairs;
     - a MERGE (B169: pairs + appends in one version) yields its deletes
       AND inserts at the same version — an UPDATE is the delete/insert
       pair, as in Delta CDF's update_preimage/postimage split.
 
     Cost: delta-rate — appended files are read directly; each delete
-    commit replays one filtered read of the prior snapshot restricted
-    by keys/pairs (at 100 TB with B150 stats that read prunes to the
-    touched files).  Replace/optimize commits REWRITE rows without
-    changing content, so a feed across one is undefined and fails loud
-    (the documented snapshot_diff_files contract, enforced here)."""
+    commit replays one read of the prior snapshot restricted by
+    keys/pairs.  A feed across a replace/optimize commit (rows
+    rewritten, content unchanged) is undefined and fails loud."""
     vs = [
         v
         for v in snapshot_versions(table_dir)
@@ -1202,10 +1169,8 @@ def read_change_feed(
         frames: list[DataFrame] = []
         added = [e["path"] for e in new if e["kind"] == "data"]
         if added:
-            from ..catalog import read_parquet_footer
-
             frames.append(
-                read_parquet_footer(spark, *added).selectExpr(
+                scan(spark, ScanPlan([DataFile(p) for p in added])).selectExpr(
                     "*", "'insert' AS _change_type"
                 )
             )
@@ -1225,20 +1190,13 @@ def read_change_feed(
             )
         pos = [e["path"] for e in new if e["kind"] == "posdelete"]
         if pos and prev_has_data:
-            from ..catalog import read_parquet_footer
-
-            pairs = (
-                read_parquet_footer(spark, *pos)
-                .dropDuplicates()
-                .selectExpr(
-                    f"file_path AS {_POS_PATH}",
-                    f"CAST(row_index AS BIGINT) AS {_POS_ROW}",
-                )
+            pairs = position_frame(
+                spark, [PositionDelete(v, p, "row_index") for p in pos]
             )
             frames.append(
-                _read_asof_impl(spark, table_dir, v - 1, None, with_pos=True)
-                .join(pairs, [_POS_PATH, _POS_ROW], "left_semi")
-                .drop(_POS_PATH, _POS_ROW)
+                scan(spark, snapshot_plan(table_dir, v - 1), row_identity=True)
+                .join(pairs, [POS_PATH, POS_ROW], "left_semi")
+                .drop(POS_PATH, POS_ROW)
                 .selectExpr("*", "'delete' AS _change_type")
             )
         for f in frames:
@@ -1368,14 +1326,10 @@ def read_asof(
     error; silently returning empty/newer data would corrupt an
     incremental consumer.
 
-    Merge-on-read (B152): when the snapshot carries equality-delete
-    files, data files are grouped by sequence number and each group is
-    anti-joined against the union of delete keys with a STRICTLY LATER
-    seq (the Iceberg scoping rule: a delete never touches data that
-    entered after it, so re-inserted keys survive).  The group count is
-    the commit count, not the file count — the plan stays a union of a
-    few scans + one broadcast-ish anti-join per group over narrow key
-    columns.
+    Merge-on-read (B152/B169) is the scan core's (sources/scan.py):
+    equality deletes apply to data with a STRICTLY LOWER seq, so
+    re-inserted keys survive; the plan stays a union of one scan per
+    commit plus narrow anti-joins.
 
     Interop (B190/B191): a ``table_dir`` holding a Delta ``_delta_log``
     or Iceberg ``metadata/*.metadata.json`` routes through the matching
@@ -1388,36 +1342,19 @@ def read_asof(
         return read_delta(spark, table_dir, version)
     if is_iceberg_table(table_dir):
         return read_iceberg(spark, table_dir, snapshot_id=version)
-    return _read_asof_impl(spark, table_dir, version, schema, with_pos=False)
+    return read_where(spark, table_dir, [], version, schema)
 
 
-# internal names for the row-position columns a positional-delete read
-# (or a merge writer) threads through the plan; stripped before return
-_POS_PATH, _POS_ROW = "__pos_file_path", "__pos_row_index"
-
-
-def _with_pos_cols(part: DataFrame) -> DataFrame:
-    """Attach each row's (file_path, row_index) identity from Spark's
-    ``_metadata`` hidden column (the B109 provenance surface) — the
-    Iceberg-v2 positional-delete key.  ``file_path`` is normalized to
-    the plain absolute path the manifest records (the scan reports a
-    ``file:`` URI)."""
-    # r14: selectExpr — per-Column py4j round-trips dominate interop
-    # construct walls (tools/r14_dvread_sections.py); same expressions
-    return part.selectExpr(
-        "*",
-        f"regexp_replace(_metadata.file_path, '^file:', '') AS {_POS_PATH}",
-        f"CAST(_metadata.row_index AS BIGINT) AS {_POS_ROW}",
-    )
-
-
-def _read_asof_impl(
-    spark: SparkSession,
-    table_dir: str,
-    version: int | None,
-    schema,
-    with_pos: bool,
-) -> DataFrame:
+def snapshot_plan(
+    table_dir: str, version: int | None = None, schema=None
+) -> ScanPlan:
+    """Resolve the latest snapshot <= ``version`` into a ``ScanPlan``:
+    data files with seq, row count, stats (B150), Bloom bitmaps (B172)
+    and hidden-partition values (B173), plus equality (B152) and
+    positional (B169) deletes.  A positional delete may only name files
+    live at its parent, so its seq (its version) is above theirs and
+    the core's seq rule is the path-identity rule.  Raises below the
+    retention floor (the vacuumed snapshot is gone)."""
     vs = snapshot_versions(table_dir)
     if vs and version is not None and int(version) < vs[0]:
         raise ValueError(
@@ -1425,158 +1362,60 @@ def _read_asof_impl(
             f"{table_dir} (older snapshots were vacuumed)"
         )
     entries = manifest_entries(table_dir, version)
-    files = [e["path"] for e in entries if e["kind"] == "data"]
-    if not files:
-        if schema is None:
-            raise ValueError(f"no committed snapshot <= {version} in {table_dir}")
-        return spark.createDataFrame([], schema)
-
-    # r14: schema-less spark.read.parquet pays a schema-inference JOB per
-    # call (guide §1 measurement); these are engine-written files, so the
-    # footer schema (driver-side, no job) is identical to what inference
-    # would produce.
-    def _read(*paths):
-        if schema is not None:
-            return spark.read.schema(schema).parquet(*paths)
-        from ..catalog import read_parquet_footer
-
-        return read_parquet_footer(spark, *paths)
-
-    deletes = sorted(
-        (e for e in entries if e["kind"] == "delete"), key=lambda e: e["seq"]
-    )
-    # B169 positional deletes: (file_path, row_index) pairs — path
-    # identity IS the scope (commit dirs are never reused, so a pair can
-    # only ever hit the one data file it names; no seq rule needed)
-    posdeletes = [e["path"] for e in entries if e["kind"] == "posdelete"]
-    need_pos = with_pos or bool(posdeletes)
-    if not deletes and not need_pos:
-        return _read(*files)
-    by_seq: dict[int, list[str]] = {}
+    files = []
     for e in entries:
-        if e["kind"] == "data":
-            by_seq.setdefault(e["seq"], []).append(e["path"])
-    out = None
-    for s, paths in sorted(by_seq.items()):
-        part = _read(*paths)
-        if need_pos:
-            part = _with_pos_cols(part)
-        applicable = [d["path"] for d in deletes if d["seq"] > s]
-        if applicable:
-            from ..catalog import read_parquet_footer
+        if e["kind"] != "data":
+            continue
+        f = DataFile(e["path"], int(e["seq"]), rows=e.get("n_rows"))
+        try:
+            stats = json.loads(e.get("stats_json") or "{}")
+            f.bounds = {c: (st["min"], st["max"]) for c, st in stats.items()}
+        except (ValueError, TypeError, KeyError, AttributeError):
+            pass  # malformed stats: no bounds, no pruning
+        try:
+            f.bloom = json.loads(e.get("bloom_json") or "null")
+        except ValueError:
+            pass
+        if e.get("partition_json"):
+            from .partitioning import _transform_value
 
-            keys = read_parquet_footer(spark, *applicable).dropDuplicates()
-            part = part.join(keys, on=keys.columns, how="left_anti")
-        out = part if out is None else out.unionByName(part)
-    if posdeletes:
-        from ..catalog import read_parquet_footer
-
-        pd_keys = (
-            read_parquet_footer(spark, *posdeletes)
-            .dropDuplicates()
-            .selectExpr(
-                f"file_path AS {_POS_PATH}",
-                f"CAST(row_index AS BIGINT) AS {_POS_ROW}",
+            info = json.loads(e["partition_json"])
+            f.transforms = tuple(
+                (c, t, info["values"].get(f"{c}:{t}")) for c, t in info["spec"]
             )
-        )
-        out = out.join(pd_keys, [_POS_PATH, _POS_ROW], "left_anti")
-    if not with_pos and need_pos:
-        out = out.drop(_POS_PATH, _POS_ROW)
-    return out
-
-
-_PRUNE_OPS = {"=", "<", "<=", ">", ">=", "between"}
-
-
-def _stats_may_satisfy(stats: dict | None, col: str, op: str, val) -> bool:
-    """Can a file whose ``col`` spans [min, max] contain a row satisfying
-    ``col <op> val``?  Conservative three-valued logic collapsed to bool:
-    missing stats / missing column / cross-type comparison → True (scan
-    it); only a provably-disjoint range answers False.  NULLs never
-    satisfy a comparison predicate, so null_count plays no role here."""
-    if op not in _PRUNE_OPS:
-        raise ValueError(f"unsupported prune op {op!r} (use {sorted(_PRUNE_OPS)})")
-    if not stats or col not in stats:
-        return True
-    mn, mx = stats[col]["min"], stats[col]["max"]
-    try:
-        if op == "=":
-            return mn <= val <= mx
-        if op == "<":
-            return mn < val
-        if op == "<=":
-            return mn <= val
-        if op == ">":
-            return mx > val
-        if op == ">=":
-            return mx >= val
-        lo, hi = val  # between
-        return mx >= lo and mn <= hi
-    except TypeError:
-        return True  # cross-type comparison: cannot prove disjoint, scan
+            f.to_partition = _transform_value
+        files.append(f)
+    return ScanPlan(
+        files,
+        schema,
+        position_deletes=[
+            PositionDelete(int(e["seq"]), e["path"], "row_index")
+            for e in entries
+            if e["kind"] == "posdelete"
+        ],
+        equality_deletes=[
+            EqualityDelete(
+                int(e["seq"]), e["path"], tuple(pq.read_schema(e["path"]).names)
+            )
+            for e in entries
+            if e["kind"] == "delete"
+        ],
+    )
 
 
 def prune_files(
     table_dir: str, filters: list[tuple], version: int | None = None
 ) -> tuple[list[str], int]:
-    """B150 file skipping: the snapshot's files whose manifest-recorded
-    column stats MAY satisfy every filter (AND semantics), plus the
-    total live count.  Pure manifest work — no data file is opened, so
-    at 100 TB this is a ~10⁶-row metadata scan that typically discards
-    the vast majority of a well-clustered table's files before Spark
-    ever plans the scan.  Filters are ``(col, op, value)`` with op in
-    =/</<=/>/>=/between (value = (lo, hi) for between)."""
-    v = _resolve_version(table_dir, version)
-    if v is None:
+    """B150 file skipping: the snapshot's files whose manifest stats,
+    Bloom bitmaps and hidden-partition values MAY satisfy every filter
+    (AND), plus the live-file total.  Pure manifest work, no data file
+    opened.  Filters are ``(col, op, value)`` with op in
+    =/</<=/>/>=/between (value = (lo, hi)); a zero-row file is pruned
+    unconditionally."""
+    if _resolve_version(table_dir, version) is None:
         return [], 0
-    entries = manifest_entries(table_dir, v)
-    data = [e for e in entries if e["kind"] == "data"]
-    kept = [
-        e["path"]
-        for e in data
-        # a zero-row file (empty write partition) has no row groups and
-        # thus no stats; it is prunable unconditionally, not "unknown"
-        if e["n_rows"] > 0
-        and all(
-            _stats_may_satisfy(
-                json.loads(e["stats_json"]) if e.get("stats_json") else None,
-                c,
-                op,
-                val,
-            )
-            # B172: a point lookup additionally probes the per-file
-            # Bloom filter — the pruner for keys min/max can't separate
-            and (
-                op != "="
-                or _bloom_may_contain(
-                    json.loads(e["bloom_json"]) if e.get("bloom_json") else None,
-                    c,
-                    val,
-                )
-            )
-            for (c, op, val) in filters
-        )
-    ]
-    return kept, len(data)
-
-
-def _filters_to_column(filters: list[tuple]):
-    cond = F.lit(True)
-    for c, op, val in filters:
-        col = F.col(c)
-        if op == "=":
-            cond = cond & (col == val)
-        elif op == "<":
-            cond = cond & (col < val)
-        elif op == "<=":
-            cond = cond & (col <= val)
-        elif op == ">":
-            cond = cond & (col > val)
-        elif op == ">=":
-            cond = cond & (col >= val)
-        else:
-            cond = cond & col.between(val[0], val[1])
-    return cond
+    plan = snapshot_plan(table_dir, version)
+    return [f.path for f in prune(plan, filters)], len(plan.files)
 
 
 def read_where(
@@ -1586,59 +1425,17 @@ def read_where(
     version: int | None = None,
     schema=None,
 ) -> DataFrame:
-    """Read a snapshot with manifest-stats file skipping (B150): prune
-    the file list by per-file [min,max], then scan ONLY the survivors
-    with the residual filter still applied — pruning is an optimization,
-    never a semantics change (a file kept by stats but empty under the
-    exact predicate contributes nothing; a file with no stats is always
-    scanned).  Parquet row-group pruning and predicate pushdown then
-    apply WITHIN the surviving files — this layer removes whole files
-    before the planner, which footer-level pushdown cannot (Spark still
-    lists/schedules every file the scan was handed)."""
-    vs = snapshot_versions(table_dir)
-    if vs and version is not None and int(version) < vs[0]:
-        raise ValueError(
-            f"version {version} is below the retention floor v{vs[0]} of "
-            f"{table_dir} (older snapshots were vacuumed)"
-        )
-    if any(
-        e["kind"] in ("delete", "posdelete")
-        for e in manifest_entries(table_dir, version)
-    ):
-        # B152 interplay: correctness over pruning — applying equality
-        # deletes requires the seq-grouped merge-on-read plan, so a
-        # table with live delete files reads through read_asof and only
-        # gets the residual filter (run optimize_snapshot to fold the
-        # deletes in and restore file skipping)
-        return read_asof(spark, table_dir, version, schema=schema).filter(
-            _filters_to_column(filters)
-        )
-    kept, total = prune_files(table_dir, filters, version)
-    if total == 0:
-        if schema is None:
-            raise ValueError(f"no committed snapshot <= {version} in {table_dir}")
-        return spark.createDataFrame([], schema)
-    if not kept:
-        # every file provably disjoint from the predicate: empty result,
-        # schema from ONE live file's footer (no data pages read)
-        from ..catalog import read_parquet_footer
-
-        one = manifest_files(table_dir, version)[0]
-        reader = (
-            spark.read.schema(schema).parquet(one)
-            if schema is not None
-            else read_parquet_footer(spark, one)
-        )
-        return reader.filter(_filters_to_column(filters)).limit(0)
-    if schema is not None:
-        return spark.read.schema(schema).parquet(*kept).filter(
-            _filters_to_column(filters)
-        )
-    from ..catalog import read_parquet_footer
-
-    return read_parquet_footer(spark, *kept).filter(
-        _filters_to_column(filters)
-    )
+    """Read a snapshot with manifest file skipping (B150): scan ONLY
+    the files whose stats/Bloom/partition values may match, with
+    merge-on-read (deletes scope by seq, so skipping a data file never
+    changes which deletes apply to the others) and the residual filter
+    applied.  Row-group pruning and pushdown then apply WITHIN the
+    surviving files; this layer removes whole files before the planner
+    lists and schedules them."""
+    plan = snapshot_plan(table_dir, version, schema)
+    if not plan.files and plan.schema is None:
+        raise ValueError(f"no committed snapshot <= {version} in {table_dir}")
+    return scan(spark, plan, filters)
 
 
 def _refs_dir(table_dir: str) -> str:
@@ -1864,17 +1661,9 @@ def q_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         filters = [("o_orderkey", "=", int(point_key))]
         kept, total = prune_files(work, filters)
         # stats-only premise: strip bloom decisions by probing stats alone
-        entries = [e for e in manifest_entries(work) if e["kind"] == "data"]
+        entries = snapshot_plan(work).files
         stats_kept = [
-            e["path"]
-            for e in entries
-            if e["n_rows"] > 0
-            and _stats_may_satisfy(
-                json.loads(e["stats_json"]) if e.get("stats_json") else None,
-                "o_orderkey",
-                "=",
-                int(point_key),
-            )
+            f.path for f in entries if may_match(replace(f, bloom=None), *filters[0])
         ]
         df = read_where(spark, work, filters)
         agg = (
@@ -2724,9 +2513,7 @@ def audit_erasure(
         files.update(manifest_files(table_dir, v))
     if not files:
         return 0
-    from ..catalog import read_parquet_footer
-
-    data = read_parquet_footer(spark, *sorted(files))
+    data = scan(spark, ScanPlan([DataFile(p) for p in sorted(files)]))
     keys = keys_df.dropDuplicates()
     return data.join(keys, on=keys.columns, how="left_semi").count()
 

@@ -1,7 +1,7 @@
 """Loop-state pinning that ACTUALLY truncates the plan — the iterative-
 DataFrame discipline ``localCheckpoint`` alone does not deliver.
 
-The r10 finding (measured, tools/r10_tier.py + SCALING.md addendum):
+The r10 finding (measured; SCALING.md round-10 addendum):
 ``DataFrame.localCheckpoint(eager=True)`` truncates the RDD lineage, but
 the resulting ``LogicalRDD`` leaf keeps a LAZY reference to the original
 plan for statistics estimation (``originStats``).  In an iterative loop

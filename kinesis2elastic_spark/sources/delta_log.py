@@ -12,13 +12,12 @@ actions plus parquet checkpoints) WITHOUT the delta-spark runtime:
   ``metaData``/``protocol`` wins) — exactly the spec's state
   reconstruction;
 - version time travel: replay simply stops at the requested version;
-- partition handling: Delta data files do NOT contain the partition
-  columns; the add action's ``partitionValues`` (string map) is the
-  source of truth.  Files are grouped by partition tuple and each
-  group gets its values injected as typed literals (cast through the
-  table schema) — at scale the group count is the touched-partition
-  count, and each group stays ONE parquet scan, so the plan is a union
-  of pruned scans, never a per-file loop;
+- reading: ``delta_plan`` resolves a snapshot into the scan core's
+  ``ScanPlan`` (sources/scan.py — where pruning and scanning live):
+  Delta data files do NOT contain the partition columns, so each
+  file's ``partitionValues`` become typed literals injected per
+  partition group, and, with its ``stats``, typed bounds for file
+  skipping;
 - schema: ``metaData.schemaString`` is the JSON-serialized Spark
   StructType the spec mandates — parsed with ``StructType.fromJson``;
 - safety: reader features beyond protocol v1 (column mapping, deletion
@@ -30,11 +29,9 @@ the oracle query — generator-built, no vendored data — and follows the
 same spec: actions as ndjson, checkpoint as a parquet of nullable
 action structs plus ``_last_checkpoint``.
 
-Spark-first scale notes: the log itself is metadata (KBs per commit;
-checkpoints amortize long logs exactly like the spec intends), and the
-data path stays a plain pushdown-friendly parquet scan — predicate/
-projection pushdown and partition pruning all still apply because the
-reader hands Spark explicit file lists per partition group.
+Scale: the log itself is metadata (KBs per commit; checkpoints
+amortize long logs exactly like the spec intends), and the data path
+stays a plain pushdown-friendly parquet scan over explicit file lists.
 """
 
 from __future__ import annotations
@@ -44,6 +41,8 @@ import json
 import os
 import re
 import uuid
+from dataclasses import replace
+from decimal import Decimal
 from urllib.parse import quote, unquote
 
 import pyarrow as pa
@@ -52,22 +51,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from .scan import (
+    POS_PATH,
+    POS_ROW,
+    DataFile,
+    PositionDelete,
+    ScanPlan,
+    position_frame,
+    prune,
+    scan,
+)
+
 _LOG = "_delta_log"
 _CKPT_RE = re.compile(r"^(\d{20})\.checkpoint\.parquet$")
 _JSON_RE = re.compile(r"^(\d{20})\.json$")
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
-
-
-def _qid(name: str) -> str:
-    """Backtick-quote an identifier for selectExpr (column-mapping
-    physical names contain '-')."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _sql_str(s: str) -> str:
-    """Single-quoted SQL string literal (backslash escaping is on by
-    default in Spark's SQL parser)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _log_dir(table_dir: str) -> str:
@@ -279,110 +277,79 @@ def delta_snapshot(table_dir: str, version: int | None = None) -> dict:
     }
 
 
-_DT_FORMATS = (
-    "%Y-%m-%d %H:%M:%S.%f",
-    "%Y-%m-%d %H:%M:%S",
-    "%Y-%m-%dT%H:%M:%S.%f",
-    "%Y-%m-%dT%H:%M:%S",
-    "%Y-%m-%d",
-)
+_PARSERS = {
+    "long": int,
+    "integer": int,
+    "short": int,
+    "byte": int,
+    "double": float,
+    "float": float,
+    "decimal": Decimal,
+    "string": str,
+    "boolean": lambda s: {"true": True, "false": False}[s.lower()],
+    "date": _dt.date.fromisoformat,
+    # the spec's ``yyyy-MM-dd HH:mm:ss[.S]``; a zoned stats string parses
+    # tz-aware, so a naive probe against it stays undecidable
+    "timestamp": _dt.datetime.fromisoformat,
+    "timestamp_ntz": _dt.datetime.fromisoformat,
+}
 
 
-def _parse_dt(s: str):
-    """Parse a Delta partition-value / stats string into a datetime
-    (the spec serializes date as ``yyyy-MM-dd`` and timestamp as
-    ``yyyy-MM-dd HH:mm:ss[.S]``), or None if it is not one."""
-    for fmt in _DT_FORMATS:
-        try:
-            return _dt.datetime.strptime(s, fmt)
-        except (TypeError, ValueError):
-            pass
-    return None
-
-
-def _cmp_probe(file_val, probe):
-    """Three-way compare a file's recorded partition value / stat
-    (a string, per the Delta serialization) against a pruning probe of
-    whatever Python type the caller used.  Returns -1/0/+1, or None
-    when the pair is not comparable at the same grain — None means
-    UNDECIDABLE and the caller must scan, never prune.
-
-    Date/datetime probes are compared at datetime grain by parsing the
-    file-side string (a raw ``str()`` comparison would rank
-    ``'1998-01-01 00:00:00'`` above ``'1998-01-01'`` and mis-prune the
-    exactly-matching file)."""
-    if isinstance(probe, (_dt.date, _dt.datetime)):
-        p = (
-            probe
-            if isinstance(probe, _dt.datetime)
-            else _dt.datetime(probe.year, probe.month, probe.day)
-        )
-        if isinstance(probe, _dt.datetime) and probe.tzinfo is not None:
-            return None  # tz-aware vs naive file strings: undecidable
-        f = _parse_dt(str(file_val))
-        if f is None:
-            return None
-        return (f > p) - (f < p)
-    if isinstance(probe, bool) or isinstance(file_val, bool):
-        f, p = str(file_val).lower(), str(probe).lower()
-        return (f > p) - (f < p)
+def _typed(parse, raw):
+    """A partitionValues / stats value in its column's typed domain, or
+    None when absent or malformed (no bound)."""
+    if parse is None or raw is None:
+        return None
     try:
-        f, p = float(file_val), float(probe)
-        return (f > p) - (f < p)
-    except (TypeError, ValueError):
-        pass
-    if isinstance(probe, str):
-        f = str(file_val)
-        return (f > probe) - (f < probe)
-    return None  # probe of a type this grain table doesn't know: scan
+        return parse(str(raw))
+    except (ValueError, KeyError, ArithmeticError):
+        return None
 
 
-def _delta_file_may_match(
-    f: dict, pcols: list[str], col: str, op: str, val, pmap: dict | None = None
-) -> bool:
-    """Can this add-entry's file contain a row with ``col <op> val``,
-    judged by its partitionValues (identity semantics) and its
-    ``stats`` minValues/maxValues when the writer recorded them?
-    Unknown/undecidable → True (scan; pruning is an optimization,
-    never a semantics change)."""
-    lo = hi = None
-    if op == "=":
-        lo = hi = val
-    elif op in ("<", "<="):
-        hi = val
-    elif op in (">", ">="):
-        lo = val
-    elif op == "between":
-        lo, hi = val
-    else:
-        return True
-    phys = (pmap or {}).get(col, col)
-    if col in pcols:
-        pv = (f.get("partitionValues") or {}).get(phys)
-        if pv is not None and pv != _HIVE_NULL:
-            c = _cmp_probe(pv, lo) if lo is not None else None
-            if c is not None and c < 0:
-                return False
-            c = _cmp_probe(pv, hi) if hi is not None else None
-            if c is not None and c > 0:
-                return False
-    stats = f.get("stats")
-    if stats:
+def delta_plan(
+    table_dir: str, snap: dict, files: list[dict] | None = None
+) -> ScanPlan:
+    """Resolve a snapshot (or its ``files`` subset) into a ``ScanPlan``:
+    ``partitionValues`` become injected literals and, parsed by the
+    ``schemaString`` type, [v, v] bounds; ``stats`` min/maxValues
+    (keyed by PHYSICAL name) become typed bounds; a deletion vector
+    (B198) becomes a driver-decoded position delete.  Files and DVs all
+    sit at seq 0: a DV deletes from its own file."""
+    from . import dvectors as _dv
+
+    schema: StructType = snap["schema"]
+    pcols: list[str] = snap["partition_columns"]
+    pmap: dict = snap.get("physical_names") or {}
+    parse = {f.name: _PARSERS.get(f.dataType.typeName()) for f in schema.fields}
+    out: list[DataFile] = []
+    deletes: list[PositionDelete] = []
+    for f_ in snap["files"] if files is None else files:
+        bounds = {}
         try:
-            st = json.loads(stats) if isinstance(stats, str) else stats
-        except ValueError:
-            return True
-        mn = (st.get("minValues") or {}).get(phys)
-        mx = (st.get("maxValues") or {}).get(phys)
-        if mn is not None and hi is not None:
-            c = _cmp_probe(mn, hi)
-            if c is not None and c > 0:
-                return False
-        if mx is not None and lo is not None:
-            c = _cmp_probe(mx, lo)
-            if c is not None and c < 0:
-                return False
-    return True
+            st = f_.get("stats")
+            st = json.loads(st) if isinstance(st, str) else st
+            lo, hi = st.get("minValues") or {}, st.get("maxValues") or {}
+            for c, fn in parse.items():
+                p = pmap.get(c, c)
+                bounds[c] = (_typed(fn, lo.get(p)), _typed(fn, hi.get(p)))
+        except (ValueError, TypeError, AttributeError):
+            bounds = {}  # missing or malformed stats: no bounds
+        pv = f_.get("partitionValues") or {}
+        raw = tuple(pv.get(pmap.get(c, c)) for c in pcols)
+        raw = tuple(None if r == _HIVE_NULL else r for r in raw)
+        for c, r in zip(pcols, raw):
+            bounds[c] = (_typed(parse[c], r),) * 2
+        out.append(DataFile(f_["path"], partition=raw, bounds=bounds))
+        if f_.get("deletionVector"):
+            rows = _dv.decode_descriptor(table_dir, f_["deletionVector"])
+            deletes.append(PositionDelete(0, rows={f_["path"]: rows}))
+    return ScanPlan(
+        out,
+        schema,
+        physical=pmap,
+        partition_columns=pcols,
+        position_deletes=deletes,
+    )
 
 
 def delta_prune(
@@ -391,18 +358,8 @@ def delta_prune(
     """Manifest-rate file skipping for Delta tables (B197): keep files
     whose partitionValues / recorded stats MAY satisfy every filter.
     Returns (kept paths, total live files)."""
-    snap = delta_snapshot(table_dir, version)
-    pcols = snap["partition_columns"]
-    pmap = snap.get("physical_names") or {}
-    kept = [
-        f["path"]
-        for f in snap["files"]
-        if all(
-            _delta_file_may_match(f, pcols, c, op, v, pmap)
-            for (c, op, v) in filters
-        )
-    ]
-    return kept, len(snap["files"])
+    plan = delta_plan(table_dir, delta_snapshot(table_dir, version))
+    return [f.path for f in prune(plan, filters)], len(plan.files)
 
 
 def delta_version_asof_timestamp(table_dir: str, ts: float) -> int:
@@ -443,185 +400,21 @@ def read_delta(
     filters: list[tuple] | None = None,
     timestamp: float | None = None,
 ) -> DataFrame:
-    """Read a Delta table as of ``version`` through the log replay:
-    grouped-by-partition-tuple parquet scans with the partition columns
-    injected as typed literals from ``partitionValues`` (the spec's
-    source of truth — dir layout is only a convention), unioned and
-    projected to the declared schema's column order and types.
-    ``filters`` additionally SKIPS files at metadata rate (B197:
-    partitionValues + per-file stats) with the residual filter applied
-    — exact either way.
-
-    B198 deletion vectors: a file whose add action carries a
-    ``deletionVector`` descriptor is read WITH Spark's hidden
-    ``_metadata.row_index`` and anti-joined against the decoded bitmap
-    (driver-side decode — DVs are metadata-rate compressed bitmaps by
-    construction; the join side is only (file, row_index) longs and is
-    broadcast).  Stats-based skipping stays sound because DV'd stats
-    are wide bounds over ALL physical rows (the spec's
-    tightBounds=false) and the residual filter always applies."""
+    """Read a Delta table as of ``version`` (or ``timestamp``) through
+    the log replay and the scan core: partition columns injected from
+    ``partitionValues`` (the spec's source of truth), column-mapping
+    names renamed, ``filters`` skipping files at metadata rate (B197)
+    with the residual filter applied — exact either way.  B198
+    deletion vectors are decoded driver-side and anti-joined on the
+    ``_metadata`` row identity (a broadcast of (file, row) longs);
+    stats-based skipping stays sound because DV'd stats are wide bounds
+    over ALL physical rows (the spec's tightBounds=false)."""
     if timestamp is not None:
         if version is not None:
             raise ValueError("pass version OR timestamp, not both")
         version = delta_version_asof_timestamp(table_dir, timestamp)
     snap = delta_snapshot(table_dir, version)
-    files = snap["files"]
-    pcols: list[str] = snap["partition_columns"]
-    pmap: dict = snap.get("physical_names") or {}
-    if filters:
-        files = [
-            f_
-            for f_ in files
-            if all(
-                _delta_file_may_match(f_, pcols, c, op, v, pmap)
-                for (c, op, v) in filters
-            )
-        ]
-    out = _scan_delta_files(spark, table_dir, snap, files)
-    if filters:
-        from ..operators.timetravel import _filters_to_column
-
-        out = out.filter(_filters_to_column(filters))
-    return out
-
-
-def _scan_delta_files(
-    spark: SparkSession,
-    table_dir: str,
-    snap: dict,
-    files: list[dict],
-    positions_mode: str = "drop",
-    positions: dict[str, list[int]] | None = None,
-) -> DataFrame:
-    """Scan an explicit subset of a snapshot's files with partition
-    injection, column-mapping rename, and schema projection.
-
-    ``positions_mode`` controls row-position handling against
-    ``positions`` (file path -> sorted row indexes; default = each
-    file's decoded deletion vector): ``drop`` anti-joins them away
-    (live-row semantics, the read_delta path) while ``keep``
-    semi-joins so ONLY those physical rows survive (the CDF path —
-    "the rows a DV delete touched").  The join side is broadcast
-    (file, row_index) longs — metadata-rate, decoded driver-side."""
-    schema: StructType = snap["schema"]
-    pcols: list[str] = snap["partition_columns"]
-    pmap: dict = snap.get("physical_names") or {}
-    dtypes = {f.name: f.dataType for f in schema.fields}
-    if not files:
-        return spark.createDataFrame([], schema)
-    from . import dvectors as _dv
-
-    if positions is None:
-        positions = {}
-        for f_ in files:
-            if f_.get("deletionVector"):
-                positions[f_["path"]] = _dv.decode_descriptor(
-                    table_dir, f_["deletionVector"]
-                )
-    pos_df = None
-    if positions:
-        import pandas as _pd
-
-        pos_df = spark.createDataFrame(
-            _pd.DataFrame(
-                [
-                    (p, int(i))
-                    for p, poss in positions.items()
-                    for i in poss
-                ],
-                columns=["__dvf", "__dvp"],
-            ),
-            schema="__dvf string, __dvp bigint",
-        # metadata-rate frame destined for a broadcast: without the
-        # coalesce, createDataFrame fans the pandas rows across
-        # defaultParallelism slices and every broadcast build runs a
-        # session-width job (r15: two 32-task jobs per DV read)
-        ).coalesce(1)
-    groups: dict[tuple, list[dict]] = {}
-    for f_ in files:
-        # partitionValues are keyed by PHYSICAL name under column mapping
-        key = tuple(
-            (f_["partitionValues"] or {}).get(pmap.get(c, c)) for c in pcols
-        )
-        groups.setdefault(key, []).append(f_)
-    # explicit PHYSICAL-name read schema (B210): a mixed-evolution file
-    # group must not inherit the first file's footer — declaring the
-    # schema makes the parquet reader null-fill added columns natively
-    # (and keeps pushdown), exactly delta-spark's read semantics
-    from pyspark.sql.types import StructField as _SF
-    from pyspark.sql.types import StructType as _ST
-
-    phys_schema = _ST(
-        [
-            _SF(pmap.get(f.name, f.name), f.dataType, True)
-            for f in schema.fields
-            if f.name not in pcols
-        ]
-    )
-    parts: list[DataFrame] = []
-    join_how = "left_anti" if positions_mode == "drop" else "left_semi"
-    for key, fgroup in sorted(groups.items(), key=lambda kv: str(kv[0])):
-        clean = [f["path"] for f in fgroup if f["path"] not in positions]
-        dirty = [f["path"] for f in fgroup if f["path"] in positions]
-        legs: list[DataFrame] = []
-        if clean and positions_mode == "drop":
-            legs.append(spark.read.schema(phys_schema).parquet(*clean))
-        if dirty:
-            # r14: selectExpr, not per-column F.col/cast/alias chains —
-            # each Column op costs ~14 py4j round-trips (~0.9 ms quiet,
-            # 4 ms+ loaded; measured with tools/r14_dvread_sections.py),
-            # and the construct wall of a DV read was ~90 % socket wait.
-            # Expression trees are identical.
-            legs.append(
-                spark.read.schema(phys_schema).parquet(*dirty)
-                .selectExpr(
-                    "*",
-                    "regexp_replace(_metadata.file_path, '^file:/*', '/')"
-                    " AS __dvf",
-                    "CAST(_metadata.row_index AS BIGINT) AS __dvp",
-                )
-                .join(F.broadcast(pos_df), ["__dvf", "__dvp"], join_how)
-                .drop("__dvf", "__dvp")
-            )
-        if not legs:
-            continue
-        df = legs[0]
-        for leg in legs[1:]:
-            df = df.unionByName(leg)
-        # column mapping (reader v2, 'name' mode): data files carry the
-        # PHYSICAL names; ONE select maps them back to the logical schema
-        # and injects the partition literals (r14: the old
-        # withColumnRenamed/withColumn chains each built + analyzed a new
-        # Dataset driver-side — measured ~0.3-1 s of pure plan
-        # construction per read on multi-group tables)
-        exprs = []
-        for f in schema.fields:
-            ddl = dtypes[f.name].simpleString()
-            if f.name in pcols:
-                raw = key[pcols.index(f.name)]
-                if raw is None or raw == _HIVE_NULL:
-                    exprs.append(f"CAST(NULL AS {ddl}) AS {_qid(f.name)}")
-                else:
-                    exprs.append(
-                        f"CAST({_sql_str(raw)} AS {ddl}) AS {_qid(f.name)}"
-                    )
-            else:
-                exprs.append(
-                    f"{_qid(pmap.get(f.name, f.name))} AS {_qid(f.name)}"
-                )
-        parts.append(df.selectExpr(*exprs))
-    if not parts:
-        return spark.createDataFrame([], schema)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.selectExpr(
-        *[
-            f"CAST({_qid(f.name)} AS {f.dataType.simpleString()})"
-            f" AS {_qid(f.name)}"
-            for f in schema.fields
-        ]
-    )
+    return scan(spark, delta_plan(table_dir, snap), filters or ())
 
 
 def delta_changes(
@@ -643,38 +436,28 @@ def delta_changes(
     - a path present in v-1 but not v: its live rows AS OF v-1 are
       deletes at v;
     - a path in both whose deletion vector GREW (B198): exactly the
-      newly-dead positions are deletes at v (position-keep scan —
-      metadata-rate join keys, only the touched rows read); a DV that
+      newly-dead positions are deletes at v (the touched files' rows
+      with their identity, semi-joined to the positions); a DV that
       SHRANK (RESTORE) emits the revived positions as inserts.
 
     Updates therefore appear as delete+insert pairs (exactly what
     Delta reports for tables without CDC files).  A version whose
     json commit carries ONLY ``dataChange: false`` file actions (an
-    OPTIMIZE/compaction rewrite, B206) is SKIPPED — no phantom
-    delete+insert pairs, matching delta-spark.  The flag is only
-    visible while the commit json survives; once a checkpoint+expire
-    erased it the version diffs as data change (conservative: extra
-    pairs, never lost changes — documented residual divergence).
-
-    Scale shape: per version the diff is computed on the FILE LIST
-    (metadata-rate); each leg is an explicit-file-list scan, so the
-    union reads added/removed/touched files only, never the table."""
+    OPTIMIZE/compaction rewrite, B206) is SKIPPED, matching
+    delta-spark, while the commit json survives; after a
+    checkpoint+expire it diffs as data change (extra pairs, never lost
+    changes).  The diff is on the FILE LIST, so the legs read
+    added/removed/touched files only, never the table."""
     latest = delta_snapshot(table_dir)["version"]
     to_v = latest if to_version is None else int(to_version)
     if int(from_version) > to_v:
         raise ValueError(
             f"from_version {from_version} is beyond to_version {to_v}"
         )
-    from . import dvectors as _dv
 
     def _dvmap(snap: dict) -> dict[str, set[int]]:
-        out = {}
-        for f_ in snap["files"]:
-            if f_.get("deletionVector"):
-                out[f_["path"]] = set(
-                    _dv.decode_descriptor(table_dir, f_["deletionVector"])
-                )
-        return out
+        deletes = delta_plan(table_dir, snap).position_deletes
+        return {p: set(r) for d in deletes for p, r in d.rows.items()}
 
     prev = delta_snapshot(table_dir, from_version)
     prev_by = {f_["path"]: f_ for f_ in prev["files"]}
@@ -710,63 +493,29 @@ def delta_changes(
                 continue
         added = [f_ for p, f_ in cur_by.items() if p not in prev_by]
         removed = [f_ for p, f_ in prev_by.items() if p not in cur_by]
-        if added:
-            legs.append(
-                _tag(
-                    _scan_delta_files(spark, table_dir, cur, added),
-                    "insert",
-                    v,
+        for kind, at, moved in (("insert", cur, added), ("delete", prev, removed)):
+            if moved:
+                rows = scan(spark, delta_plan(table_dir, at, moved))
+                legs.append(_tag(rows, kind, v))
+        for kind, grown, shrunk in (
+            ("delete", cur_dv, prev_dv),
+            ("insert", prev_dv, cur_dv),
+        ):
+            # DV grew: the newly-dead positions are deletes; DV shrank
+            # (RESTORE): the revived positions are inserts — the touched
+            # physical rows only, whatever the files' own DVs say
+            moved = {p: grown.get(p, set()) - shrunk.get(p, set()) for p in prev_by}
+            touched = {p: sorted(r) for p, r in moved.items() if r and p in cur_by}
+            if touched:
+                plan = delta_plan(table_dir, cur, [cur_by[p] for p in touched])
+                plan = replace(plan, position_deletes=[])
+                keep = position_frame(spark, [PositionDelete(0, rows=touched)])
+                rows = (
+                    scan(spark, plan, row_identity=True)
+                    .join(keep, [POS_PATH, POS_ROW], "left_semi")
+                    .drop(POS_PATH, POS_ROW)
                 )
-            )
-        if removed:
-            legs.append(
-                _tag(
-                    _scan_delta_files(spark, table_dir, prev, removed),
-                    "delete",
-                    v,
-                )
-            )
-        new_dead: dict[str, list[int]] = {}
-        revived: dict[str, list[int]] = {}
-        for p in cur_by:
-            if p not in prev_by:
-                continue
-            grew = cur_dv.get(p, set()) - prev_dv.get(p, set())
-            shrank = prev_dv.get(p, set()) - cur_dv.get(p, set())
-            if grew:
-                new_dead[p] = sorted(grew)
-            if shrank:
-                revived[p] = sorted(shrank)
-        if new_dead:
-            legs.append(
-                _tag(
-                    _scan_delta_files(
-                        spark,
-                        table_dir,
-                        cur,
-                        [cur_by[p] for p in new_dead],
-                        positions_mode="keep",
-                        positions=new_dead,
-                    ),
-                    "delete",
-                    v,
-                )
-            )
-        if revived:
-            legs.append(
-                _tag(
-                    _scan_delta_files(
-                        spark,
-                        table_dir,
-                        cur,
-                        [cur_by[p] for p in revived],
-                        positions_mode="keep",
-                        positions=revived,
-                    ),
-                    "insert",
-                    v,
-                )
-            )
+                legs.append(_tag(rows, kind, v))
         prev, prev_by, prev_dv = cur, cur_by, cur_dv
     if not legs:
         empty = spark.createDataFrame([], schema)
@@ -1025,54 +774,6 @@ def delta_remove_where(table_dir: str, pred) -> int:
     return version
 
 
-def _identity_scan(spark: SparkSession, table_dir: str, snap: dict) -> DataFrame:
-    """Live-file scan with row identity (__dvf, __dvp) and partition
-    columns injected — the shared front half of row-level writers
-    (DELETE, MERGE).  NOTE: existing DVs are NOT applied here; callers
-    that must exclude already-dead rows anti-join them explicitly."""
-    pcols: list[str] = snap["partition_columns"]
-    pmap: dict = snap.get("physical_names") or {}
-    dtypes = {f.name: f.dataType for f in snap["schema"].fields}
-    groups: dict[tuple, list[dict]] = {}
-    for f_ in snap["files"]:
-        key = tuple(
-            (f_["partitionValues"] or {}).get(pmap.get(c, c)) for c in pcols
-        )
-        groups.setdefault(key, []).append(f_)
-    from ..catalog import read_parquet_footer
-
-    # r14 (guide §1/§7.3): explicit footer schema (no per-group schema-
-    # inference JOB) and ONE select per group instead of the
-    # withColumnRenamed/withColumn chains — each chained call built and
-    # analyzed a fresh Dataset driver-side, dominating the delete path's
-    # wall at metadata-rate file counts.
-    phys_by_logical = {c: pmap.get(c, c) for c in dtypes}
-    scan = None
-    for key, fgroup in sorted(groups.items(), key=lambda kv: str(kv[0])):
-        df = read_parquet_footer(spark, *[f["path"] for f in fgroup])
-        present = set(df.columns)
-        exprs = []
-        for c, dt in dtypes.items():
-            ddl = dt.simpleString()
-            if c in pcols:
-                raw = key[pcols.index(c)]
-                if raw is None or raw == _HIVE_NULL:
-                    exprs.append(f"CAST(NULL AS {ddl}) AS {_qid(c)}")
-                else:
-                    exprs.append(
-                        f"CAST({_sql_str(raw)} AS {ddl}) AS {_qid(c)}"
-                    )
-            elif phys_by_logical[c] in present:
-                exprs.append(f"{_qid(phys_by_logical[c])} AS {_qid(c)}")
-        exprs.append(
-            "regexp_replace(_metadata.file_path, '^file:/*', '/') AS __dvf"
-        )
-        exprs.append("CAST(_metadata.row_index AS BIGINT) AS __dvp")
-        df = df.selectExpr(*exprs)
-        scan = df if scan is None else scan.unionByName(df)
-    return scan
-
-
 def _dv_protocol_actions(snap: dict) -> list[dict]:
     """The protocol-upgrade action for a first DV commit, else []."""
     proto = snap["protocol"] or {}
@@ -1178,17 +879,23 @@ def delta_delete_where(
     conservative and the reader's residual filter keeps reads exact).
     """
     snap = delta_snapshot(table_dir)
-    scan = _identity_scan(spark, table_dir, snap)
+    # every physical row with its identity, partition columns injected
+    # so ``pred`` may reference them; already-dead rows may match again
+    # (the new DV contains the old one anyway)
+    plan = replace(delta_plan(table_dir, snap), position_deletes=[])
     hits = (
-        scan.filter(pred).select("__dvf", "__dvp").toPandas()
+        scan(spark, plan, row_identity=True)
+        .filter(pred)
+        .select(POS_PATH, POS_ROW)
+        .toPandas()
     )  # bounded transfer (positions of THIS delete only) — Arrow
     # batches + vectorized groupby, not pickled Row objects: 3-6x less
-    # driver time on wide deletes (r14 guide §5; tools/r14_victims_ab.py)
+    # driver time on wide deletes (OPTIMIZATION_r14.md change 11)
     if hits.empty:
         raise ValueError("delete predicate matched no live rows")
     new_pos: dict[str, set[int]] = {
-        f: set(map(int, g["__dvp"].to_numpy()))
-        for f, g in hits.groupby("__dvf", sort=False)
+        f: set(map(int, g[POS_ROW].to_numpy()))
+        for f, g in hits.groupby(POS_PATH, sort=False)
     }
     version = _next_version(table_dir)
     actions = _dv_protocol_actions(snap) + _dv_remove_add_actions(
@@ -1243,32 +950,18 @@ def delta_merge(
             f"{tuple(dup[0][k] for k in key_cols)}) — a row cannot be "
             "updated twice in one MERGE"
         )
-    scan = _identity_scan(spark, table_dir, snap)
-    # exclude already-dead rows from matching
-    from . import dvectors as _dv
-
-    dead: list[tuple[str, int]] = []
-    for f_ in snap["files"]:
-        if f_.get("deletionVector"):
-            for p_ in _dv.decode_descriptor(table_dir, f_["deletionVector"]):
-                dead.append((f_["path"], int(p_)))
-    if dead:
-        import pandas as _pd
-
-        dead_df = spark.createDataFrame(
-            _pd.DataFrame(dead, columns=["__dvf", "__dvp"])
-        ).coalesce(1)  # metadata-rate broadcast side (see pos_df note)
-        scan = scan.join(F.broadcast(dead_df), ["__dvf", "__dvp"], "left_anti")
+    # live rows only: already-dead rows neither update nor count
+    live = scan(spark, delta_plan(table_dir, snap), row_identity=True)
     keys = source_df.select(*key_cols).dropDuplicates()
     hits = (
-        scan.join(F.broadcast(keys), key_cols, "left_semi")
-        .select("__dvf", "__dvp")
+        live.join(F.broadcast(keys), key_cols, "left_semi")
+        .select(POS_PATH, POS_ROW)
         .toPandas()
     )  # bounded (matched target rows only) — Arrow transfer, see
     # delta_delete_where
     new_pos: dict[str, set[int]] = {
-        f: set(map(int, g["__dvp"].to_numpy()))
-        for f, g in hits.groupby("__dvf", sort=False)
+        f: set(map(int, g[POS_ROW].to_numpy()))
+        for f, g in hits.groupby(POS_PATH, sort=False)
     }
     version = _next_version(table_dir)
     actions: list[dict] = []

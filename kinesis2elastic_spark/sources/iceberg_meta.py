@@ -11,19 +11,15 @@ iceberg.apache.org/spec/ — without the iceberg-spark runtime:
 - time travel: any snapshot-id in the metadata's snapshot list (the
   spec's semantics — unlike Delta, ONE metadata file retains the whole
   snapshot history until expiration);
-- pruning: manifest partition values are probed through the SAME
-  transform mapping as the repo's own hidden partitioning (B173 —
-  identity / truncate[W] / year / month / day / hour), except
-  ``bucket[N]``, which uses Iceberg's mandated murmur3_x86_32 hash
-  (implemented below from the public algorithm, spec Appendix B test
-  vectors in tests) — an md5 bucket probe would silently mis-prune a
-  real Iceberg table.
-
-Data files in Iceberg CONTAIN all columns (identity-partitioned data
-still stores the column), so the read path is a plain pushdown-friendly
-parquet scan over the manifest's explicit file list — no value
-injection, and Catalyst's own pushdown/pruning applies on top of the
-manifest-level file skipping.
+- reading: ``iceberg_plan`` resolves a snapshot into the scan core's
+  ``ScanPlan`` (sources/scan.py — where pruning, merge-on-read and
+  scanning live).  Partition values are probed through the SAME
+  transform mapping as the repo's own hidden partitioning (B173),
+  except ``bucket[N]``, which uses Iceberg's mandated murmur3_x86_32
+  hash (implemented below from the public algorithm, spec Appendix B
+  test vectors in tests) — an md5 bucket probe would silently
+  mis-prune a real Iceberg table.  Iceberg data files CONTAIN all
+  columns, so nothing is injected.
 
 Fixture writer (``iceberg_append`` / ``iceberg_delete_files``): builds
 REAL spec-shaped tables (JSON metadata, Avro manifest lists + manifests,
@@ -43,17 +39,29 @@ import os
 import re
 import struct
 import uuid
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from ..catalog import parquet_footer_schema
 from ..operators.partitioning import (
-    _MONOTONE,
     _parse_transform,
     _transform_col,
     _transform_value,
 )
 from . import avro_ocf as av
+from .scan import (
+    POS_PATH,
+    POS_ROW,
+    DataFile,
+    EqualityDelete,
+    PositionDelete,
+    ScanPlan,
+    prune,
+    scan,
+)
 
 _META = "metadata"
 _PT = "__ipt_"
@@ -272,49 +280,47 @@ def iceberg_snapshot(
     }
 
 
-def _file_may_match(f: dict, specs: dict, col: str, op: str, val) -> bool:
-    """One filter probe against one file's recorded partition values,
-    under the spec the file was written with (B173's decision logic,
-    murmur3 bucket).  Unknown/undecidable → True (scan; pruning is an
-    optimization, never a semantics change)."""
-    spec = specs.get(f["spec_id"])
-    if not spec:
-        return True
-    for fld in spec.get("fields", []):
-        if fld.get("source-name") != col:
-            continue
-        t = fld["transform"]
-        try:
-            kind, _arg = _parse_transform(t)
-        except ValueError:
-            return True  # unknown transform: scan
-        fval = f["partition"].get(fld["name"])
-        if fval is None:
-            continue
-        if op == "=":
-            pv = _ice_transform_value(val, t)
-            if pv is not None and fval != pv:
-                return False
-        elif kind in _MONOTONE and op in ("<", "<=", ">", ">=", "between"):
-            lo, hi = (val if op == "between" else (None, None))
-            if op in ("<", "<="):
-                hi = val
-            if op in (">", ">="):
-                lo = val
-            plo = _ice_transform_value(lo, t) if lo is not None else None
-            phi = _ice_transform_value(hi, t) if hi is not None else None
-
-            def norm(x):
-                try:
-                    return (0, int(x))
-                except (TypeError, ValueError):
-                    return (1, x)
-
-            if plo is not None and norm(fval) < norm(plo):
-                return False
-            if phi is not None and norm(fval) > norm(phi):
-                return False
-    return True
+def iceberg_plan(
+    table_dir: str,
+    snapshot_id: int | None = None,
+    metadata_version: int | None = None,
+) -> ScanPlan:
+    """Resolve a snapshot into a ``ScanPlan``: data files with their v2
+    sequence number and partition values under the spec they were
+    written with (probed through ``_ice_transform_value``), plus the
+    position and equality deletes.  Read schema: the table schema
+    (B211), else the first data file's footer restricted to it."""
+    snap = iceberg_snapshot(table_dir, snapshot_id, metadata_version)
+    files = []
+    for f in snap["files"]:
+        spec = snap["specs"].get(f["spec_id"]) or {}
+        facts = tuple(
+            (fld.get("source-name"), fld["transform"], f["partition"].get(fld["name"]))
+            for fld in spec.get("fields", [])
+        )
+        files.append(
+            DataFile(f["path"], int(f["seq"]), transforms=facts,
+                     to_partition=_ice_transform_value)
+        )
+    schema = _spark_read_schema(snap["schema"])
+    names = [f_["name"] for f_ in (snap["schema"] or {}).get("fields", [])]
+    if schema is None and files and names:
+        foot = parquet_footer_schema(files[0].path)
+        schema = StructType([foot[n] for n in names if n in foot.names])
+    return ScanPlan(
+        files,
+        schema,
+        position_deletes=[
+            PositionDelete(int(d["seq"]), d["path"], "pos")
+            for d in snap["deletes"]
+            if d["kind"] == "pos"
+        ],
+        equality_deletes=[
+            EqualityDelete(int(d["seq"]), d["path"], tuple(d["equality_cols"]))
+            for d in snap["deletes"]
+            if d["kind"] == "eq"
+        ],
+    )
 
 
 def iceberg_prune(
@@ -322,15 +328,8 @@ def iceberg_prune(
     filters: list[tuple],
     snapshot_id: int | None = None,
 ) -> tuple[list[str], int]:
-    snap = iceberg_snapshot(table_dir, snapshot_id)
-    kept = [
-        f["path"]
-        for f in snap["files"]
-        if all(
-            _file_may_match(f, snap["specs"], c, op, v) for (c, op, v) in filters
-        )
-    ]
-    return kept, len(snap["files"])
+    plan = iceberg_plan(table_dir, snapshot_id)
+    return [f.path for f in prune(plan, filters)], len(plan.files)
 
 
 _ICE_TO_SPARK = {
@@ -352,9 +351,7 @@ def _spark_read_schema(schema_struct: dict | None):
     instead of inheriting the first file's footer (which silently
     dropped post-evolution columns from mixed file sets).  Returns None
     when any field's type has no clean Spark mapping — the caller then
-    falls back to footer inference (conservative: old behavior)."""
-    from pyspark.sql.types import StructType as _ST
-
+    falls back to the first data file's footer."""
     if not schema_struct:
         return None
     parts = []
@@ -367,7 +364,7 @@ def _spark_read_schema(schema_struct: dict | None):
             return None
         parts.append(f"`{f_['name']}` {spark_t}")
     try:
-        return _ST.fromDDL(", ".join(parts))
+        return StructType.fromDDL(", ".join(parts))
     except Exception:
         return None
 
@@ -380,102 +377,13 @@ def read_iceberg(
     metadata_version: int | None = None,
 ) -> DataFrame:
     """Read a snapshot (manifest-pruned when ``filters`` given, with the
-    residual filter applied — exact either way).  Iceberg data files
-    carry every column, so the base read is one parquet scan over an
-    explicit file list; Catalyst pushdown applies on top.
-
-    Merge-on-read (format v2): when the snapshot carries delete files,
-    data files are grouped by data sequence number and each group
-    anti-joins (a) the union of POSITION-delete (file_path, pos) pairs
-    from deletes with seq >= the group's — row identity comes from the
-    ``_metadata`` hidden columns, the same B169 machinery — and (b) the
-    union of EQUALITY-delete keys from deletes with seq STRICTLY above
-    the group's (the spec's scoping: a key re-inserted after the delete
-    survives).  Group count = commit count, so the plan stays a union
-    of a few scans + one anti-join per group over narrow key columns."""
-    from ..operators.timetravel import _filters_to_column
-
-    snap = iceberg_snapshot(table_dir, snapshot_id, metadata_version)
-    files = snap["files"]
-    if filters:
-        files = [
-            f
-            for f in files
-            if all(
-                _file_may_match(f, snap["specs"], c, op, v)
-                for (c, op, v) in filters
-            )
-        ]
-    names = [f_["name"] for f_ in (snap["schema"] or {}).get("fields", [])]
-    rschema = _spark_read_schema(snap["schema"])
-
-    def _scan(*paths):
-        r = spark.read.schema(rschema) if rschema is not None else spark.read
-        return r.parquet(*paths)
-
-    if not files:
-        all_paths = [f["path"] for f in snap["files"]]
-        if not all_paths:
-            raise ValueError(f"iceberg snapshot has no data files: {table_dir}")
-        df = _scan(all_paths[0]).limit(0)
-    elif not snap["deletes"]:
-        df = _scan(*[f["path"] for f in files])
-    else:
-        pos_dels = [d for d in snap["deletes"] if d["kind"] == "pos"]
-        eq_dels = [d for d in snap["deletes"] if d["kind"] == "eq"]
-        from ..catalog import read_parquet_footer
-
-        pos_pairs = None
-        for d in pos_dels:
-            # r14: selectExpr — each F.col/lit/alias Column op costs
-            # ~14 py4j round-trips (tools/r14_dvread_sections.py);
-            # expression trees are identical
-            p = read_parquet_footer(spark, d["path"]).selectExpr(
-                "file_path", "pos", f"{int(d['seq'])} AS __dseq"
-            )
-            pos_pairs = p if pos_pairs is None else pos_pairs.unionByName(p)
-        by_seq: dict[int, list[str]] = {}
-        for f in files:
-            by_seq.setdefault(int(f["seq"]), []).append(f["path"])
-        parts = []
-        for seq, paths in sorted(by_seq.items()):
-            part = _scan(*paths)
-            if pos_pairs is not None:
-                part = (
-                    part.selectExpr(
-                        "*",
-                        "regexp_replace(_metadata.file_path, '^file:', '')"
-                        " AS __fp",
-                        "CAST(_metadata.row_index AS BIGINT) AS __ri",
-                    )
-                    .join(
-                        pos_pairs.filter(f"__dseq >= {int(seq)}").selectExpr(
-                            "file_path AS __fp", "pos AS __ri"
-                        ),
-                        ["__fp", "__ri"],
-                        "left_anti",
-                    )
-                    .drop("__fp", "__ri")
-                )
-            for d in eq_dels:
-                if d["seq"] > seq:
-                    keys = read_parquet_footer(spark, d["path"]).select(
-                        *d["equality_cols"]
-                    )
-                    part = part.join(
-                        F.broadcast(keys.dropDuplicates()),
-                        d["equality_cols"],
-                        "left_anti",
-                    )
-            parts.append(part)
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-    if names:
-        df = df.select(*[c for c in names if c in df.columns])
-    if filters:
-        df = df.filter(_filters_to_column(filters))
-    return df
+    residual filter applied — exact either way) through the scan core,
+    merge-on-read included (format v2 position and equality deletes,
+    scoped by data sequence number)."""
+    plan = iceberg_plan(table_dir, snapshot_id, metadata_version)
+    if not plan.files:
+        raise ValueError(f"iceberg snapshot has no data files: {table_dir}")
+    return scan(spark, plan, filters or ())
 
 
 # ------------------------------------------------------------- writing
@@ -976,33 +884,14 @@ def iceberg_positional_delete(
     snap = iceberg_snapshot(table_dir)
     if not snap["files"]:
         raise ValueError("no data files to delete from")
-    # r14: ONE scan per distinct footer schema instead of one
-    # (schema-inference job + plan leg) per FILE — same per-file "*"
-    # projection semantics, since files inside a group share a schema
-    # and the legs are reduced to (file_path, pos) before the union.
-    import pyarrow.parquet as _pq
-
-    from ..catalog import read_parquet_footer
-
-    by_schema: dict[str, list[str]] = {}
-    for f in snap["files"]:
-        by_schema.setdefault(str(_pq.read_schema(f["path"])), []).append(
-            f["path"]
-        )
-    victims = None
-    for _, paths in sorted(by_schema.items()):
-        part = (
-            read_parquet_footer(spark, *paths)
-            .selectExpr(
-                "*",
-                "regexp_replace(_metadata.file_path, '^file:', '')"
-                " AS file_path",
-                "CAST(_metadata.row_index AS BIGINT) AS pos",
-            )
-            .filter(predicate)
-            .select("file_path", "pos")
-        )
-        victims = part if victims is None else victims.unionByName(part)
+    # every physical row with its identity (already-deleted rows may
+    # match again: a repeated pair deletes nothing new)
+    plan = replace(iceberg_plan(table_dir), position_deletes=[], equality_deletes=[])
+    victims = (
+        scan(spark, plan, row_identity=True)
+        .filter(predicate)
+        .selectExpr(f"{POS_PATH} AS file_path", f"{POS_ROW} AS pos")
+    )
     seq = snap["metadata"]["last-sequence-number"] + 1
     out_dir = os.path.join(table_dir, "data", f"del-{seq:05d}")
     victims.coalesce(1).write.mode("overwrite").parquet(out_dir)

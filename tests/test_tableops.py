@@ -584,6 +584,52 @@ def test_equality_delete_optimize_folds_and_restores_pruning(spark, tmp_path):
     assert got2 == list(range(50, 100))
 
 
+def test_read_where_prunes_under_live_deletes(spark, tmp_path):
+    """Live equality AND positional deletes no longer switch file
+    skipping off: deletes scope by seq, so dropping a provably-disjoint
+    data file never changes which deletes apply to the others.  The
+    pruned read returns exactly the merge-on-read rows."""
+    import re
+
+    from kinesis2elastic_spark.operators import timetravel as tt
+    from kinesis2elastic_spark.sources.scan import POS_PATH, POS_ROW, scan
+
+    table = str(tmp_path / "t")
+    base = spark.createDataFrame([(i, f"r{i}") for i in range(100)], "k long, s string")
+    tt.commit_snapshot(
+        spark, table, base.repartitionByRange(4, "k"), 0, collect_stats=True
+    )
+    tt.commit_delete(
+        spark, table, spark.createDataFrame([(i,) for i in range(0, 100, 3)], "k long"), 1
+    )
+    pairs = (
+        scan(spark, tt.snapshot_plan(table, 1), row_identity=True)
+        .filter(F.col("k") % 5 == 0)
+        .select(F.col(POS_PATH).alias("file_path"), F.col(POS_ROW).alias("row_index"))
+    )
+    tt.commit_positional_delete(spark, table, pairs, 2)
+    # v3 re-inserts deleted keys: seq-scoped, so they survive
+    tt.commit_snapshot(
+        spark, table, spark.createDataFrame([(90, "new90"), (96, "new96")], "k long, s string"), 3
+    )
+    filt = [("k", ">=", 80)]
+    kept, total = tt.prune_files(table, filt)
+    assert 0 < len(kept) < total
+    df = tt.read_where(spark, table, filt)
+    # the read scans exactly the kept data files (plus the delete files)
+    data = set(tt.manifest_files(table))
+    scanned = {re.sub("^file:/*", "/", p) for p in df.inputFiles()}
+    assert scanned & data == set(kept)
+    got = sorted((r.k, r.s) for r in df.collect())
+    want = sorted(
+        [(i, f"r{i}") for i in range(80, 100) if i % 3 and i % 5] + [(90, "new90"), (96, "new96")]
+    )
+    assert got == want
+    assert got == sorted(
+        (r.k, r.s) for r in tt.read_asof(spark, table).filter("k >= 80").collect()
+    )
+
+
 def test_equality_delete_multicolumn_key(spark, tmp_path):
     """B152: the delete key is whatever columns the keys frame carries —
     a two-column key deletes only exact (k, s) matches."""
@@ -1257,10 +1303,12 @@ def test_positional_delete_roundtrip_and_validation(spark, tmp_path):
     )
     tt.commit_snapshot(spark, table, df.repartition(3), 0)
     # pick victims by VALUE, collect their physical (file, row) identity
-    tgt = tt._read_asof_impl(spark, table, 0, None, with_pos=True)
+    from kinesis2elastic_spark.sources.scan import POS_PATH, POS_ROW, scan
+
+    tgt = scan(spark, tt.snapshot_plan(table, 0), row_identity=True)
     pairs = tgt.filter(F.col("k") % 10 == 0).select(
-        F.col(tt._POS_PATH).alias("file_path"),
-        F.col(tt._POS_ROW).alias("row_index"),
+        F.col(POS_PATH).alias("file_path"),
+        F.col(POS_ROW).alias("row_index"),
     )
     tt.commit_positional_delete(spark, table, pairs, 1)
     got = sorted(r.k for r in tt.read_asof(spark, table).collect())
@@ -1770,7 +1818,7 @@ def test_bloom_malformed_entry_degrades_to_scan():
     """A truncated/malformed manifest bloom entry must answer 'scan it'
     (True), never crash the pruned read (r12 ADVICE: missing b64 raised
     KeyError)."""
-    from kinesis2elastic_spark.operators.timetravel import (
+    from kinesis2elastic_spark.sources.scan import (
         _BLOOM_K,
         _bloom_may_contain,
     )
