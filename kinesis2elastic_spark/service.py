@@ -3,10 +3,10 @@
 
     HTTP receiver (sources.firehose)  →  spool files (S3-backup shape)
       →  readStream envelopes          (A1)
-      →  decode chain                  (A8-A15, operators.decode)
+      →  decode chain + doc metrics    (A8-A16, operators.decode, metrics)
       →  ingest-pipeline interpreter   (A17-A31, operators.pipeline_dsl,
                                         runs reference-shaped JSON configs)
-      →  deterministic _id + metrics   (A16, idempotency fix)
+      →  deterministic _id             (idempotency fix)
       →  foreachBatch bulk sink        (A5-A7, streaming.sink)
 
 A user of the reference points Firehose at :func:`FirehoseReceiver` instead
@@ -79,12 +79,10 @@ def run_service(
         log = logger.bind(epoch=epoch_id) if logger else None
         if log:
             log.info("batch_start")
-        docs = decode_envelopes(batch_df)
-        flat = flatten_for_pipeline(docs)
+        flat = flatten_for_pipeline(batch_df)
         if interp is not None:
             flat = interp.run(flat, entry_pipeline)
         flat = document_id(flat, event_id_col="`records.data.logEvents.id`")
-        flat = with_doc_metrics(flat, error_col="decode.error")
         results = sink.write_batch(flat, epoch_id)
         if log:
             for r in results:
@@ -99,7 +97,10 @@ def run_service(
                 n_failed_chunks=sum(1 for r in results if r["errors"]),
             )
 
-    writer = stream_envelopes(spark, spool_dir).writeStream.foreachBatch(handle)
+    # Observed on the stream itself: Spark reports a streaming query's
+    # observations per trigger, and drops those of a foreachBatch DataFrame.
+    docs = with_doc_metrics(decode_envelopes(stream_envelopes(spark, spool_dir)))
+    writer = docs.writeStream.foreachBatch(handle)
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
     if available_now:

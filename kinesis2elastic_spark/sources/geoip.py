@@ -13,7 +13,7 @@ deterministic stand-in ranges (FIXTURES.md §5) used by tests and oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # (ip_lo, ip_hi, country, city, as_number, as_org) — 10.0.0.0-based ranges so
@@ -33,14 +33,13 @@ def synthetic_geoip_dim(spark: SparkSession) -> DataFrame:
     )
 
 
-def ip_to_int(col: Column) -> Column:
-    """Dotted-quad IPv4 string → int64 (JVM-side split/cast, no UDF)."""
-    p = F.split(col, r"\.")
+def ip_to_int_sql(ip: str) -> str:
+    """Dotted-quad IPv4 string → int64, as SQL text over the SQL
+    expression ``ip`` (JVM-side split/cast, no UDF)."""
+    p = rf"split({ip}, '\\.', -1)"
     return (
-        F.element_at(p, 1).cast("long") * 16777216
-        + F.element_at(p, 2).cast("long") * 65536
-        + F.element_at(p, 3).cast("long") * 256
-        + F.element_at(p, 4).cast("long")
+        f"CAST(element_at({p}, 1) AS BIGINT) * 16777216 + CAST(element_at({p}, 2) AS BIGINT) * 65536"
+        f" + CAST(element_at({p}, 3) AS BIGINT) * 256 + CAST(element_at({p}, 4) AS BIGINT)"
     )
 
 
@@ -49,7 +48,7 @@ def geoip_enrich(df: DataFrame, dim: DataFrame, ip_col: str = "source.ip") -> Da
     post-rename names of the reference chain (asn → source.as.number,
     organization_name → source.as.organization.name,
     ingest/axway-ingest.json:109-122)."""
-    ipint = ip_to_int(F.col(f"`{ip_col}`")).alias("_ip_int")
+    ipint = F.expr(ip_to_int_sql(f"`{ip_col}`")).alias("_ip_int")
     joined = df.withColumn("_ip_int", ipint).join(
         F.broadcast(dim),
         (F.col("_ip_int") >= F.col("ip_lo")) & (F.col("_ip_int") <= F.col("ip_hi")),

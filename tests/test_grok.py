@@ -1,4 +1,5 @@
-"""Grok compiler unit tests (pure Python — no Spark session needed)."""
+"""Grok compiler unit tests (pure Python), and the single-pass extraction
+checked against a per-field reference in Spark."""
 
 import re
 
@@ -154,3 +155,96 @@ def test_pattern_table_breadth_net_fields(spark):
     assert out["agent"] == '"Mozilla \\"5.0\\""'
     assert out["path"] == "/var/log/app.log"
     assert out["when"] == "03/22/2024 14:01:02"
+
+
+def _generator_lines(n: int = 400) -> list[str]:
+    """The ingest benchmark's messages: access lines, garbage lines and
+    JSON messages, decoded from one seeded envelope."""
+    import base64
+    import gzip
+    import importlib.util
+    import json
+    import os
+    import sys
+
+    path = os.path.join(os.path.dirname(__file__), "..", "perfbench", "envelopes.py")
+    spec = importlib.util.spec_from_file_location("perfbench_envelopes", path)
+    envelopes = importlib.util.module_from_spec(spec)
+    sys.modules[spec.name] = envelopes  # its dataclasses resolve annotations there
+    spec.loader.exec_module(envelopes)
+    env, _ = envelopes.envelope(7, 0, 3, 1_790_000_000_000)
+    lines = []
+    for record in env["records"]:
+        try:
+            payload = json.loads(gzip.decompress(base64.b64decode(record["data"], validate=True)))
+        except (ValueError, OSError):
+            continue  # the planted bad-base64 and bad-gzip records
+        lines += [e["message"] for e in payload["logEvents"]]
+    return lines[:n]
+
+
+def _reference(col, compiled):
+    """Per-field ``rlike`` + ``regexp_extract``: one ``find()`` per field."""
+    from pyspark.sql import functions as F
+
+    matched = col.isNotNull() & col.rlike(compiled.regex)
+    fields = {}
+    for f in compiled.fields:
+        c = F.nullif(F.regexp_extract(col, compiled.regex, f.group), F.lit(""))
+        fields[f.name] = c.cast(f.type) if f.type != "string" else c
+    return matched, fields
+
+
+def test_single_pass_grok_matches_per_field_reference(spark):
+    """Every field and the match flag of the single-pass grok equal the
+    per-field reference, through ``grok_columns``/``grok_matched`` and
+    through the interpreter, for both reference templates — over the
+    benchmark generator's lines, the ``-`` variants, lines holding the
+    capture delimiter, ``''`` and NULL."""
+    from pyspark.sql import functions as F
+
+    from kinesis2elastic_spark.operators.grok import SEP, grok_columns, grok_matched
+    from kinesis2elastic_spark.operators.pipeline_dsl import PipelineInterpreter
+
+    dash = 'gw01.example.com - - [13/Aug/2026:10:15:32 +0000]  "-" 400 - 7 "10.1.2.3" c-1 - corr'
+    lines = _generator_lines() + [
+        LINE,
+        dash,
+        dash.replace("c-1 - corr", "c-1 txn-1 corr"),
+        LINE.replace("corr-77a1", f"corr{SEP}77a1"),
+        f"{SEP}{LINE}",
+        LINE.replace(" 200 ", f" 200{SEP}"),
+        SEP,
+        "203.0.113.7",
+        "gw01.example.com",
+        f"203.0.113.7{SEP}",
+        "",
+        None,
+    ]
+    assert sum("GARBAGE" in (line or "") for line in lines) >= 3
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(lines)], "id int, line string")
+    line = F.col("line")
+    for template in (AXWAY_ACCESS_TEMPLATE, IP_OR_HOSTNAME_TEMPLATE):
+        c = compile_grok(template)
+        ref_matched, ref_fields = _reference(line, c)
+        fields = grok_columns(line, c)
+        spec = {"p": {
+            "processors": [{"grok": {"field": "line", "patterns": [template]}}],
+            "on_failure": [{"set": {"field": "error.message", "value": "{{ _ingest.on_failure_message }}"}}],
+        }}
+        interp = {r.id: r for r in PipelineInterpreter(spec).run(df, "p").collect()}
+        rows = df.select(
+            "id", "line", ref_matched.alias("ref_matched"), grok_matched(line, c).alias("matched"),
+            *[v.alias(f"ref:{k}") for k, v in ref_fields.items()],
+            *[v.alias(k) for k, v in fields.items()],
+        ).collect()
+        n_matched = 0
+        for r in rows:
+            n_matched += r["ref_matched"]
+            assert r["matched"] == r["ref_matched"], r["line"]
+            assert (interp[r.id]["error.message"] is not None) == (r["line"] is not None and not r["ref_matched"])
+            for f in c.fields:
+                assert r[f.name] == r[f"ref:{f.name}"], (r["line"], f.name)
+                assert interp[r.id][f.name] == r[f"ref:{f.name}"], (r["line"], f.name)
+        assert 0 < n_matched < len(rows)
+

@@ -4,11 +4,12 @@ reference checkout is present) the reference's literal JSON configs."""
 
 import json
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
-from kinesis2elastic_spark.operators.grok import AXWAY_ACCESS_TEMPLATE
+from kinesis2elastic_spark.operators.grok import AXWAY_ACCESS_TEMPLATE, SEP, compile_grok
 from kinesis2elastic_spark.operators.pipeline_dsl import (
     PipelineInterpreter,
     fixture_spec,
@@ -169,6 +170,86 @@ def test_spec_plan_stays_flat(spark):
     plan = out._jdf.queryExecution().analyzed().treeString()
     n_projects = sum(1 for line in plan.splitlines() if line.lstrip(" :+-").startswith("Project ["))
     assert n_projects <= 25, n_projects
+
+    # The optimized plan's expression trees, read whole from its JSON form
+    # (treeString truncates long Projects): each grok is one regex pass,
+    # and the two geoip processors on source.ip are one join.
+    groks = [compile_grok(p["grok"]["patterns"][0]) for p in SPEC["enrich"]["processors"] if "grok" in p]
+    regexes = {c.regex for c in groks}
+    nodes = json.loads(out._jdf.queryExecution().optimizedPlan().toJSON())
+    counts = Counter()
+    for node in nodes:
+        for flat_tree in _expression_lists(list(node.values())):
+            _count_grok_regex(_tree(iter(flat_tree)), regexes, {c.whole_regex for c in groks}, counts)
+    assert counts == {"RegExpReplace": len(groks)}, counts
+    assert sum(node["class"].endswith(".Join") for node in nodes) == 1
+
+
+def _expression_lists(value):
+    """Each expression of a plan node's JSON fields, as its pre-order node list."""
+    if isinstance(value, list) and value and isinstance(value[0], dict) and "num-children" in value[0]:
+        yield value
+    elif isinstance(value, list):
+        for v in value:
+            yield from _expression_lists(v)
+
+
+def _tree(nodes):
+    node = next(nodes)
+    return node["class"].rsplit(".", 1)[1], node, [_tree(nodes) for _ in range(node["num-children"])]
+
+
+def _count_grok_regex(tree, regexes, whole_regexes, counts):
+    """Count the grok regex evaluations in ``tree``: ``rlike`` and
+    ``regexp_extract`` of a grok regex, and ``regexp_replace`` of a
+    whole-line grok regex, skipping the fallback branch taken only by
+    sources that hold the capture delimiter."""
+    name, _, kids = tree
+    if name == "If" and kids[0][0] == "Contains" and kids[0][2][1][1].get("value") == SEP:
+        kids = [kids[0], kids[2]]
+    elif name in ("RLike", "RegExpExtract", "RegExpReplace"):
+        pattern = kids[1][1].get("value")
+        if pattern in (whole_regexes if name == "RegExpReplace" else regexes):
+            counts[name] += 1
+    for kid in kids:
+        _count_grok_regex(kid, regexes, whole_regexes, counts)
+
+
+def test_unsupported_spec_shapes_are_rejected(spark, docs):
+    """Spec shapes the interpreter would otherwise mis-run fail at
+    compile time: a grok with several patterns (ES tries each in turn)
+    and an ``on_failure`` handler other than ``set``."""
+    two_patterns = {"p": {"processors": [{"grok": {
+        "field": "records.data.logEvents.message.text", "patterns": [AXWAY_ACCESS_TEMPLATE, "%{GREEDYDATA:x}"],
+    }}]}}
+    with pytest.raises(ValueError, match="one pattern"):
+        PipelineInterpreter(two_patterns).run(docs, "p")
+    remove_handler = {"p": {
+        "processors": [{"set": {"field": "event.kind", "value": "event"}}],
+        "on_failure": [{"remove": {"field": "event.kind"}}],
+    }}
+    with pytest.raises(ValueError, match="on_failure"):
+        PipelineInterpreter(remove_handler).run(docs, "p")
+
+
+def test_set_literals_keep_value_and_type(spark):
+    """``set`` values reach the compiled SQL as literals with the value
+    and type a Column literal gives them: quotes, backslashes and control
+    characters survive the escaping."""
+    values = {
+        "s": "it's \\d+ \\\\ 'x' \"y\" \u0001 \n",
+        "i": 7, "big": 2**40, "neg": -3, "b": True, "f": 0.1, "n": None,
+    }
+    spec = {"p": {"processors": [{"set": {"field": k, "value": v}} for k, v in values.items()]}}
+    out = PipelineInterpreter(spec).run(spark.range(1), "p")
+    # the Column form of a guarded write, as the interpreter composed it before
+    ref = spark.range(1).select(
+        "id", *[F.when(~F.lit(False), F.lit(v)).otherwise(F.lit(None).cast("string")).alias(k)
+                for k, v in values.items()]
+    )
+    assert out.schema == ref.schema
+    assert out.first() == ref.first()
+    assert out.first()["s"] == values["s"]
 
 
 def test_condition_parser_rejects_unknown():

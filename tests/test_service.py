@@ -258,10 +258,9 @@ def test_service_metrics_scrapeable(spark, tmp_path):
         _post_envelope(receiver.url, "/aws/app/a", ['{"k": 1}'])
         _post_envelope(receiver.url, "/aws/app/b", ["plain text"])
 
-        def transport(url, body, headers):
-            return 200, {"errors": False}
-
-        sink = BulkSink("http://fake:9200", "logs", transport)
+        out_dir = tmp_path / "bulk"
+        out_dir.mkdir()
+        sink = BulkSink("http://fake:9200", "logs", _file_transport(str(out_dir)))
         q = run_service(
             spark,
             receiver.spool_dir,
@@ -286,6 +285,11 @@ def test_service_metrics_scrapeable(spark, tmp_path):
         assert registry.value("k2e_batches_total") >= 1
         assert registry.value("k2e_input_rows_total") >= 2
         assert "k2e_batches_total" in body and "k2e_input_rows_total" in body
+        # the stream's observed document counters reach the scrape
+        n_delivered = len(_delivered(str(out_dir)))
+        assert n_delivered == 2
+        assert registry.value("k2e_docs_total") == n_delivered
+        assert f"k2e_docs_total {n_delivered}" in body
     finally:
         spark.streams.removeListener(listener)
         receiver.stop()
