@@ -55,6 +55,7 @@ from collections.abc import Mapping
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..schemas import sql_ident as _q
 from ..sources.geoip import ip_to_int_sql
 from .grok import Render, compile_grok
 
@@ -76,11 +77,6 @@ def fixture_spec() -> dict[str, dict]:
     ingest/axway-ingest.json; its grok is ``grok.AXWAY_ACCESS_TEMPLATE``."""
     with open(FIXTURE_SPEC) as f:
         return json.load(f)
-
-
-def _q(name: str) -> str:
-    """SQL identifier for a flat dotted-path column name."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def _lit(value) -> str:
@@ -223,12 +219,20 @@ class PipelineInterpreter:
 
     The first :meth:`run` for an entry pipeline and input column list
     compiles the spec to stages of SQL text, without calling Spark; every
-    run replays the stages with ``selectExpr`` and the geoip join."""
+    run replays the stages with ``selectExpr`` and the geoip join.
+
+    ``geoip_dim`` must be JVM-resident (a ``LocalTableScan``, as
+    ``sources.geoip``'s builders return): every plan that joins it
+    broadcasts it again, and a Python-backed relation would rerun a Python
+    job each time."""
 
     def __init__(self, pipelines: dict[str, dict], geoip_dim: DataFrame | None = None):
         self.pipelines = pipelines
         self.geoip_dim = geoip_dim
         self._compiled: dict[tuple[str, tuple[str, ...]], list[list[str] | None]] = {}
+        if geoip_dim is not None:
+            self._dim = F.broadcast(geoip_dim)
+            self._on = F.expr(f"{_q(_IP_INT)} >= ip_lo AND {_q(_IP_INT)} <= ip_hi")
 
     # -- processors -------------------------------------------------------
 
@@ -386,11 +390,7 @@ class PipelineInterpreter:
         one broadcast join per geoip lookup."""
         for stage in self._compile(df.columns, entry):
             if stage is None:
-                df = df.join(
-                    F.broadcast(self.geoip_dim),
-                    (F.col(_IP_INT) >= F.col("ip_lo")) & (F.col(_IP_INT) <= F.col("ip_hi")),
-                    "left",
-                )
+                df = df.join(self._dim, self._on, "left")
             else:
                 df = df.selectExpr(*stage)
         return df

@@ -19,6 +19,13 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
+
+def sql_ident(name: str) -> str:
+    """Backtick-quoted SQL identifier for a column name (flat dotted-path
+    names, physical names with '-')."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 # One logEvent inside a CloudWatch payload (incoming/firehose.go:40-44).
 LOG_EVENT = T.StructType(
     [

@@ -8,11 +8,21 @@ dimension table (ip_lo..ip_hi as int64).  At 100 TB the dim stays a few MB
 bucket by /8 prefix and equi-join on the bucket before the range filter).
 
 No MaxMind data ships here; :func:`synthetic_geoip_dim` provides the
-deterministic stand-in ranges (FIXTURES.md §5) used by tests and oracle.
+deterministic stand-in ranges (FIXTURES.md §5) used by tests and oracle,
+and :func:`mmdb_geoip_dim` reads a real .mmdb.
+
+Both builders return a JVM-resident relation (a ``LocalTableScan``),
+handed over as one Arrow table with explicit column types.  A streaming
+service re-plans its batches, and each plan broadcasts the dimension
+again: from driver memory this costs milliseconds, whereas a
+``createDataFrame(list)`` relation is a Python-backed RDD that reruns a
+Python job on every batch.  The explicit types keep a missing ASN NULL
+(type inference from Python rows, or pandas, would make it NaN).
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -26,11 +36,30 @@ SYNTH_RANGES = [
 ]
 
 
+DIM_SCHEMA = pa.schema(
+    [
+        ("ip_lo", pa.int64()),
+        ("ip_hi", pa.int64()),
+        ("geo_country", pa.string()),
+        ("geo_city", pa.string()),
+        ("as_number", pa.int64()),
+        ("as_org", pa.string()),
+    ]
+)
+
+
+def _local_dim(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """Dimension rows (in ``DIM_SCHEMA`` order) → a JVM-local relation,
+    built through one Arrow table of the declared types."""
+    columns = list(zip(*rows)) if rows else [()] * len(DIM_SCHEMA)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(values, type=field.type) for values, field in zip(columns, DIM_SCHEMA)],
+        schema=DIM_SCHEMA,
+    ))
+
+
 def synthetic_geoip_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        SYNTH_RANGES,
-        "ip_lo bigint, ip_hi bigint, geo_country string, geo_city string, as_number bigint, as_org string",
-    )
+    return _local_dim(spark, SYNTH_RANGES)
 
 
 def ip_to_int_sql(ip: str) -> str:
@@ -92,9 +121,10 @@ def mmdb_geoip_dim(spark: SparkSession, path: str) -> DataFrame:
     """GeoIP dimension table FROM a .mmdb binary (A28's real-artifact
     leg): parse the search tree driver-side (the db is metadata-scale),
     emit one row per stored network with the GeoLite2 field paths
-    flattened to the join schema.  Ranges arrive CIDR-granular — finer
-    than SYNTH_RANGES but covering the identical IP space, so the
-    broadcast range join enriches identically."""
+    flattened to the join schema (a field the record lacks is NULL).
+    Ranges arrive CIDR-granular — finer than SYNTH_RANGES but covering
+    the identical IP space, so the broadcast range join enriches
+    identically."""
     from .mmdb import read_mmdb_ranges
 
     def g(rec: dict, *path_, default=None):
@@ -116,10 +146,7 @@ def mmdb_geoip_dim(spark: SparkSession, path: str) -> DataFrame:
         )
         for lo, hi, rec in read_mmdb_ranges(path)
     ]
-    return spark.createDataFrame(
-        rows,
-        "ip_lo bigint, ip_hi bigint, geo_country string, geo_city string, as_number bigint, as_org string",
-    )
+    return _local_dim(spark, rows)
 
 
 # The same dim as an inline SQL VALUES clause, for the DuckDB oracle.

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from ..catalog import parquet_footer_schema, read_parquet_footer
+from ..schemas import sql_ident as _qid
 
 PRUNE_OPS = ("=", "<", "<=", ">", ">=", "between")
 
@@ -258,11 +259,6 @@ def _residual(filters):
 
 
 # --------------------------------------------------------------- executor
-def _qid(name: str) -> str:
-    """Backtick-quoted identifier (physical names may contain '-')."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def _sql_str(s: str) -> str:
     """Single-quoted SQL literal (Spark's parser escapes backslashes)."""
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"

@@ -15,8 +15,20 @@ Deliberate improvements (documented deviations):
   main.go:555-559, so Firehose redelivery duplicates documents; we derive
   _id from the logEvent id / a digest → at-least-once delivery becomes
   effectively-once);
-- **per-record dead-letter**: item-level bulk failures are returned to the
-  caller instead of failing the batch.
+- **no commit without delivery**: a chunk still refused after
+  ``MAX_RETRIES`` (a non-2xx status) makes :meth:`BulkSink.write_batch`
+  raise :class:`BulkDeliveryError`, so ``foreachBatch`` fails, Structured
+  Streaming does not commit the offset, and the next run replays the
+  batch (the deterministic _id keeps the replay idempotent).  Item-level
+  failures inside a 2xx ``_bulk`` response (``errors: true``) are only
+  surfaced, as the chunk's ``errors`` flag: they are neither retried nor
+  dead-lettered yet.
+
+Each stage of the batch DataFrame (:func:`document_id`, the serialization
+in :meth:`BulkSink.serialize`) is one ``selectExpr`` of SQL text, compiled
+once per input column list: a streaming query re-plans every batch, and
+building the same expressions through per-column Column calls would cost
+driver time on each.
 
 Transport is injectable (any ``callable(url, body, headers) -> (status,
 response_json)``) so tests run with a fake and production drops in an HTTP
@@ -28,12 +40,14 @@ reference's 3 worker goroutines become |partitions| workers.
 
 from __future__ import annotations
 
+import functools
 import json
 import time
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, Row
-from pyspark.sql import functions as F
+
+from ..schemas import sql_ident
 
 DEFAULT_FLUSH_BYTES = 5_000_000  # main.go:46
 RETRY_STATUSES = {429, 502, 503, 504}  # main.go:412
@@ -74,13 +88,14 @@ def post_with_retry(
     max_retries: int = MAX_RETRIES,
     base_delay: float = 0.1,
     sleep=time.sleep,
-) -> tuple[int, dict]:
-    """Exponential backoff on overload statuses (main.go:402-412)."""
+) -> tuple[int, dict, int]:
+    """Exponential backoff on overload statuses (main.go:402-412).
+    Returns the last (status, response) and the number of attempts."""
     attempt = 0
     while True:
         status, resp = transport(url, body, headers)
         if status not in RETRY_STATUSES or attempt >= max_retries:
-            return status, resp
+            return status, resp, attempt + 1
         sleep(base_delay * (2**attempt))
         attempt += 1
 
@@ -106,6 +121,29 @@ def http_transport(url: str, body: bytes, headers: dict) -> tuple[int, dict]:
         return status, json.loads(payload or b"{}")
     except ValueError:
         return status, {"errors": status >= 400, "raw": payload[:200].decode("utf-8", "replace")}
+
+
+class BulkDeliveryError(RuntimeError):
+    """Chunks of a batch still had a non-2xx status after their retries;
+    ``results`` holds every chunk summary of the batch."""
+
+    def __init__(self, message: str, results: list[dict]):
+        super().__init__(message)
+        self.results = results
+
+
+@functools.lru_cache(maxsize=64)
+def _serialize_exprs(columns: tuple[str, ...], id_col: str) -> tuple[str, str]:
+    payload = ", ".join(sql_ident(c) for c in columns if c != id_col)
+    return f"CAST({sql_ident(id_col)} AS STRING) AS {sql_ident(id_col)}", f"to_json(struct({payload})) AS doc_json"
+
+
+@functools.lru_cache(maxsize=64)
+def _document_id_exprs(columns: tuple[str, ...], event_id_col: str) -> tuple[str, ...]:
+    digest = f"md5(CAST(to_json(struct({', '.join(map(sql_ident, columns))})) AS BINARY))"
+    id_expr = f"coalesce({event_id_col}, {digest}) AS _id"
+    kept = tuple(id_expr if c == "_id" else sql_ident(c) for c in columns)
+    return kept if "_id" in columns else (*kept, id_expr)
 
 
 class BulkSink:
@@ -143,41 +181,50 @@ class BulkSink:
         return h
 
     def write_partition(self, rows: Iterator[Row]) -> Iterator[dict]:
-        """Runs on the executor.  Yields per-chunk result summaries; item
-        errors are surfaced, not fatal (per-record DLQ semantics)."""
+        """Runs on the executor.  Yields per-chunk result summaries: the
+        final status, the item count, the response's item-error flag
+        (surfaced, not acted on), the retries and the seconds spent
+        posting, backoff included."""
         url, headers, fb = self.bulk_url(), self.headers(), self.flush_bytes
         docs = ((r[self.id_col], r["doc_json"]) for r in rows)
         for chunk, n_items in make_bulk_chunks(docs, fb):
-            status, resp = post_with_retry(self.transport, url, chunk, headers)
+            t0 = time.perf_counter()
+            status, resp, attempts = post_with_retry(self.transport, url, chunk, headers)
             yield {
                 "status": status,
                 "n_items": n_items,
                 "errors": resp.get("errors", status >= 400),
+                "retries": attempts - 1,
+                "post_s": time.perf_counter() - t0,
             }
 
-    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> list[dict]:
-        """foreachBatch entry: serialize documents (nulls stripped — the
+    def serialize(self, batch_df: DataFrame) -> DataFrame:
+        """(string _id, doc_json) per document, nulls stripped — the
         reference's recursive null-scrub script, axway-ingest.json:137-143,
-        is a serialization concern: Spark's to_json omits null fields),
-        stamp the deterministic _id, write partition-parallel."""
-        payload_cols = [c for c in batch_df.columns if c != self.id_col]
-        ser = batch_df.select(
-            F.col(f"`{self.id_col}`").cast("string").alias(self.id_col),
-            F.to_json(F.struct(*[F.col(f"`{c}`") for c in payload_cols])).alias("doc_json"),
-        )
-        results = ser.rdd.mapPartitions(
+        is a serialization concern: Spark's to_json omits null fields."""
+        return batch_df.selectExpr(*_serialize_exprs(tuple(batch_df.columns), self.id_col))
+
+    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> list[dict]:
+        """foreachBatch entry: serialize the documents (which carry their
+        deterministic _id), write partition-parallel, and return the chunk
+        summaries.  Raises :class:`BulkDeliveryError` when a chunk was not
+        delivered, so the batch is not committed."""
+        results = self.serialize(batch_df).rdd.mapPartitions(
             lambda rows: self.write_partition(rows)
         ).collect()
+        failed = [r["status"] for r in results if not 200 <= r["status"] < 300]
+        if failed:
+            raise BulkDeliveryError(
+                f"{len(failed)} of {len(results)} bulk chunks not delivered (statuses {sorted(set(failed))})",
+                results,
+            )
         return results
 
 
 def document_id(df: DataFrame, event_id_col: str = "record.data.logEvents.id") -> DataFrame:
     """Deterministic _id: the logEvent id when present (unused by the
     reference, incoming/firehose.go:41 — promoting it to _id is the
-    idempotency fix), else a digest of the serialized document."""
-    ev_id = F.col(event_id_col)
-    # backtick-quote: flat columns may have dotted-path NAMES (pipeline ctx)
-    fallback = F.md5(
-        F.to_json(F.struct(*[F.col(f"`{c}`") for c in df.columns])).cast("binary")
-    )
-    return df.withColumn("_id", F.coalesce(ev_id, fallback))
+    idempotency fix), else a digest of the serialized document.
+    ``event_id_col`` is SQL text (backtick-quote a flat dotted-path name);
+    an existing ``_id`` column is replaced in place."""
+    return df.selectExpr(*_document_id_exprs(tuple(df.columns), event_id_col))

@@ -96,3 +96,41 @@ def test_mmdb_dim_enriches_identically(spark, tmp_path):
     # union covers each synthetic range exactly
     total = sum(hi - lo + 1 for lo, hi, *_ in blocks)
     assert total == sum(s.ip_hi - s.ip_lo + 1 for s in synth)
+
+
+def _physical(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_geoip_dims_are_jvm_local(spark, tmp_path):
+    """Both dimension builders return driver-memory relations (a
+    LocalTableScan, no Python-backed ExistingRDD) holding the rows of the
+    ranges they were built from, typed as the join expects; an mmdb
+    record without an ASN gives a NULL as_number, not NaN or 0."""
+    db = str(tmp_path / "f.mmdb")
+    write_fixture_mmdb(db)
+    synth, from_mmdb = synthetic_geoip_dim(spark), mmdb_geoip_dim(spark, db)
+    for dim in (synth, from_mmdb):
+        plan = _physical(dim)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+        assert dim.schema.simpleString() == (
+            "struct<ip_lo:bigint,ip_hi:bigint,geo_country:string,geo_city:string,as_number:bigint,as_org:string>"
+        )
+    assert [tuple(r) for r in synth.collect()] == SYNTH_RANGES
+    want = [
+        (lo, hi, rec["country"]["iso_code"], rec["city"]["names"]["en"],
+         rec["autonomous_system_number"], rec["autonomous_system_organization"])
+        for lo, hi, rec in mmdb.read_mmdb_ranges(db)
+    ]
+    assert [tuple(r) for r in from_mmdb.collect()] == want
+
+    sparse = str(tmp_path / "sparse.mmdb")
+    mmdb.build_mmdb(sparse, [
+        (167772160, 167772415, {"country": {"iso_code": "US"}}),
+        (167772416, 167772671, {"autonomous_system_number": 64500}),
+    ])
+    rows = [tuple(r) for r in mmdb_geoip_dim(spark, sparse).collect()]
+    assert rows == [
+        (167772160, 167772415, "US", None, None, None),
+        (167772416, 167772671, None, None, 64500, None),
+    ]

@@ -4,6 +4,7 @@ reference checkout is present) the reference's literal JSON configs."""
 
 import json
 import os
+import re
 from collections import Counter
 
 import pytest
@@ -183,6 +184,35 @@ def test_spec_plan_stays_flat(spark):
             _count_grok_regex(_tree(iter(flat_tree)), regexes, {c.whole_regex for c in groks}, counts)
     assert counts == {"RegExpReplace": len(groks)}, counts
     assert sum(node["class"].endswith(".Join") for node in nodes) == 1
+
+
+def test_service_chain_plan_shape(spark):
+    """The whole per-batch chain of ``run_service`` — flatten, the
+    interpreter, ``_id``, the sink's serialization — is precompiled SQL
+    text: one projection each around the interpreter's six, one join,
+    and a JVM-local dimension on the join's broadcast side."""
+    from kinesis2elastic_spark.operators.decode import decode_envelopes
+    from kinesis2elastic_spark.schemas import FIREHOSE_ENVELOPE
+    from kinesis2elastic_spark.service import document_id, flatten_for_pipeline
+    from kinesis2elastic_spark.streaming.sink import BulkSink
+
+    def n_projects(df):
+        plan = df._jdf.queryExecution().analyzed().treeString()
+        return sum(1 for line in plan.splitlines() if line.lstrip(" :+-").startswith("Project ["))
+
+    docs = decode_envelopes(spark.createDataFrame([], FIREHOSE_ENVELOPE))
+    flat = flatten_for_pipeline(docs)
+    out = PipelineInterpreter(SPEC, geoip_dim=synthetic_geoip_dim(spark)).run(flat, "route")
+    with_id = document_id(out, event_id_col="`records.data.logEvents.id`")
+    ser = BulkSink("http://fake:9200", "logs", transport=None).serialize(with_id)
+    chain = [docs, flat, out, with_id, ser]
+    assert [n_projects(b) - n_projects(a) for a, b in zip(chain, chain[1:])] == [1, 6, 1, 1]
+
+    nodes = json.loads(ser._jdf.queryExecution().optimizedPlan().toJSON())
+    assert sum(node["class"].endswith(".Join") for node in nodes) == 1
+    physical = ser._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"BroadcastExchange [^\n]*\n\s*\+- LocalTableScan ", physical), physical
+    assert physical.count("BroadcastExchange") == 1
 
 
 def _expression_lists(value):

@@ -10,6 +10,7 @@ import urllib.error
 import urllib.request
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from kinesis2elastic_spark.operators.pipeline_dsl import fixture_spec
@@ -51,24 +52,29 @@ def _post_envelope(url, log_group, messages):
         assert resp.status == 200
 
 
-def _file_transport(out_dir: str):
+def _file_transport(out_dir: str, status=lambda n: 200):
     """Bulk transport that records each request body in a file of its own
     under ``out_dir``: it runs in the executors' Python workers, so the
     test reads the files back; a list in the test process would stay
-    empty."""
+    empty.  ``status(n)`` scripts the answer to the n-th request (counted
+    across processes by the files already written)."""
 
     def transport(url, body, headers):
-        with open(os.path.join(out_dir, f"{uuid.uuid4().hex}.ndjson"), "wb") as f:
+        code = status(len(os.listdir(out_dir)))
+        with open(os.path.join(out_dir, f"{uuid.uuid4().hex}-{code}.ndjson"), "wb") as f:
             f.write(body)
-        return 200, {"errors": False}
+        return code, {"errors": False}
 
     return transport
 
 
-def _delivered(out_dir: str) -> list[tuple[str, dict]]:
-    """(_id, document) of every bulk item the sink sent."""
+def _delivered(out_dir: str, accepted: bool = True) -> list[tuple[str, dict]]:
+    """(_id, document) of every bulk item the sink sent and the transport
+    accepted (``accepted=False``: refused)."""
     items = []
     for name in sorted(os.listdir(out_dir)):
+        if name.endswith("-200.ndjson") != accepted:
+            continue
         with open(os.path.join(out_dir, name)) as f:
             lines = f.read().splitlines()
         for action, doc in zip(lines[::2], lines[1::2]):
@@ -293,3 +299,61 @@ def test_service_metrics_scrapeable(spark, tmp_path):
     finally:
         spark.streams.removeListener(listener)
         receiver.stop()
+
+
+def test_undelivered_batch_is_not_committed_then_replays(spark, tmp_path):
+    """A 503 storm longer than the sink's retries fails the batch: the
+    query stops with the error and commits nothing.  A second run on the
+    same checkpoint replays the batch and delivers every _id once."""
+    from pyspark.errors import StreamingQueryException
+
+    receiver = FirehoseReceiver(str(tmp_path / "spool")).start()
+    _post_envelope(receiver.url, "/aws/app/a", ["m1", "m2"])
+    _post_envelope(receiver.url, "/aws/app/b", ["m3"])
+    receiver.stop()
+    ckpt = tmp_path / "ckpt"
+
+    storm = tmp_path / "storm"
+    storm.mkdir()
+    sink = BulkSink("http://fake:9200", "logs", _file_transport(str(storm), status=lambda n: 503))
+    q = run_service(spark, receiver.spool_dir, sink, checkpoint_dir=str(ckpt))
+    with pytest.raises(StreamingQueryException, match="not delivered"):
+        q.awaitTermination()
+    assert q.exception() is not None
+    assert (ckpt / "offsets" / "0").exists()
+    assert not (ckpt / "commits").exists() or not os.listdir(ckpt / "commits")
+    refused = {_id for _id, _ in _delivered(str(storm), accepted=False)}
+    assert len(refused) == 3
+
+    good = tmp_path / "good"
+    good.mkdir()
+    sink = BulkSink("http://fake:9200", "logs", _file_transport(str(good)))
+    q = run_service(spark, receiver.spool_dir, sink, checkpoint_dir=str(ckpt))
+    q.awaitTermination()
+    assert q.exception() is None
+    assert (ckpt / "commits" / "0").exists()
+    ids = [_id for _id, _ in _delivered(str(good))]
+    assert sorted(ids) == sorted(refused)  # every _id, each exactly once
+
+
+def test_batch_done_reports_sink_retries(spark, tmp_path):
+    """The batch_done line sums the chunks' retries and post seconds: a
+    scripted transport answers 429 twice, then 200."""
+    from kinesis2elastic_spark.logs import StructuredLogger
+
+    lines = []
+    receiver = FirehoseReceiver(str(tmp_path / "spool")).start()
+    _post_envelope(receiver.url, "/aws/app", ["m1", "m2"])
+    receiver.stop()
+    out_dir = tmp_path / "bulk"
+    out_dir.mkdir()
+    sink = BulkSink("http://fake:9200", "logs", _file_transport(str(out_dir), status=lambda n: 429 if n < 2 else 200))
+    q = run_service(spark, receiver.spool_dir, sink, checkpoint_dir=str(tmp_path / "ckpt"),
+                    logger=StructuredLogger("ingest", level="info", sink=lines.append))
+    q.awaitTermination()
+
+    (done,) = [r for r in map(json.loads, lines) if r["event"] == "batch_done"]
+    assert done["n_chunks"] == 1 and done["n_items"] == 2
+    assert done["retries"] == 2
+    assert done["post_s"] >= 0.3  # 0.1 s + 0.2 s of backoff
+    assert len(_delivered(str(out_dir))) == 2

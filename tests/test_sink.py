@@ -50,9 +50,10 @@ def test_retry_backoff_on_overload():
         return s, {"errors": False}
 
     sleeps = []
-    status, _ = post_with_retry(transport, "u", b"", {}, sleep=sleeps.append)
+    status, _, attempts = post_with_retry(transport, "u", b"", {}, sleep=sleeps.append)
     assert status == 200
     assert calls == [503, 429, 200]
+    assert attempts == 3
     assert sleeps == [0.1, 0.2]  # exponential
 
 
@@ -60,8 +61,26 @@ def test_no_retry_on_client_error():
     def transport(url, body, headers):
         return 400, {"errors": True}
 
-    status, _ = post_with_retry(transport, "u", b"", {}, sleep=lambda s: None)
+    status, _, attempts = post_with_retry(transport, "u", b"", {}, sleep=lambda s: None)
     assert status == 400
+    assert attempts == 1
+
+
+def test_chunk_reports_retries_and_post_seconds():
+    """A scripted transport answers 429 twice, then 200: the chunk summary
+    carries the two retries and the seconds spent posting, including the
+    0.1 s + 0.2 s of backoff."""
+    statuses = iter([429, 429, 200])
+
+    def transport(url, body, headers):
+        return next(statuses), {"errors": False}
+
+    sink = BulkSink("http://fake:9200", "logs", transport)
+    rows = [{"_id": f"id{i}", "doc_json": json.dumps({"n": i})} for i in range(3)]
+    (result,) = sink.write_partition(iter(rows))
+    assert result["status"] == 200 and result["n_items"] == 3
+    assert result["retries"] == 2
+    assert 0.3 <= result["post_s"] < 5
 
 
 def test_write_batch_idempotent_ids(spark, sf_dir):
