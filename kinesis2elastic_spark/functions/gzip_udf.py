@@ -4,9 +4,15 @@ main.go:471-479 after base64-decoding it at main.go:463-470).
 
 Pandas UDFs (not row-at-a-time) so the payload batches cross the JVM↔Python
 boundary once per Arrow batch.  At 100 TB the gunzip is embarrassingly
-parallel and CPU-bound; throughput scales linearly with cores and the only
-tuning knob that matters is ``spark.sql.execution.arrow.maxRecordsPerBatch``
+parallel and CPU-bound; throughput scales linearly with cores.  Two costs
+decide it.  Per Arrow batch, ``spark.sql.execution.arrow.maxRecordsPerBatch``
 (default 10k — fine for ~1 KB log payloads, lower it for multi-MB blobs).
+Per task, the Python worker's start-of-task set-up: on CPython < 3.13
+PySpark's ``importlib.invalidate_caches()`` re-read ``pyspark.zip``'s
+directory once per imported subpackage, about 0.65 s of CPU on every task
+of every micro-batch, which the daemon entry of ``session.get_spark``
+(``worker_daemon``) removes.  The UDFs pickle by value, so that cost
+could not be removed from inside this package's import.
 
 Malformed input policy: return NULL instead of raising, so one bad record
 dead-letters (filterable as ``IS NULL``) rather than failing the whole batch

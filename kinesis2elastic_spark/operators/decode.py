@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
@@ -43,24 +43,76 @@ from ..schemas import CLOUDWATCH_PAYLOAD
 # Library transforms (pure DataFrame -> DataFrame)
 # --------------------------------------------------------------------------
 
-def safe_unbase64(col: Column) -> Column:
-    """NULL-on-invalid base64 decode.  Spark's ``unbase64`` *throws* on
-    malformed input (``IllegalArgumentException: Last unit does not have
-    enough valid bits``), which would fail the whole batch — the reference
-    behavior (main.go:463-470) we deliberately improve on.  Guard with a
-    strict RFC-4648 shape check (padding required, like Go's StdEncoding)
-    so bad records dead-letter instead."""
-    clean = F.regexp_replace(col, r"\s", "")
-    valid = clean.rlike("^(?:[A-Za-z0-9+/]{4})*(?:[A-Za-z0-9+/]{2}==|[A-Za-z0-9+/]{3}=)?$")
-    return F.when(col.isNotNull() & valid, F.unbase64(clean))
+_B64_SHAPE = "^(?:[A-Za-z0-9+/]{4})*(?:[A-Za-z0-9+/]{2}==|[A-Za-z0-9+/]{3}=)?$"
 
 
-def message_json_or_text(col: Column) -> Column:
-    """A12 (main.go:494-510): keep a valid-JSON message verbatim, else wrap
-    the raw text as ``{"text": "<message>"}``."""
-    return F.when(F.get_json_object(col, "$").isNotNull(), col).otherwise(
-        F.to_json(F.struct(col.alias("text")))
+def safe_unbase64(col: str) -> str:
+    """SQL text of a NULL-on-invalid base64 decode of the expression
+    ``col``.  Spark's ``unbase64`` *throws* on malformed input
+    (``IllegalArgumentException: Last unit does not have enough valid
+    bits``), which would fail the whole batch — the reference behavior
+    (main.go:463-470) we deliberately improve on.  Guard with a strict
+    RFC-4648 shape check (padding required, like Go's StdEncoding) so bad
+    records dead-letter instead."""
+    clean = rf"regexp_replace({col}, '\\s', '')"
+    return f"CASE WHEN {col} IS NOT NULL AND {clean} RLIKE '{_B64_SHAPE}' THEN unbase64({clean}) END"
+
+
+def message_json_or_text(col: str) -> str:
+    """SQL text of A12 (main.go:494-510) over the expression ``col``: keep a
+    valid-JSON message verbatim, else wrap the raw text as
+    ``{"text": "<message>"}``."""
+    return (
+        f"CASE WHEN get_json_object({col}, '$') IS NOT NULL THEN {col} "
+        f"ELSE to_json(named_struct('text', {col})) END"
     )
+
+
+# decode_envelopes as constant SQL text, built once at import: the chain
+# runs once per streaming query, and parsing text is cheaper for the driver
+# than composing the same plan from Column objects.  Only the gunzip (a
+# pandas UDF, no SQL name) stays a Column, between _RAW and _PAYLOAD.
+_RECORDS = ("requestId", "timestamp AS _req_ms", "explode(records) AS _rec")   # one row per record
+_RAW = ("requestId", "_req_ms", f"{safe_unbase64('_rec.data')} AS _raw")        # A8
+_PAYLOAD = (                                                                     # A10
+    "requestId", "_req_ms", "_raw", "_payload_json",
+    f"from_json(_payload_json, '{CLOUDWATCH_PAYLOAD.simpleString()}') AS _payload",
+)
+# Materialize payload scalars + the per-record error BEFORE the explode.
+# Leaving `_payload` unexpanded here makes every post-explode row (one per
+# logEvent) re-run from_json(gunzip(...)) on the full multi-KB payload —
+# measured 115s vs ~2s at sf0.1.  One row per *record* is the right place
+# to pay for parse; the explode then carries small scalars.
+_PARSED = (
+    "requestId", "_req_ms",
+    "_payload.messageType AS _messageType",
+    "_payload.owner AS _owner",
+    "_payload.logGroup AS _logGroup",
+    "_payload.logStream AS _logStream",
+    "_payload.subscriptionFilters AS _subscriptionFilters",
+    "_payload.logEvents AS _logEvents",
+    "CASE WHEN _raw IS NULL THEN 'base64 decode failed'"
+    " WHEN _payload_json IS NULL THEN 'gzip decompress failed'"
+    " WHEN _payload IS NULL OR get_json_object(_payload_json, '$') IS NULL THEN 'json parse failed'"
+    " ELSE CAST(NULL AS STRING) END AS _record_error",
+)
+_EVENTS = (
+    "requestId", "_req_ms", "_messageType", "_owner", "_logGroup", "_logStream",
+    "_subscriptionFilters", "_record_error",
+    "explode_outer(_logEvents) AS _ev",                                          # A11
+)
+_DOCUMENTS = (
+    "requestId",
+    "timestamp_millis(_req_ms) AS `timestamp`",                                  # A13 (@timestamp)
+    "named_struct('data', named_struct("                                         # A14 restructure
+    "'messageType', _messageType, 'owner', _owner, 'logGroup', _logGroup,"
+    " 'logStream', _logStream, 'subscriptionFilters', _subscriptionFilters,"
+    " 'logEvents', named_struct('id', _ev.id,"
+    " 'timestamp', timestamp_millis(_ev.`timestamp`),"                           # A13 event time
+    f" 'message', CASE WHEN _ev.message IS NOT NULL THEN {message_json_or_text('_ev.message')} END)"
+    ")) AS record",
+    "coalesce(_record_error, CASE WHEN _ev IS NULL THEN 'no logEvents' END) AS error_message",
+)
 
 
 def decode_envelopes(env_df: DataFrame) -> DataFrame:
@@ -72,78 +124,13 @@ def decode_envelopes(env_df: DataFrame) -> DataFrame:
     records array<struct<data:string>>).  Output: one row per logEvent with
     the Document nesting plus an ``error_message`` dead-letter column.
     """
-    rec = env_df.select(
-        "requestId",
-        F.col("timestamp").alias("_req_ms"),
-        F.explode("records").alias("_rec"),
-    )
-    staged = (
-        rec.withColumn("_raw", safe_unbase64(F.col("_rec.data")))       # A8
-        .withColumn("_payload_json", gunzip_text(F.col("_raw")))        # A9
-        .withColumn("_payload", F.from_json("_payload_json", CLOUDWATCH_PAYLOAD))  # A10
-    )
-    # Materialize payload scalars + the per-record error BEFORE the explode.
-    # Leaving `_payload` unexpanded here makes every post-explode row (one
-    # per logEvent) re-run from_json(gunzip(...)) on the full multi-KB
-    # payload — measured 115s vs ~2s at sf0.1.  One row per *record* is the
-    # right place to pay for parse; the explode then carries small scalars.
-    record_error = (
-        F.when(F.col("_raw").isNull(), F.lit("base64 decode failed"))
-        .when(F.col("_payload_json").isNull(), F.lit("gzip decompress failed"))
-        .when(
-            F.col("_payload").isNull()
-            | F.get_json_object("_payload_json", "$").isNull(),
-            F.lit("json parse failed"),
-        )
-        .otherwise(F.lit(None).cast("string"))
-    )
-    parsed = staged.select(
-        "requestId",
-        "_req_ms",
-        F.col("_payload.messageType").alias("_messageType"),
-        F.col("_payload.owner").alias("_owner"),
-        F.col("_payload.logGroup").alias("_logGroup"),
-        F.col("_payload.logStream").alias("_logStream"),
-        F.col("_payload.subscriptionFilters").alias("_subscriptionFilters"),
-        F.col("_payload.logEvents").alias("_logEvents"),
-        record_error.alias("_record_error"),
-    )
-    events = parsed.select(
-        "requestId",
-        "_req_ms",
-        "_messageType",
-        "_owner",
-        "_logGroup",
-        "_logStream",
-        "_subscriptionFilters",
-        "_record_error",
-        F.explode_outer("_logEvents").alias("_ev"),                     # A11
-    )
-    error_message = F.coalesce(
-        F.col("_record_error"),
-        F.when(F.col("_ev").isNull(), F.lit("no logEvents")),
-    )
-    return events.select(
-        "requestId",
-        F.timestamp_millis("_req_ms").alias("timestamp"),               # A13 (@timestamp)
-        F.struct(                                                       # A14 restructure
-            F.struct(
-                F.col("_messageType").alias("messageType"),
-                F.col("_owner").alias("owner"),
-                F.col("_logGroup").alias("logGroup"),
-                F.col("_logStream").alias("logStream"),
-                F.col("_subscriptionFilters").alias("subscriptionFilters"),
-                F.struct(
-                    F.col("_ev.id").alias("id"),
-                    F.timestamp_millis("_ev.timestamp").alias("timestamp"),  # A13 event time
-                    F.when(
-                        F.col("_ev.message").isNotNull(),
-                        message_json_or_text(F.col("_ev.message")),
-                    ).alias("message"),
-                ).alias("logEvents"),
-            ).alias("data")
-        ).alias("record"),
-        error_message.alias("error_message"),
+    raw = env_df.selectExpr(*_RECORDS).selectExpr(*_RAW)
+    staged = raw.withColumn("_payload_json", gunzip_text(F.col("_raw")))        # A9
+    return (
+        staged.selectExpr(*_PAYLOAD)
+        .selectExpr(*_PARSED)
+        .selectExpr(*_EVENTS)
+        .selectExpr(*_DOCUMENTS)
     )
 
 
@@ -228,15 +215,16 @@ def q_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_json_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A12: json-or-text message fallback (main.go:494-510): valid JSON
-    passes through verbatim, anything else becomes {"text": ...}."""
+    passes through verbatim, anything else becomes {"text": ...}; the
+    same SQL text as the decode chain's."""
     e = load(spark, sf_dir, "events")
     msg = F.when(F.col("event_id") % 3 == 0, F.concat(F.lit("plain text event "), F.col("event_id"))).otherwise(
         F.col("props")
     )
-    return e.select(
+    return e.select("event_id", msg.alias("message_in")).select(
         "event_id",
-        msg.alias("message_in"),
-        message_json_or_text(msg).alias("message_out"),
+        "message_in",
+        F.expr(message_json_or_text("message_in")).alias("message_out"),
     )
 
 

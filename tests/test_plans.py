@@ -74,14 +74,27 @@ def test_minhash_band_join_shuffles_ids_only(spark, sf_dir):
 
 def test_udf_does_not_block_envelope_pruning(spark, sf_dir):
     """The decode chain must parse the payload once per record (not per
-    exploded event): the plan has exactly one ArrowEvalPython feeding the
-    generator, never above it."""
+    exploded event): above the input's own plan there is exactly one
+    ArrowEvalPython, the gunzip, placed between the ``records`` explode and
+    the ``logEvents`` explode that it feeds, never above the latter."""
+    import re
+
     from kinesis2elastic_spark.operators.decode import build_envelopes, decode_envelopes
 
     plan = formatted_plan(decode_envelopes(build_envelopes(spark, sf_dir)))
-    gen_pos = plan.find("Generate")
-    arrow_pos = plan.find("ArrowEvalPython")
-    assert arrow_pos != -1 and gen_pos != -1
+    # Node details come in operator-id order: bottom-up along this linear plan.
+    nodes = [
+        (m.group(1), section)
+        for section in plan.split("\n\n")
+        if (m := re.match(r"\(\d+\) (\w+)", section))
+    ]
+    records = [i for i, (n, s) in enumerate(nodes) if n == "Generate" and "explode(records#" in s]
+    events = [i for i, (n, s) in enumerate(nodes) if n == "Generate" and "explode(_logEvents#" in s]
+    assert len(records) == 1 and len(events) == 1, plan
+    chain_udfs = [i for i, (n, _) in enumerate(nodes) if n == "ArrowEvalPython" and i > records[0]]
+    assert len(chain_udfs) == 1, plan
+    assert records[0] < chain_udfs[0] < events[0]
+    assert "gunzip_text(" in nodes[chain_udfs[0]][1]
 
 
 def test_decontam_broadcasts_benchmark_side(spark, sf_dir):

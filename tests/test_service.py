@@ -130,34 +130,30 @@ def test_full_service_e2e(spark, tmp_path):
 
 
 def test_service_checkpoint_no_redelivery(spark, tmp_path):
-    """A7 semantics: a second drain over the same checkpoint reprocesses
-    nothing (commit), and new spool files are picked up (incremental)."""
-    receiver = FirehoseReceiver(str(tmp_path / "spool2")).start()
-    batches = []
+    """A7 semantics: three drains over one checkpoint deliver 2, then 0
+    (the committed batch is not reprocessed), then 1 document (the new
+    spool file is picked up), and every _id reaches the sink once."""
+    receiver = FirehoseReceiver(str(tmp_path / "spool")).start()
+    sink_dirs = [tmp_path / f"bulk{i}" for i in range(3)]
 
-    def transport(url, body, headers):
-        return 200, {"errors": False}
-
-    sink = BulkSink("http://fake:9200", "logs", transport)
-    seen_counts = []
-
-    import kinesis2elastic_spark.service as svc
-
-    orig = svc.decode_envelopes
+    def drain(out_dir):
+        out_dir.mkdir()
+        sink = BulkSink("http://fake:9200", "logs", _file_transport(str(out_dir)))
+        run_service(spark, receiver.spool_dir, sink, checkpoint_dir=str(tmp_path / "ckpt")).awaitTermination()
+        return _delivered(str(out_dir))
 
     _post_envelope(receiver.url, "/aws/app", ["m1", "m2"])
-    q = run_service(spark, receiver.spool_dir, sink, checkpoint_dir=str(tmp_path / "ck2"))
-    q.awaitTermination()
-    # drain again with no new data
-    q2 = run_service(spark, receiver.spool_dir, sink, checkpoint_dir=str(tmp_path / "ck2"))
-    q2.awaitTermination()
-    # add one more envelope, drain again
+    first = drain(sink_dirs[0])
+    second = drain(sink_dirs[1])  # no new data
     _post_envelope(receiver.url, "/aws/app", ["m3"])
-    q3 = run_service(spark, receiver.spool_dir, sink, checkpoint_dir=str(tmp_path / "ck2"))
-    q3.awaitTermination()
+    third = drain(sink_dirs[2])
     receiver.stop()
-    lp = q3.lastProgress
-    assert lp is None or lp["numInputRows"] <= 1  # only the new envelope
+
+    assert [len(first), len(second), len(third)] == [2, 0, 1]
+    ids = [_id for _id, _ in first + second + third]
+    assert len(ids) == len(set(ids)) == 3
+    messages = sorted(json.loads(doc["records.data.logEvents.message"])["text"] for _, doc in first + third)
+    assert messages == ["m1", "m2", "m3"]
 
 
 def test_stream_stream_join(spark, tmp_path):

@@ -101,7 +101,7 @@ def main() -> int:
         ok = (sn, sc, sh) == (on, oc, oh)
         if ok:
             n_pass += 1
-            print(f"PASS  {name}: {sn} rows  ({time.time()-t0:.1f}s)")
+            print(f"PASS  {name}: {sn} rows  hash {sh}  ({time.time()-t0:.1f}s)")
         else:
             n_fail += 1
             print(f"FAIL  {name}: spark=({sn},{sc},{sh}) duckdb=({on},{oc},{oh})")
