@@ -45,14 +45,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import DataStreamWriter
 
-# the reference's measured operating envelope (BASELINE.md)
-FLUSH_BYTES = 5_000_000  # main.go:46 flushBytes
+from .streaming.sink import DEFAULT_FLUSH_BYTES
+
+# the reference's measured operating envelope (BASELINE.md); the bulk
+# flush threshold is the in-repo sink's (main.go:46 flushBytes)
 FLUSH_INTERVAL_SECS = 5  # main.go:436 FlushInterval
 SINK_WORKERS = 3  # main.go:45 numWorkers
-RETRY_STATUSES = (429, 502, 503, 504)  # main.go:412 RetryOnStatus
 RETRY_COUNT = 6  # exponential backoff envelope (main.go:402-409)
 RETRY_WAIT_SECS = 10  # base wait between bulk retries
-SHUTDOWN_DRAIN_SECS = 30  # main.go:48 shutdownTimeout
 
 # Maven coordinate TEMPLATES for spark-submit --packages.  This sandbox
 # has no network, so these are transcribed from the connectors' public
@@ -90,7 +90,7 @@ def opensearch_sink_options(
     opts = {
         f"{p}.nodes": nodes,
         f"{p}.resource": index,
-        f"{p}.batch.size.bytes": str(FLUSH_BYTES),
+        f"{p}.batch.size.bytes": str(DEFAULT_FLUSH_BYTES),
         f"{p}.batch.write.retry.count": str(RETRY_COUNT),
         f"{p}.batch.write.retry.wait": f"{RETRY_WAIT_SECS}s",
         # serverless/managed endpoints sit behind a load balancer: client

@@ -6,6 +6,9 @@ library.  This module re-expresses the needed subset as plain regexes so the
 extraction runs JVM-side (``java.util.regex``, whole-stage codegen, no
 Python in the hot path): one ``regexp_replace`` per line rewrites a match
 to a delimited list of every capture (:meth:`CompiledGrok.captures`).
+:class:`CompiledGrok` renders that extraction as SQL text, which the
+pipeline interpreter (``pipeline_dsl``) and ``pipeline.q_grok`` run with
+``selectExpr``.
 
 Compilation contract:
 
@@ -30,12 +33,9 @@ group does not participate in the match; ``:long``/``:int`` cast to BIGINT,
 from __future__ import annotations
 
 import re
-from collections.abc import Callable
 from dataclasses import dataclass
-from typing import NamedTuple
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from ..schemas import sql_literal
 
 # Stock patterns (subset used by the reference + common companions),
 # rewritten with non-capturing groups only.  Definitions follow the public
@@ -154,17 +154,6 @@ class GrokField:
     type: str   # "string" | "long" | "double"
 
 
-class Render(NamedTuple):
-    """How an expression is built: ``call(name, *args)`` applies a Spark
-    SQL function and ``lit(value)`` makes a literal.  :data:`COLUMNS`
-    builds Columns; the pipeline interpreter renders SQL text."""
-
-    call: Callable
-    lit: Callable
-
-
-COLUMNS = Render(F.call_function, F.lit)
-
 # Delimiter of the single-pass capture list.  A source that contains it
 # takes the per-group fallback, so the result stays exact for every input.
 SEP = "\u0001"
@@ -194,38 +183,45 @@ class CompiledGrok:
         """``SEP$1SEP$2…``: a group that did not participate gives ''."""
         return "".join(f"{SEP}${f.group}" for f in self.fields) or SEP
 
-    def captures(self, src, r: Render):
-        """One regex pass per line: ``['', g1, …, gn]`` when the template
-        matches ``src``, an array of at most one element when it does not,
-        NULL for a NULL ``src``.  ``regexp_replace`` rewrites a matching
-        line to :attr:`replacement` and ``split`` cuts it at ``SEP``; a line
-        that does not match comes back unchanged.  A line containing
-        ``SEP`` is extracted group by group instead."""
-        fallback = r.call(
-            "if",
-            r.call("rlike", src, r.lit(self.regex)),
-            r.call("array", r.lit(""), *[
-                r.call("regexp_extract", src, r.lit(self.regex), r.lit(f.group)) for f in self.fields
-            ] or [r.lit("")]),
-            r.lit(None),
-        )
-        single = r.call(
-            "split",
-            r.call("regexp_replace", src, r.lit(self.whole_regex), r.lit(self.replacement)),
-            r.lit(SEP),
-            r.lit(-1),
-        )
-        return r.call("if", r.call("contains", src, r.lit(SEP)), fallback, single)
+    def captures(self, src: str) -> str:
+        """One regex pass per line, as SQL text over the SQL expression
+        ``src``: ``['', g1, …, gn]`` when the template matches, an array of
+        at most one element when it does not, NULL for a NULL ``src``.
+        ``regexp_replace`` rewrites a matching line to :attr:`replacement`
+        and ``split`` cuts it at ``SEP``; a line that does not match comes
+        back unchanged.  A line containing ``SEP`` is extracted group by
+        group instead.
 
-    def matched(self, captures, r: Render):
+        Measured with ``q_grok`` at sf0.1 (100k lines, all 14 fields,
+        local[4] on a shared 4-vCPU host, noop write, warm runs): the
+        single pass took 1.22-1.45 s against 4.05-4.44 s for one
+        ``regexp_extract`` per field, each a separate ``find()`` of the
+        same regex.  A reader of one field pays for the whole list.
+        Spark 4 evaluates a ``nullif`` argument in a projection of its
+        own, so an expression that reads both :meth:`matched` and a
+        :meth:`field` of an unmaterialized list computes the list twice;
+        the pipeline interpreter materializes it first."""
+        rx = sql_literal(self.regex)
+        groups = ", ".join(f"regexp_extract({src}, {rx}, {f.group})" for f in self.fields) or "''"
+        fallback = f"if(rlike({src}, {rx}), array('', {groups}), NULL)"
+        single = (
+            f"split(regexp_replace({src}, {sql_literal(self.whole_regex)}, {sql_literal(self.replacement)}), "
+            f"{sql_literal(SEP)}, -1)"
+        )
+        return f"if(contains({src}, {sql_literal(SEP)}), {fallback}, {single})"
+
+    def matched(self, captures: str) -> str:
         """The match flag of a :meth:`captures` array (false for NULL)."""
-        return r.call("isnotnull", r.call("try_element_at", captures, r.lit(2)))
+        return f"isnotnull(try_element_at({captures}, 2))"
 
-    def field(self, captures, f: GrokField, r: Render):
+    def field(self, captures: str, f: GrokField) -> str:
         """Field ``f`` of a :meth:`captures` array, typed; NULL when the
-        template did not match or the group did not participate."""
-        value = r.call("nullif", r.call("try_element_at", captures, r.lit(f.group + 1)), r.lit(""))
-        return r.call(_CASTS[f.type], value) if f.type in _CASTS else value
+        template did not match or the group did not participate (every
+        supported pattern captures at least one character, so the ''
+        of a non-participating group is faithfully NULL, as the grok
+        processor sets a field only when it is captured)."""
+        value = f"nullif(try_element_at({captures}, {f.group + 1}), '')"
+        return f"{_CASTS[f.type]}({value})" if f.type in _CASTS else value
 
 
 _TYPE_MAP = {None: "string", "int": "long", "long": "long", "float": "double", "double": "double"}
@@ -337,36 +333,6 @@ def named_group_regex(compiled: CompiledGrok, prefix: str = "g") -> str:
             out.append(ch)
         i += 1
     return "".join(out)
-
-
-def grok_columns(col: Column, compiled: CompiledGrok, prefix: str = "") -> dict[str, Column]:
-    """Every grok field as a typed Column, read from the single-pass
-    :meth:`CompiledGrok.captures` array, so one regex evaluation per line
-    serves all fields (Spark computes the shared array once per row).
-
-    Measured with ``q_grok`` at sf0.1 (100k lines, all 14 fields,
-    local[4] on a shared 4-vCPU host, noop write, warm runs): the single
-    pass took 1.22-1.45 s against 4.05-4.44 s for one ``regexp_extract``
-    per field, each a separate ``find()`` of the same regex.  A caller
-    that reads one field pays for the whole list (``q_case_when`` 1.0 s →
-    1.46 s there).  Spark 4 evaluates a ``nullif`` argument in a
-    projection of its own, so a caller that also reads
-    :func:`grok_matched` computes the list twice (``q_dead_letter`` 1.12 s
-    → 1.65 s); the pipeline interpreter materializes the list first.
-
-    A group that does not participate in the match yields NULL, matching
-    the grok processor's set-only-when-captured behavior (the capture is
-    '' for a non-participating group; every supported pattern captures at
-    least one char, so '' → NULL is faithful)."""
-    captures = compiled.captures(col, COLUMNS)
-    return {prefix + f.name: compiled.field(captures, f, COLUMNS) for f in compiled.fields}
-
-
-def grok_matched(col: Column, compiled: CompiledGrok) -> Column:
-    """True iff the whole template matches somewhere in the string —
-    the grok processor's success/failure signal (failure triggers
-    on_failure dead-lettering, ingest/axway-ingest.json:145-152)."""
-    return compiled.matched(compiled.captures(col, COLUMNS), COLUMNS)
 
 
 # The reference's two grok templates, verbatim semantics

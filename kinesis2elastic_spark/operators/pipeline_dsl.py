@@ -5,13 +5,14 @@ over flat dotted-path columns.
 
 The reference keeps its transformation logic *as data* (OpenSearch
 processor JSON), so the engine interprets that data shape instead of
-hard-coding each chain; the service and ``pipeline.q_pipeline_axway`` both
-run specs through this one interpreter.  No per-document loop: the spec
-compiles, once per entry pipeline and input column list and without any
-Spark call, to SQL text.  Processors rewrite a symbolic environment
-(column name → SQL expression, plus the failure flag and message), and
-the environment becomes a projection list only where a later step needs a
-materialized column — a grok's capture array (one regex pass per line,
+hard-coding each chain; the service and the oracle queries of
+``operators/pipeline.py`` (one per processor, and the whole chain in
+``q_pipeline_axway``) all run specs through this one interpreter.  No
+per-document loop: the spec compiles, once per entry pipeline and input
+column list and without any Spark call, to SQL text.  Processors rewrite
+a symbolic environment (column name → SQL expression, plus the failure
+flag and message), and the environment becomes a projection list only
+where a later step needs a materialized column — a grok's capture array (one regex pass per line,
 ``grok.CompiledGrok.captures``), a grok's fields (so later expressions
 read them instead of the array), and the IP key of each geoip lookup.
 Adjacent geoip processors on one field share one broadcast join.  Each
@@ -56,8 +57,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import sql_ident as _q
+from ..schemas import sql_literal as _lit
 from ..sources.geoip import ip_to_int_sql
-from .grok import Render, compile_grok
+from .grok import compile_grok
 
 _FAILED = "__pipeline_failed"
 _FAILMSG = "__pipeline_failmsg"
@@ -77,29 +79,6 @@ def fixture_spec() -> dict[str, dict]:
     ingest/axway-ingest.json; its grok is ``grok.AXWAY_ACCESS_TEMPLATE``."""
     with open(FIXTURE_SPEC) as f:
         return json.load(f)
-
-
-def _lit(value) -> str:
-    """SQL literal of a spec value, typed as ``F.lit`` types it.  Strings
-    are escaped for Spark's default string-literal rules."""
-    if value is None:
-        return "NULL"
-    if isinstance(value, bool):
-        return "true" if value else "false"
-    if isinstance(value, int):
-        return str(value) if -(2**31) <= value < 2**31 else f"{value}L"
-    if isinstance(value, float):
-        return f"{value!r}D"
-    if isinstance(value, str):
-        return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
-    raise ValueError(f"unsupported literal in pipeline spec: {value!r}")
-
-
-def _call(name: str, *args: str) -> str:
-    return f"{name}({', '.join(args)})"
-
-
-_SQL = Render(_call, _lit)
 
 
 def _painless_path(expr: str) -> str:
@@ -242,11 +221,11 @@ class PipelineInterpreter:
             # ES tries each pattern in turn; only the single-pattern form is supported
             raise ValueError(f"grok on [{field}]: expected exactly one pattern, got {len(patterns)}")
         compiled = compile_grok(patterns[0])
-        env.flush({_GROK: compiled.captures(env.get(field), _SQL)})
+        env.flush({_GROK: compiled.captures(env.get(field))})
         src, captures = env.get(field), _q(_GROK)
-        matched = compiled.matched(captures, _SQL)
+        matched = compiled.matched(captures)
         for f in compiled.fields:
-            env.write(f.name, compiled.field(captures, f, _SQL), matched)
+            env.write(f.name, compiled.field(captures, f), matched)
         # ignore_missing: a NULL source is a skip, not a failure (json:10)
         env.fail(f"({src}) IS NOT NULL AND NOT {matched}", f"grok: no match for field [{field}]")
         env.flush()
@@ -289,7 +268,8 @@ class PipelineInterpreter:
 
     def _date(self, env: _Env, spec: dict) -> None:
         value = env.get(spec["field"])
-        parsed = _call("coalesce", *[_call("try_to_timestamp", value, _lit(fmt)) for fmt in spec["formats"]])
+        tries = ", ".join(f"try_to_timestamp({value}, {_lit(fmt)})" for fmt in spec["formats"])
+        parsed = f"coalesce({tries})"
         # ignore_failure: keep prior @timestamp when no format parses
         env.write(spec.get("target_field", "@timestamp"), parsed, f"{parsed} IS NOT NULL", "timestamp")
 

@@ -26,6 +26,22 @@ def sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def sql_literal(value) -> str:
+    """SQL literal of a Python value, typed as ``F.lit`` types it.
+    Strings are escaped for Spark's default string-literal rules."""
+    if value is None:
+        return "NULL"
+    if isinstance(value, bool):
+        return "true" if value else "false"
+    if isinstance(value, int):
+        return str(value) if -(2**31) <= value < 2**31 else f"{value}L"
+    if isinstance(value, float):
+        return f"{value!r}D"
+    if isinstance(value, str):
+        return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    raise ValueError(f"unsupported SQL literal: {value!r}")
+
+
 # One logEvent inside a CloudWatch payload (incoming/firehose.go:40-44).
 LOG_EVENT = T.StructType(
     [

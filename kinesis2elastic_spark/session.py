@@ -28,6 +28,7 @@ local[32] for tests and on a 1000-executor cluster at 100 TB:
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -39,8 +40,46 @@ DAEMON_MODULE = "kinesis2elastic_spark.worker_daemon"
 _PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+_ZIPS: dict[tuple[str, str], str] = {}
+
+
+def package_zip() -> str:
+    """A zip of this package's ``.py`` sources, named by their digest:
+    ``$TMPDIR/kinesis2elastic_spark_pkg-<digest>.zip``.  A changed source
+    tree gets a zip of its own, built from the same bytes the digest
+    covers; an unchanged one reuses the zip an earlier process built.
+    The sources are read once per process (the first call), so every
+    session of a driver ships the code that driver started with."""
+    pkg_root = os.path.dirname(os.path.abspath(__file__))
+    key = (pkg_root, tempfile.gettempdir())
+    if key in _ZIPS and os.path.exists(_ZIPS[key]):
+        return _ZIPS[key]
+    sources = {}
+    for dirpath, dirnames, filenames in os.walk(pkg_root):
+        dirnames.sort()
+        for fn in sorted(filenames):
+            if fn.endswith(".py"):
+                full = os.path.join(dirpath, fn)
+                with open(full, "rb") as f:
+                    sources[os.path.join("kinesis2elastic_spark", os.path.relpath(full, pkg_root))] = f.read()
+    digest = hashlib.sha256()
+    for name, data in sources.items():
+        digest.update(f"{name}\0{len(data)}\0".encode())
+        digest.update(data)
+    zip_path = os.path.join(key[1], f"kinesis2elastic_spark_pkg-{digest.hexdigest()[:16]}.zip")
+    if not os.path.exists(zip_path):
+        tmp = f"{zip_path}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
+            for name, data in sources.items():
+                zf.writestr(name, data)
+        os.replace(tmp, zip_path)
+    _ZIPS[key] = zip_path
+    return zip_path
+
+
 def ship_package(spark: SparkSession) -> None:
-    """Distribute this package to executor Python workers via addPyFile.
+    """Distribute this package to executor Python workers via addPyFile
+    of :func:`package_zip`.
 
     Functions/classes from this package pickle BY REFERENCE (module path),
     so executors must be able to import it.  Local runs from the repo cwd
@@ -48,24 +87,9 @@ def ship_package(spark: SparkSession) -> None:
     launched anywhere else — or a real cluster — needs the package shipped.
     A context that :func:`get_spark` builds also has the package's parent
     directory on its workers' ``PYTHONPATH``; the zip still serves one it
-    reuses and the sessions of :func:`tune_session`.
-    The zip is content-stable per version and built at most once."""
-    pkg_root = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(tempfile.gettempdir(), "kinesis2elastic_spark_pkg.zip")
-    if not os.path.exists(zip_path):
-        tmp = zip_path + ".tmp"
-        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-            for dirpath, _dirnames, filenames in os.walk(pkg_root):
-                for fn in filenames:
-                    if fn.endswith(".py"):
-                        full = os.path.join(dirpath, fn)
-                        rel = os.path.join(
-                            "kinesis2elastic_spark", os.path.relpath(full, pkg_root)
-                        )
-                        zf.write(full, rel)
-        os.replace(tmp, zip_path)
+    reuses and the sessions of :func:`tune_session`."""
     try:
-        spark.sparkContext.addPyFile(zip_path)
+        spark.sparkContext.addPyFile(package_zip())
     except Exception:
         pass  # already added in this context
 

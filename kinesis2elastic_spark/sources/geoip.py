@@ -3,9 +3,13 @@
 The reference calls the OpenSearch ``geoip`` processor twice on ``source.ip``
 (city db → source.geo, ASN db → source.as; ingest/axway-ingest.json:90-108).
 Spark-first equivalent: a **broadcast range join** against a CIDR-range
-dimension table (ip_lo..ip_hi as int64).  At 100 TB the dim stays a few MB
-(GeoLite2 scale: ~4M ranges ≈ 200 MB — still broadcastable; if not,
-bucket by /8 prefix and equi-join on the bucket before the range filter).
+dimension table (ip_lo..ip_hi as int64), which the pipeline interpreter's
+``geoip`` processor runs (``operators/pipeline_dsl.py``; adjacent geoip
+processors on one field share one join).  This module builds the
+dimension and the SQL of the IP → int64 key.  At 100 TB the dim stays a
+few MB (GeoLite2 scale: ~4M ranges ≈ 200 MB — still broadcastable; if
+not, bucket by /8 prefix and equi-join on the bucket before the range
+filter).
 
 No MaxMind data ships here; :func:`synthetic_geoip_dim` provides the
 deterministic stand-in ranges (FIXTURES.md §5) used by tests and oracle,
@@ -24,7 +28,6 @@ from __future__ import annotations
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 # (ip_lo, ip_hi, country, city, as_number, as_org) — 10.0.0.0-based ranges so
 # the synthesized test IPs (10.{user_id%200}.x.7) hit ~3/4 of the space and
@@ -69,26 +72,6 @@ def ip_to_int_sql(ip: str) -> str:
     return (
         f"CAST(element_at({p}, 1) AS BIGINT) * 16777216 + CAST(element_at({p}, 2) AS BIGINT) * 65536"
         f" + CAST(element_at({p}, 3) AS BIGINT) * 256 + CAST(element_at({p}, 4) AS BIGINT)"
-    )
-
-
-def geoip_enrich(df: DataFrame, dim: DataFrame, ip_col: str = "source.ip") -> DataFrame:
-    """Left broadcast range-join enrichment.  Output columns follow the
-    post-rename names of the reference chain (asn → source.as.number,
-    organization_name → source.as.organization.name,
-    ingest/axway-ingest.json:109-122)."""
-    ipint = F.expr(ip_to_int_sql(f"`{ip_col}`")).alias("_ip_int")
-    joined = df.withColumn("_ip_int", ipint).join(
-        F.broadcast(dim),
-        (F.col("_ip_int") >= F.col("ip_lo")) & (F.col("_ip_int") <= F.col("ip_hi")),
-        "left",
-    )
-    return (
-        joined.withColumn("source.geo.country_iso_code", F.col("geo_country"))
-        .withColumn("source.geo.city_name", F.col("geo_city"))
-        .withColumn("source.as.number", F.col("as_number"))
-        .withColumn("source.as.organization.name", F.col("as_org"))
-        .drop("_ip_int", "ip_lo", "ip_hi", "geo_country", "geo_city", "as_number", "as_org")
     )
 
 

@@ -140,7 +140,7 @@ def test_pattern_table_breadth_net_fields(spark):
     from pyspark.sql import Row
     from pyspark.sql import functions as F
 
-    from kinesis2elastic_spark.operators.grok import compile_grok, grok_columns
+    from kinesis2elastic_spark.operators.grok import compile_grok
 
     c = compile_grok(
         "%{COMMONMAC:mac} %{QS:agent} %{UNIXPATH:path} %{DATESTAMP:when}"
@@ -148,9 +148,8 @@ def test_pattern_table_breadth_net_fields(spark):
     df = spark.createDataFrame(
         [Row(line='aa:bb:cc:dd:ee:ff "Mozilla \\"5.0\\"" /var/log/app.log 03/22/2024 14:01:02')]
     )
-    out = df.select(
-        *[v.alias(k) for k, v in grok_columns(F.col("line"), c).items()]
-    ).first()
+    captures = c.captures("line")
+    out = df.select(*[F.expr(c.field(captures, f)).alias(f.name) for f in c.fields]).first()
     assert out["mac"] == "aa:bb:cc:dd:ee:ff"
     assert out["agent"] == '"Mozilla \\"5.0\\""'
     assert out["path"] == "/var/log/app.log"
@@ -197,13 +196,13 @@ def _reference(col, compiled):
 
 def test_single_pass_grok_matches_per_field_reference(spark):
     """Every field and the match flag of the single-pass grok equal the
-    per-field reference, through ``grok_columns``/``grok_matched`` and
-    through the interpreter, for both reference templates — over the
+    per-field reference, through ``CompiledGrok``'s SQL text and through
+    the interpreter, for both reference templates — over the
     benchmark generator's lines, the ``-`` variants, lines holding the
     capture delimiter, ``''`` and NULL."""
     from pyspark.sql import functions as F
 
-    from kinesis2elastic_spark.operators.grok import SEP, grok_columns, grok_matched
+    from kinesis2elastic_spark.operators.grok import SEP
     from kinesis2elastic_spark.operators.pipeline_dsl import PipelineInterpreter
 
     dash = 'gw01.example.com - - [13/Aug/2026:10:15:32 +0000]  "-" 400 - 7 "10.1.2.3" c-1 - corr'
@@ -227,16 +226,16 @@ def test_single_pass_grok_matches_per_field_reference(spark):
     for template in (AXWAY_ACCESS_TEMPLATE, IP_OR_HOSTNAME_TEMPLATE):
         c = compile_grok(template)
         ref_matched, ref_fields = _reference(line, c)
-        fields = grok_columns(line, c)
+        captures = c.captures("line")
         spec = {"p": {
             "processors": [{"grok": {"field": "line", "patterns": [template]}}],
             "on_failure": [{"set": {"field": "error.message", "value": "{{ _ingest.on_failure_message }}"}}],
         }}
         interp = {r.id: r for r in PipelineInterpreter(spec).run(df, "p").collect()}
         rows = df.select(
-            "id", "line", ref_matched.alias("ref_matched"), grok_matched(line, c).alias("matched"),
+            "id", "line", ref_matched.alias("ref_matched"), F.expr(c.matched(captures)).alias("matched"),
             *[v.alias(f"ref:{k}") for k, v in ref_fields.items()],
-            *[v.alias(k) for k, v in fields.items()],
+            *[F.expr(c.field(captures, f)).alias(f.name) for f in c.fields],
         ).collect()
         n_matched = 0
         for r in rows:

@@ -40,7 +40,8 @@ def test_event_created_before_date_promotion(spark, sf_dir):
 
 
 def test_geoip_null_outside_ranges(spark, sf_dir):
-    from kinesis2elastic_spark.sources.geoip import geoip_enrich, synthetic_geoip_dim
+    from kinesis2elastic_spark.operators.pipeline_dsl import PipelineInterpreter
+    from kinesis2elastic_spark.sources.geoip import synthetic_geoip_dim
 
     df = q_geoip_join(spark, sf_dir)
     matched = df.filter(F.col("geo_country").isNotNull())
@@ -49,7 +50,9 @@ def test_geoip_null_outside_ranges(spark, sf_dir):
     assert matched.filter(F.col("as_number").isNull()).count() == 0
     # out-of-range IP → NULL enrichment (ignore_missing semantics)
     probe = spark.createDataFrame([("10.190.0.7",), ("10.50.1.1",)], ["source.ip"])
-    out = {r["source.ip"]: r for r in geoip_enrich(probe, synthetic_geoip_dim(spark)).collect()}
+    spec = {"p": {"processors": [{"geoip": {"field": "source.ip", "target_field": "source.geo"}}]}}
+    geoip = PipelineInterpreter(spec, synthetic_geoip_dim(spark)).run(probe, "p")
+    out = {r["source.ip"]: r for r in geoip.collect()}
     assert out["10.190.0.7"]["source.geo.country_iso_code"] is None
     assert out["10.50.1.1"]["source.geo.country_iso_code"] == "US"
 

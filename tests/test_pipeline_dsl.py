@@ -10,7 +10,12 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
-from kinesis2elastic_spark.operators.grok import AXWAY_ACCESS_TEMPLATE, SEP, compile_grok
+from kinesis2elastic_spark.operators.grok import (
+    AXWAY_ACCESS_TEMPLATE,
+    IP_OR_HOSTNAME_TEMPLATE,
+    SEP,
+    compile_grok,
+)
 from kinesis2elastic_spark.operators.pipeline_dsl import (
     PipelineInterpreter,
     fixture_spec,
@@ -172,18 +177,33 @@ def test_spec_plan_stays_flat(spark):
     n_projects = sum(1 for line in plan.splitlines() if line.lstrip(" :+-").startswith("Project ["))
     assert n_projects <= 25, n_projects
 
-    # The optimized plan's expression trees, read whole from its JSON form
-    # (treeString truncates long Projects): each grok is one regex pass,
-    # and the two geoip processors on source.ip are one join.
+    # Each grok is one regex pass, and the two geoip processors on
+    # source.ip are one join.
     groks = [compile_grok(p["grok"]["patterns"][0]) for p in SPEC["enrich"]["processors"] if "grok" in p]
-    regexes = {c.regex for c in groks}
-    nodes = json.loads(out._jdf.queryExecution().optimizedPlan().toJSON())
-    counts = Counter()
-    for node in nodes:
-        for flat_tree in _expression_lists(list(node.values())):
-            _count_grok_regex(_tree(iter(flat_tree)), regexes, {c.whole_regex for c in groks}, counts)
+    nodes, counts = _grok_regex_counts(out, groks)
     assert counts == {"RegExpReplace": len(groks)}, counts
     assert sum(node["class"].endswith(".Join") for node in nodes) == 1
+
+
+@pytest.mark.parametrize("query, template", [
+    ("q_grok_ip", IP_OR_HOSTNAME_TEMPLATE),
+    ("q_parse_url", AXWAY_ACCESS_TEMPLATE),
+    ("q_set_ops", AXWAY_ACCESS_TEMPLATE),
+    ("q_case_when", AXWAY_ACCESS_TEMPLATE),
+    ("q_date_parse", AXWAY_ACCESS_TEMPLATE),
+    ("q_dead_letter", AXWAY_ACCESS_TEMPLATE),
+])
+def test_processor_query_runs_grok_once(spark, sf_dir, query, template):
+    """The per-processor oracle queries run their grok through the
+    interpreter, which materializes the capture array before anything
+    reads it: the optimized plan holds one ``regexp_replace`` of the
+    grok and no other evaluation of its regex outside the delimiter
+    fallback, whether the query reads the match flag, one field or
+    several."""
+    from kinesis2elastic_spark.operators.pipeline import QUERIES
+
+    _nodes, counts = _grok_regex_counts(QUERIES[query](spark, sf_dir), [compile_grok(template)])
+    assert counts == {"RegExpReplace": 1}, counts
 
 
 def test_service_chain_plan_shape(spark):
@@ -213,6 +233,18 @@ def test_service_chain_plan_shape(spark):
     physical = ser._jdf.queryExecution().executedPlan().toString()
     assert re.search(r"BroadcastExchange [^\n]*\n\s*\+- LocalTableScan ", physical), physical
     assert physical.count("BroadcastExchange") == 1
+
+
+def _grok_regex_counts(df, groks):
+    """The optimized plan's nodes, and the evaluations of the ``groks``'
+    regexes in its expression trees, read whole from its JSON form
+    (treeString truncates long Projects)."""
+    nodes = json.loads(df._jdf.queryExecution().optimizedPlan().toJSON())
+    counts = Counter()
+    for node in nodes:
+        for flat_tree in _expression_lists(list(node.values())):
+            _count_grok_regex(_tree(iter(flat_tree)), {c.regex for c in groks}, {c.whole_regex for c in groks}, counts)
+    return nodes, counts
 
 
 def _expression_lists(value):

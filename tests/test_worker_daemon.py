@@ -1,12 +1,15 @@
 """The worker daemon entry (``kinesis2elastic_spark.worker_daemon``): the
 zip-directory guard in-process, inside a live worker, and a session built
-from a cwd that does not hold the package."""
+from a cwd that does not hold the package; and the package zip that
+``session.ship_package`` sends to workers."""
 
 import importlib
 import json
 import os
+import shutil
 import subprocess
 import sys
+import tempfile
 import zipfile
 import zipimport
 
@@ -14,7 +17,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from kinesis2elastic_spark import worker_daemon
+from kinesis2elastic_spark import session, worker_daemon
 from kinesis2elastic_spark.session import DAEMON_MODULE
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -145,3 +148,48 @@ spark.stop()
     assert out["rdd"] == ["`a`", "`b``c`"]
     assert out["daemon"] == DAEMON_MODULE
     assert out["pythonpath"].split(os.pathsep)[0] == REPO
+
+
+def _tree_sources(pkg_root: str) -> dict:
+    """``{zip member name: bytes}`` of every ``.py`` file under ``pkg_root``."""
+    out = {}
+    for dirpath, _dirnames, filenames in os.walk(pkg_root):
+        for fn in filenames:
+            if fn.endswith(".py"):
+                full = os.path.join(dirpath, fn)
+                with open(full, "rb") as f:
+                    out[os.path.join("kinesis2elastic_spark", os.path.relpath(full, pkg_root))] = f.read()
+    return out
+
+
+def _zip_members(path: str) -> dict:
+    with zipfile.ZipFile(path) as zf:
+        return {name: zf.read(name) for name in zf.namelist()}
+
+
+def test_package_zip_matches_the_source_tree(tmp_path, monkeypatch):
+    """A zip of an older tree at the old fixed path is not shipped: the
+    zip chosen holds exactly the tree's ``.py`` files, byte for byte, and
+    an edited tree gets a zip of its own."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    stale = tmp_path / "kinesis2elastic_spark_pkg.zip"
+    _write_zip(stale, {
+        "kinesis2elastic_spark/__init__.py": "",
+        "kinesis2elastic_spark/operators/decode.py": "raise ImportError('an older tree')\n",
+    })
+    pkg_root = os.path.dirname(os.path.abspath(session.__file__))
+    path = session.package_zip()
+    assert os.path.dirname(path) == str(tmp_path) and path != str(stale)
+    shipped = _zip_members(path)
+    assert shipped == _tree_sources(pkg_root)
+    assert "kinesis2elastic_spark/worker_daemon.py" in shipped
+    assert session.package_zip() == path
+
+    copy = tmp_path / "copy" / "kinesis2elastic_spark"
+    shutil.copytree(pkg_root, copy, ignore=shutil.ignore_patterns("__pycache__"))
+    with open(copy / "operators" / "decode.py", "a") as f:
+        f.write("# edited\n")
+    monkeypatch.setattr(session, "__file__", str(copy / "session.py"))
+    edited = session.package_zip()
+    assert edited != path
+    assert _zip_members(edited) == _tree_sources(str(copy))
