@@ -7,19 +7,24 @@ No reference parity (the reference has no graph surface; declared absent
 in SURVEY §2) — this extends the LLM-data-pipeline surface alongside
 ``llmops.connected_components``.
 
-Scale shape (100 TB posture): PageRank here is the canonical iterative
-DataFrame loop —
-- the edge list is the only large dataset; it is hash-partitioned ON THE
-  JOIN KEY once (``repartition(src)``) and ``localCheckpoint``-pinned, so
-  every iteration's contribution join reuses the same partitioning
-  without re-shuffling the edges;
-- per-iteration state is (node, rank) — two narrow columns, shuffled
-  once per iteration in the groupBy(dst) contribution sum;
-- lineage is truncated every iteration (``localCheckpoint``), the same
-  discipline as ``connected_components`` — without it the plan doubles
-  per round and the 20th iteration recomputes the 1st;
-- convergence is decided by an aggregate (sum of |delta|), never by
-  collecting ranks to the driver.
+Scale shape (100 TB posture): every kernel is an iterative DataFrame loop
+over one pinned edge list —
+- the edge list is the only large dataset; ``_loop_edges`` dedups it
+  inside the one hash(src) exchange, sorts it in place and pins it, so
+  every round's join reuses that layout without re-shuffling the edges;
+- per-round state is two narrow columns (node, value), shuffled once per
+  round to hash(node);
+- lineage is truncated with ``pin`` — every round for accumulated state,
+  on a cadence for replaced state — or the plan doubles per round and
+  the 20th round recomputes the 1st;
+- convergence is decided by an Observation riding a pin, never by
+  collecting the state to the driver.
+
+The fixpoints whose state is one value per node improved by the values
+its in-neighbors offer (CC, SCC's directed reachability, condensation
+layering, SSSP) run one loop, ``_relax``.  BFS (accumulated visited
+union), LPA (fixed-round argmax), k-core (peeling), PageRank/PPR (power
+iteration) and log-star CC (edge rewiring) keep their own loop bodies.
 """
 
 from __future__ import annotations
@@ -81,26 +86,19 @@ def pagerank(
     branch), and the two driver scalars this kernel needs (n_nodes,
     has-dangling) ride the pins as Observations instead of separate
     count()/head() jobs."""
-    spark = edges.sparkSession
-    edges = edges.select("src", "dst")
-    if n_edges_hint is None:
-        edges = edges.distinct()
-        n_edges_hint = edges.count()
     # Size the loop's partitioning to the GRAPH (same rationale as
     # connected_components): every one of the max_iter iterations
     # schedules one task per partition per stage, so a derived graph far
     # smaller than its source table must not inherit the session's
     # shuffle width; the rows-per-partition target keeps huge edge lists
     # wide.  Joins against `links` then co-partition to this width too.
-    parts = max(
-        2,
-        min(
-            spark.sparkContext.defaultParallelism,
-            int(n_edges_hint) // 250_000 + 1,
+    edges, parts = _loop_edges(
+        edges.select("src", "dst"),
+        n_edges_hint,
+        width=lambda spark, n: max(
+            2, min(spark.sparkContext.defaultParallelism, n // 250_000 + 1)
         ),
     )
-    # dedup fused into the co-partitioning exchange (see bfs_reachability)
-    edges = pin(edges.repartition(parts, "src").dropDuplicates(["src", "dst"]).sortWithinPartitions("src"))
     obs_nodes = Observation()
     nodes = pin(
         edges.select(F.explode(F.array("src", "dst")).alias("node"))
@@ -341,6 +339,119 @@ def _loop_parts(spark: SparkSession, n_edges: int) -> int:
     return max(8, min(spark.sparkContext.defaultParallelism, n_edges // 50_000 + 1))
 
 
+def _loop_edges(edges: DataFrame, n_edges_hint: int | None, width=_loop_parts):
+    """Edge prep of the pinned-edge loop kernels: a (src, dst) frame →
+    (pinned edge list, loop width ``parts``).  Without a caller's
+    ``n_edges_hint`` the edges are deduped and counted first to size the
+    loop with ``width(spark, n_edges)`` (pagerank passes its own rule).
+
+    The pinned list is hash(src)@parts partitioned, duplicate-free and
+    sorted on src inside each partition:
+    - the dedup is FUSED into the one co-partitioning exchange: hash(src)
+      co-locates every (src, dst) duplicate (HashPartitioning(src)
+      satisfies ClusteredDistribution(src, dst)), so the dropDuplicates
+      aggregate runs in place with no further shuffle — with a width hint
+      this saves the separate distinct shuffle AND the counting pass over
+      the derived edge list (r10), and every round's join against the list
+      reuses its layout without re-shuffling it;
+    - the prep sort (r15): the dedup is a HashAggregate, so the pinned
+      leaf would carry NO ordering and every round's sort-merge join would
+      re-sort the full edge list; one in-place sort (no exchange) makes
+      pin() advertise [src ASC] and the per-round edge-rate Sort
+      disappears at any scale."""
+    if n_edges_hint is None:
+        edges = edges.distinct()
+        n_edges_hint = edges.count()
+    parts = width(edges.sparkSession, int(n_edges_hint))
+    return (
+        pin(
+            edges.repartition(parts, "src")
+            .dropDuplicates(["src", "dst"])
+            .sortWithinPartitions("src")
+        ),
+        parts,
+    )
+
+
+def _relax(
+    edges: DataFrame,
+    state: DataFrame,
+    frontier: DataFrame,
+    parts: int,
+    offer: str,
+    combine: str,
+    improves: str,
+    max_rounds: int,
+    cadence: int,
+    fail: str,
+) -> tuple[DataFrame, int]:
+    """Semi-naive relaxation to fixpoint, the one loop behind min-label
+    components (CC, and SCC's directed reachability), condensation
+    layering and weighted shortest paths → (final state, number of
+    improving rounds).
+
+    ``state`` is the pinned (node, v) map over the whole node universe,
+    ``edges`` the pinned hash(src) list, ``frontier`` the (node, v) rows
+    the first round pushes.  Each round every frontier node offers
+    ``offer`` (SQL over v and the edge's columns: ``label``, ``lvl + 1``,
+    ``dist + w``) to its out-neighbors; the offers combine per node with
+    ``combine`` (``min`` or ``max``) into ``__c``, and the nodes where
+    ``improves`` (SQL over ``__c`` and v) holds are the round's update:
+    merged into the state and the next frontier.  A node whose v did not
+    change has already delivered it (edges are static), so per-round work
+    follows the still-converging fringe and the loop exits the round the
+    update is empty — rounds = the depth the values travel, not
+    ``max_rounds``.
+
+    Scale shape:
+    - ONE exchange per round: the offers repartition to the state's
+      hash(node)@parts layout first; the combine, the improvement join and
+      the left merge then run co-partitioned (a left join keeps the pinned
+      layout);
+    - the update is pinned every round (it is next round's join input) and
+      its emptiness probe rides that pin as an Observation — the only
+      driver action per round;
+    - the state is REPLACED each round, so it pins every ``cadence``
+      rounds: every update leaf below it is already materialized, so a
+      longer cadence deepens a join chain over pinned leaves only, never a
+      lazy recompute (SCALING addendum 3: the relaxed cadence is safe only
+      for replaced state — BFS's accumulated visited union pins every
+      round);
+    - no fixpoint within ``max_rounds`` raises ``RuntimeError(fail)``
+      rather than returning values that have not converged.
+
+    The round body is SQL text (r15): every F.col/.alias Column op is its
+    own py4j round-trip, paid per round.  Holds no module state: SCC runs
+    two of these loops from driver threads at once."""
+    v = state.columns[1]
+    for rnd in range(max_rounds):
+        cand = (
+            edges.join(frontier, edges.src == frontier.node)
+            # the offer carries v's own name, so a bare-column offer
+            # (``label``) adds no alias to the plan
+            .selectExpr("dst AS node", f"{offer} AS {v}")
+            .repartition(parts, "node")
+            .groupBy("node")
+            .agg(F.expr(f"{combine}({v})").alias("__c"))
+        )
+        upd = (
+            cand.join(state, "node")
+            .filter(improves)
+            .selectExpr("node", f"__c AS {v}")
+        )
+        obs = Observation()
+        upd = pin(upd.observe(obs, F.count(F.lit(1)).alias("n")))
+        if obs.get["n"] == 0:
+            return state, rnd
+        state = state.join(
+            upd.withColumnRenamed(v, "__new"), "node", "left"
+        ).selectExpr("node", f"coalesce(__new, {v}) AS {v}")
+        if rnd % cadence == cadence - 1:
+            state = pin(state)
+        frontier = upd
+    raise RuntimeError(fail)
+
+
 @_static_loop
 def bfs_reachability(
     edges: DataFrame,
@@ -371,25 +482,7 @@ def bfs_reachability(
       (an Observation riding the pin, r11) for early exit — never
       the node set itself.
     """
-    spark = edges.sparkSession
-    edges = edges.select("src", "dst")
-    if n_edges_hint is None:
-        edges = edges.distinct()
-        n_edges_hint = edges.count()
-    parts = _loop_parts(spark, int(n_edges_hint))
-    # dedup FUSED into the one co-partitioning exchange: hash(src)
-    # partitioning co-locates every (src, dst) duplicate, so Catalyst
-    # runs the dropDuplicates aggregate in place with no further shuffle
-    # (HashPartitioning(src) satisfies ClusteredDistribution(src, dst)) —
-    # with a caller-provided width hint this saves the separate
-    # distinct shuffle AND the counting pass over the derived edge list
-    # (r10 A/B below); the output keeps the pinned hash(src) layout the
-    # loop joins reuse.  sortWithinPartitions (r15, all kernels): the
-    # dedup is a HashAggregate, so the pinned leaf carried NO ordering
-    # and every round's sort-merge join re-sorted the full edge list —
-    # one in-place prep sort (no exchange) makes pin() advertise
-    # [src ASC] and the per-round edge-rate Sort disappears at any scale.
-    edges = pin(edges.repartition(parts, "src").dropDuplicates(["src", "dst"]).sortWithinPartitions("src"))
+    edges, parts = _loop_edges(edges.select("src", "dst"), n_edges_hint)
     # seed dedup fused into the one repartition to the loop layout
     # (r15, ADVICE: distinct-then-repartition paid two exchanges)
     visited = pin(
@@ -530,21 +623,7 @@ def label_propagation(
     round removes the duplicate).  No driver action inside the loop at
     all: rounds are fixed, so there is no convergence probe to pay
     for."""
-    spark = edges.sparkSession
-    edges = edges.select("src", "dst")
-    if n_edges_hint is None:
-        edges = edges.distinct()
-        n_edges_hint = edges.count()
-    parts = _loop_parts(spark, int(n_edges_hint))
-    # dedup FUSED into the one co-partitioning exchange: hash(src)
-    # partitioning co-locates every (src, dst) duplicate, so Catalyst
-    # runs the dropDuplicates aggregate in place with no further shuffle
-    # (HashPartitioning(src) satisfies ClusteredDistribution(src, dst)) —
-    # with a caller-provided width hint this saves the separate
-    # distinct shuffle AND the counting pass over the derived edge list
-    # (r10 A/B below); the output keeps the pinned hash(src) layout the
-    # loop joins reuse.
-    edges = pin(edges.repartition(parts, "src").dropDuplicates(["src", "dst"]).sortWithinPartitions("src"))
+    edges, parts = _loop_edges(edges.select("src", "dst"), n_edges_hint)
     # node universe in ONE explode pass over the pinned edges (the
     # pagerank r14 shape — the two-branch union scanned the checkpoint
     # twice), deduped IN the repartition to the loop layout (r15,
@@ -658,7 +737,6 @@ def connected_components_exact(
     edges: DataFrame,
     max_rounds: int = CC_MAX_ROUNDS,
     n_edges_hint: int | None = None,
-    pin_cadence: int = 4,
 ) -> DataFrame:
     """Exact connected components over an edge list → (node, component),
     component = the MINIMUM node id in each component — the canonical-id
@@ -666,29 +744,11 @@ def connected_components_exact(
     trade graph): min-label propagation to fixpoint, undirected by
     construction (the input is symmetrized), all-string/BIGINT exact.
 
-    Semi-naive evaluation (the BFS delta-frontier discipline applied to
-    labels): each round pushes ONLY the labels that changed last round —
-    the frontier — never the whole labeling.  A node whose label did not
-    change has already delivered that label to its neighbors in an
-    earlier round (edges are static), so per-round work is proportional
-    to the still-converging fringe and the loop exits the round the
-    frontier empties — rounds = graph diameter, not max_rounds.
-
-    Scale shape (the graph-family kernel contract):
-    - edges symmetrized + hash-partitioned on the join key once and
-      ``localCheckpoint``-pinned; every round's frontier join reuses that
-      partitioning without re-shuffling the (large) edge list;
-    - ONE exchange per round: the propagated (node, label) pairs
-      repartition to the pinned hash(node) layout, then the min-combine,
-      the improvement filter join, and the label merge all run
-      co-partitioned with no further shuffle;
-    - per-round state is two narrow columns; the frontier (pinned for
-      the emptiness probe) is also next round's join input, so the probe
-      is effectively free; labels are REPLACED state (not accumulated),
-      so they pin on the every-other-round cadence (SCALING addendum 3:
-      the relaxed cadence is safe only for replaced state — BFS's
-      accumulated visited union must pin every round);
-    - the only driver action per round is the emptiness probe.
+    The fixpoint is ``_relax`` (the BFS delta-frontier discipline applied
+    to labels: each round pushes ONLY the labels that changed last round,
+    so rounds = graph diameter, not max_rounds) over the symmetrized
+    ``_loop_edges`` list, every node pushing its own id in round 0 and
+    the labels pinned every 4 rounds.
 
     Round bound: min-label propagation is O(graph diameter) — the
     information has to WALK from each component's min node, and pointer
@@ -704,76 +764,30 @@ def connected_components_exact(
     re-shuffling the edge list every round — the right trade only once
     diameter ≫ 64, since pinned-edge rounds are far cheaper.
 
-    llmops.connected_components is the sibling kernel tuned for shallow
-    near-dup graphs (observation-piggybacked convergence, whole-labeling
-    rounds); this one is the deep-graph form with frontier semantics and
-    a component count that can be large."""
-    spark = edges.sparkSession
-    sym = _symmetrize(edges.select("src", "dst"))  # one pass, both directions
-    if n_edges_hint is None:
-        sym = sym.distinct()
-        n_edges_hint = sym.count()
-    parts = _loop_parts(spark, int(n_edges_hint))
-    # dedup fused into the co-partitioning exchange (see bfs_reachability)
-    sym = pin(sym.repartition(parts, "src").dropDuplicates(["src", "dst"]).sortWithinPartitions("src"))
+    ``llmops.connected_components`` is a separate kernel for shallow
+    near-dup graphs (whole-labeling rounds, convergence by an unchanged
+    label sum); its docstring records why it is not folded into this
+    one."""
+    # one pass, both directions
+    sym, parts = _loop_edges(_symmetrize(edges.select("src", "dst")), n_edges_hint)
     labels = pin(
         sym.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
         .repartition(parts, "node")
     )
-    frontier = labels  # round 0: every node pushes its own id
-    converged = False
-    for rnd in range(max_rounds):
-        # round body built with string expressions (r15): each
-        # F.col/.alias/.select Column op is its own py4j round-trip and
-        # the loop pays them per round — selectExpr/filter strings parse
-        # to identical expression trees in one call (the r14 interop
-        # precedent); measured ~2 s of driver construct across the
-        # 27-round fixpoint at sf0.1 before the thinning
-        cand = (
-            sym.join(frontier, sym.src == frontier.node)
-            .selectExpr("dst AS node", "label")
-            # ONE exchange per round (the BFS discipline): repartition to
-            # the pinned hash(node) layout first; the min-combine and both
-            # node-keyed joins below then run with no further shuffle.
-            .repartition(parts, "node")
-            .groupBy("node")
-            .agg(F.min("label").alias("__cand"))
-        )
-        upd = (
-            cand.join(labels, "node")
-            .filter("__cand < label")
-            .selectExpr("node", "__cand AS label")
-        )
-        # emptiness probe rides the pin as an Observation (the kcore
-        # pattern, r11): the pin already materializes upd, so a separate
-        # head() job per round is pure job-floor overhead
-        obs = Observation()
-        upd = pin(upd.observe(obs, F.count(F.lit(1)).alias("n")))
-        if obs.get["n"] == 0:
-            converged = True
-            break
-        labels = labels.join(
-            upd.withColumnRenamed("label", "__new"), "node", "left"
-        ).selectExpr("node", "coalesce(__new, label) AS label")
-        # replaced-state cadence (every upd leaf above is already
-        # pinned, so a longer cadence deepens a join chain over
-        # MATERIALIZED leaves only — no lazy recompute blow-up; r11
-        # same-session interleaved A/B at sf0.1, 27-round fixpoint:
-        # cadence 4 beat 2 in all three pairs (7.60/8.26/8.42 vs
-        # 7.77/9.55/8.58 s) while 8 lost clearly (10.1-10.5 s — the
-        # per-round re-execution of the deeper join chain overtakes the
-        # pin savings), so 4 is the default)
-        if rnd % pin_cadence == pin_cadence - 1:
-            labels = pin(labels)
-        frontier = upd
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_exact: no fixpoint within {max_rounds} "
-            f"rounds (graph diameter exceeds the cap — raise max_rounds, "
-            f"or switch to an edge-rewiring algorithm for this topology)"
-        )
+    # replaced-state cadence 4: r11 same-session interleaved A/B at
+    # sf0.1, 27-round fixpoint — cadence 4 beat 2 in all three pairs
+    # (7.60/8.26/8.42 vs 7.77/9.55/8.58 s) while 8 lost clearly
+    # (10.1-10.5 s: the per-round re-execution of the deeper join chain
+    # overtakes the pin savings)
+    labels, _ = _relax(
+        sym, labels, labels, parts, "label", "min", "__c < label",
+        max_rounds, 4,
+        f"connected_components_exact: no fixpoint within {max_rounds} "
+        f"rounds (graph diameter exceeds the cap — raise max_rounds, "
+        f"or switch to an edge-rewiring algorithm for this topology)",
+    )
     return labels.select("node", F.col("label").alias("component"))
 
 
@@ -1018,13 +1032,8 @@ def kcore_membership(
     == fixpoint (no set-compare join needed)."""
     from pyspark.sql import Observation
 
-    spark = edges.sparkSession
-    sym = _symmetrize(edges.select("src", "dst"))  # one pass, both directions
-    if n_edges_hint is None:
-        sym = sym.distinct()
-        n_edges_hint = sym.count()
-    parts = _loop_parts(spark, int(n_edges_hint))
-    sym = pin(sym.repartition(parts, "src").dropDuplicates(["src", "dst"]).sortWithinPartitions("src"))
+    # one pass, both directions
+    sym, parts = _loop_edges(_symmetrize(edges.select("src", "dst")), n_edges_hint)
     alive = pin(
         sym.select(F.col("src").alias("node"))
         .distinct()
@@ -1266,48 +1275,17 @@ SCC_INNER_MAX_ROUNDS = 32
 def _minprop_directed(
     e: DataFrame, nodes: DataFrame, parts: int, max_rounds: int, what: str
 ) -> DataFrame:
-    """Semi-naive min-label propagation ALONG edge direction to fixpoint
-    → (node, label), label = min id that can reach node (node included)
-    — connected_components_exact's directed sibling, same discipline:
-    pinned hash(src) edges, frontier = labels that changed last round,
-    ONE exchange per round, emptiness probe the only driver action,
-    fail-loud on non-convergence.  ``nodes`` (pinned hash(node)) is the
-    label universe — active nodes with no in-class edges keep their own
-    id without ever joining."""
+    """Min-label propagation ALONG edge direction to fixpoint → (node,
+    label), label = min id that can reach node (node included) — the
+    ``_relax`` loop of connected_components_exact over directed edges,
+    labels pinned every other round.  ``nodes`` (pinned hash(node)) is
+    the label universe — active nodes with no in-class edges keep their
+    own id without ever joining."""
     labels = pin(nodes.withColumn("label", F.col("node")))
-    frontier = labels
-    converged = False
-    for rnd in range(max_rounds):
-        cand = (
-            e.join(frontier, e.src == frontier.node)
-            .select(F.col("dst").alias("node"), "label")
-            .repartition(parts, "node")
-            .groupBy("node")
-            .agg(F.min("label").alias("__cand"))
-        )
-        upd = (
-            cand.join(labels, "node")
-            .filter(F.col("__cand") < F.col("label"))
-            .select("node", F.col("__cand").alias("label"))
-        )
-        # emptiness probe rides the pin as an Observation (the kcore
-        # pattern, r11): the pin already materializes upd, so a separate
-        # head() job per round is pure job-floor overhead
-        obs = Observation()
-        upd = pin(upd.observe(obs, F.count(F.lit(1)).alias("n")))
-        if obs.get["n"] == 0:
-            converged = True
-            break
-        labels = labels.join(
-            upd.withColumnRenamed("label", "__new"), "node", "left"
-        ).select("node", F.coalesce("__new", "label").alias("label"))
-        if rnd % 2 == 1:  # replaced-state cadence
-            labels = pin(labels)
-        frontier = upd
-    if not converged:
-        raise RuntimeError(
-            f"_minprop_directed({what}): no fixpoint within {max_rounds} rounds"
-        )
+    labels, _ = _relax(
+        e, labels, labels, parts, "label", "min", "__c < label", max_rounds, 2,
+        f"_minprop_directed({what}): no fixpoint within {max_rounds} rounds",
+    )
     return labels
 
 
@@ -1345,20 +1323,17 @@ def scc_decomposition(
     before building, tools/r11_scc_sim note in SCALING.md).  Fail-loud
     past ``max_outer`` (the CC discipline: never silently-wrong ids).
 
-    Scale shape: edges pinned hash(src) once; per outer round the
-    class restriction is two node-keyed joins + one repartition per
-    direction, and each inner fixpoint is the pinned-edge one-exchange
-    CC loop.  Assigned pairs are ACCUMULATED state → pinned every
-    round (the BFS cadence rule); active/class state is REPLACED →
-    every other round via the inner kernel.  Driver actions: one
+    Scale shape: edges pinned hash(src) once (``_loop_edges``); per
+    outer round the class restriction is two node-keyed joins + one
+    repartition per direction, and each inner fixpoint is ``_relax``,
+    the CC loop.  Assigned pairs are ACCUMULATED state → pinned every
+    round (the BFS cadence rule); labels are REPLACED state → pinned
+    every other round inside ``_relax``.  Driver actions: one
     emptiness probe per inner round + one per outer round."""
-    spark = edges.sparkSession
-    e0 = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    if n_edges_hint is None:
-        e0 = e0.distinct()
-        n_edges_hint = e0.count()
-    parts = _loop_parts(spark, int(n_edges_hint))
-    e0 = pin(e0.repartition(parts, "src").dropDuplicates(["src", "dst"]).sortWithinPartitions("src"))
+    e0, parts = _loop_edges(
+        edges.select("src", "dst").filter(F.col("src") != F.col("dst")),
+        n_edges_hint,
+    )
     # node universe in one explode pass, dedup fused into the loop-layout
     # repartition (r15, ADVICE — the LPA init shape)
     act = pin(
@@ -1508,10 +1483,10 @@ def condensation_levels(
 
     Kernel: two node-keyed joins map edges to (scc(u), scc(v)), cross-
     SCC pairs dedup-fused into the co-partitioning exchange; then
-    semi-naive MAX-level propagation (the _minprop_directed shape with
-    max/increment instead of min): level(v) = max over in-edges of
-    level(u)+1, frontier = levels raised last round, one exchange per
-    round, rounds = DAG depth.  ``max_depth`` doubles as the cycle
+    semi-naive MAX-level propagation on ``_relax`` (the CC loop with
+    max/increment instead of min, levels pinned every other round):
+    level(v) = max over in-edges of level(u)+1, frontier = levels raised
+    last round, rounds = DAG depth.  ``max_depth`` doubles as the cycle
     guard — a cycle would climb forever, so exceeding the budget fails
     loud (it cannot happen on a true condensation; the guard protects
     against a caller passing a non-SCC labeling)."""
@@ -1538,36 +1513,12 @@ def condensation_levels(
         .dropDuplicates(["node"])
         .withColumn("lvl", F.lit(0).cast("long"))
     )
-    frontier = levels
-    for _rnd in range(max_depth):
-        cand = (
-            ce.join(frontier, ce.src == frontier.node)
-            .select(F.col("dst").alias("node"), (F.col("lvl") + 1).alias("__c"))
-            .repartition(parts, "node")
-            .groupBy("node")
-            .agg(F.max("__c").alias("__c"))
-        )
-        upd = (
-            cand.join(levels, "node")
-            .filter(F.col("__c") > F.col("lvl"))
-            .select("node", F.col("__c").alias("lvl"))
-        )
-        obs = Observation()  # probe rides the pin (kcore pattern, r11)
-        upd = pin(upd.observe(obs, F.count(F.lit(1)).alias("n")))
-        if obs.get["n"] == 0:
-            return levels.select(
-                F.col("node").alias("scc_id"), F.col("lvl").alias("depth")
-            )
-        levels = levels.join(
-            upd.withColumnRenamed("lvl", "__new"), "node", "left"
-        ).select("node", F.coalesce("__new", "lvl").alias("lvl"))
-        if _rnd % 2 == 1:
-            levels = pin(levels)
-        frontier = upd
-    raise RuntimeError(
+    levels, _ = _relax(
+        ce, levels, levels, parts, "lvl + 1", "max", "__c > lvl", max_depth, 2,
         f"condensation_levels: levels still rising after {max_depth} rounds "
-        f"— the input labeling is not a condensation (cycle present)"
+        f"— the input labeling is not a condensation (cycle present)",
     )
+    return levels.select(F.col("node").alias("scc_id"), F.col("lvl").alias("depth"))
 
 
 def q_condensation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1634,13 +1585,7 @@ def personalized_pagerank(
     closure of the seeds — an exact integer the DuckDB recursive CTE
     recomputes; mass conservation and the (1−d)/|S| seed floor are
     in-engine float invariants (1e-9/1e-12 slack)."""
-    spark = edges.sparkSession
-    edges = edges.select("src", "dst")
-    if n_edges_hint is None:
-        edges = edges.distinct()
-        n_edges_hint = edges.count()
-    parts = _loop_parts(spark, int(n_edges_hint))
-    edges = pin(edges.repartition(parts, "src").dropDuplicates(["src", "dst"]).sortWithinPartitions("src"))
+    edges, parts = _loop_edges(edges.select("src", "dst"), n_edges_hint)
     # out-degree + link join both ride the pinned hash(src) layout
     out_deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
     links = pin(edges.join(out_deg, "src"))
@@ -1770,23 +1715,19 @@ def sssp_weighted(
     Bellman-Ford: label-correcting relaxation to fixpoint, which is the
     shape that distributes (priority queues do not).
 
-    Semi-naive evaluation: each round relaxes ONLY the frontier (nodes
-    whose dist improved last round) — a settled node re-offers nothing
-    because edges are static and its best dist already propagated.
-    Scale shape (the B137 kernel contract):
+    Semi-naive evaluation on ``_relax`` (the CC loop, offering dist + w):
+    each round relaxes ONLY the frontier (nodes whose dist improved last
+    round) — a settled node re-offers nothing because edges are static
+    and its best dist already propagated; dist pins every
+    ``pin_cadence`` rounds.
     - parallel edges collapse to min weight INSIDE the one edge-prep
       exchange (groupBy(src, dst).min(w) under hash(src) partitioning —
       map-combinable, skew-safe), then the list pins; every round's
       frontier join reuses that layout with no re-shuffle;
-    - ONE exchange per round: candidate (node, dist+w) offers
-      repartition to the pinned hash(node) layout; the min-combine, the
-      improvement join, and the dist merge all run co-partitioned;
     - the improvement check joins candidates to the CURRENT dist map and
       keeps strict improvements (or first sightings), so monotone
       convergence is structural — no oscillation, no float drift
       (weights are ints);
-    - emptiness probe rides the pin as an Observation; dist is REPLACED
-      state (the CC cadence rule: pin every ``pin_cadence`` rounds);
     - rounds ≤ the max hop count of any optimal path (≤ weighted
       diameter / min edge weight); the budget fails LOUD rather than
       returning partially-relaxed distances.  For adversarially
@@ -1802,8 +1743,8 @@ def sssp_weighted(
     parts = _loop_parts(spark, int(n_edges_hint))
     # min-weight collapse of parallel edges fused into the one
     # co-partitioning exchange (hash(src) satisfies the groupBy's
-    # ClusteredDistribution(src, dst) — same fusion as the dropDuplicates
-    # in bfs_reachability, but aggregate-with-min instead of dedup)
+    # ClusteredDistribution(src, dst) — the _loop_edges fusion, but
+    # aggregate-with-min instead of dedup)
     edges = pin(
         edges.select("src", "dst", F.col("w").cast("long").alias("w"))
         .repartition(parts, "src")
@@ -1848,49 +1789,17 @@ def sssp_weighted(
         )
         .select("node", F.col("__seed0").alias("dist"))
     )
-    frontier = dist.filter(F.col("dist").isNotNull())
-    converged = False
-    for rnd in range(max_rounds):
-        cand = (
-            frontier.join(edges, frontier.node == edges.src)
-            .selectExpr("dst AS node", "dist + w AS __c")
-            # ONE exchange per round: repartition to the pinned
-            # hash(node) layout; min-combine + both node-keyed joins
-            # below run with no further shuffle
-            .repartition(parts, "node")
-            .groupBy("node")
-            .agg(F.min("__c").alias("__c"))
-        )
-        upd = (
-            cand.join(dist, "node")
-            .filter("dist IS NULL OR __c < dist")
-            .selectExpr("node", "__c AS dist")
-        )
-        obs = Observation()  # probe rides the pin (kcore pattern, r11)
-        upd = pin(upd.observe(obs, F.count(F.lit(1)).alias("n")))
-        if obs.get["n"] == 0:
-            converged = True
-            # rounds that IMPROVED a distance (this one didn't) — the
-            # bound an unrolled-relaxation oracle must meet (r11 ADVICE)
-            if stats_out is not None:
-                stats_out["improving_rounds"] = rnd
-            break
-        # replaced-state merge: every upd node is already in dist (the
-        # universe covers src ∪ dst ∪ seeds), so LEFT suffices — and a
-        # left join PRESERVES the pinned hash(node) layout where the old
-        # full-outer erased it
-        dist = dist.join(
-            upd.withColumnRenamed("dist", "__new"), "node", "left"
-        ).selectExpr("node", "coalesce(__new, dist) AS dist")
-        if rnd % pin_cadence == pin_cadence - 1:
-            dist = pin(dist)
-        frontier = upd
-    if not converged:
-        raise RuntimeError(
-            f"sssp_weighted: relaxation still improving after {max_rounds} "
-            f"rounds — raise max_rounds (weighted hop diameter exceeds the "
-            f"budget) or switch to Δ-stepping for this weight distribution"
-        )
+    dist, rounds = _relax(
+        edges, dist, dist.filter(F.col("dist").isNotNull()), parts,
+        "dist + w", "min", "dist IS NULL OR __c < dist", max_rounds, pin_cadence,
+        f"sssp_weighted: relaxation still improving after {max_rounds} "
+        f"rounds — raise max_rounds (weighted hop diameter exceeds the "
+        f"budget) or switch to Δ-stepping for this weight distribution",
+    )
+    # rounds that IMPROVED a distance — the bound an unrolled-relaxation
+    # oracle must meet (r11 ADVICE)
+    if stats_out is not None:
+        stats_out["improving_rounds"] = rounds
     # unreached nodes are implementation state, not results — the
     # contract output is exactly the reached set the old form returned
     return dist.filter(F.col("dist").isNotNull())

@@ -1091,7 +1091,17 @@ def _connected_components_body(edges: DataFrame, src: str, dst: str, max_iters: 
     ``count()`` action.  Labels are monotone non-increasing under min
     propagation, so ``sum(label)`` strictly decreases until the fixed
     point: equal consecutive sums == converged (no per-row change join
-    needed).
+    needed).  A sum still falling after ``max_iters`` rounds raises
+    ``RuntimeError`` rather than returning cluster ids that have not
+    converged.
+
+    This stays a kernel of its own rather than a call of
+    ``graph.connected_components_exact`` (the frontier loop,
+    ``graph._relax``): on the same near-dup pairs at local[4], 6
+    alternating runs each, both returned identical rows (47 nodes at
+    sf0.01, 477 at sf0.1), but the exact kernel was slower on these
+    shallow graphs — median noop wall at sf0.1 0.50 → 0.71 s, and
+    0.63 → 0.88 s in a second process even with a width hint.
     """
     from pyspark.sql import Observation
 
@@ -1155,6 +1165,11 @@ def _connected_components_body(edges: DataFrame, src: str, dst: str, max_iters: 
         if prev_sum is not None and label_sum == prev_sum:
             break
         prev_sum = label_sum
+    else:
+        raise RuntimeError(
+            f"connected_components: label sum still falling after {max_iters} "
+            f"rounds (graph diameter exceeds the cap — raise max_iters)"
+        )
     return labels.select("node", F.col("label").alias("cluster_id"))
 
 

@@ -10,6 +10,18 @@ def test_entry_returns_rows(spark):
     assert "sum_qty" in df.columns
 
 
+def test_tests_import_this_checkouts_package():
+    """The suite imports the package of the checkout it lives in, so a
+    second clone (a parent-vs-change comparison) tests its own code."""
+    import os
+
+    import kinesis2elastic_spark
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    for mod in (kinesis2elastic_spark, entrymod):
+        assert os.path.abspath(mod.__file__).startswith(root + os.sep), mod.__file__
+
+
 def test_every_oracle_key_has_query():
     qs = entrymod.queries()
     osql = entrymod.oracle_sql()

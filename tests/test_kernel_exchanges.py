@@ -70,6 +70,14 @@ CASES = [
         _seeds(s, ["a0"]),
     ).count(), 2, 12),
     ("scc", lambda s: graph.scc_decomposition(_edges(s, _PATH + [("a3", "a0")])).count(), 3, 28),
+    # condensation: a planted DAG (the path plus a shortcut, so depth is
+    # the LONGEST path) under the identity SCC labeling; calibrated per-pin
+    # [6, 1, 1, 1, 0, 1, 1, 0, 1, 1, 0, 1] = 15 — the first pin maps the
+    # edges through the unpartitioned labeling, then 1 exchange per round
+    ("condensation", lambda s: graph.condensation_levels(
+        _edges(s, _PATH + [("a0", "a3")]),
+        s.createDataFrame([(f"a{i}", f"a{i}") for i in range(7)], "node string, scc_id string"),
+    ).count(), 6, 17),
     # llm_cc added in r15: the near-dup CC kernel's labels init now rides
     # the pinned symmetric edge list's hash(b) layout with ZERO exchanges
     # (select b == select a on a symmetrized list; calibrated per-pin

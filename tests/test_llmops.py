@@ -119,6 +119,15 @@ def test_connected_components_known_graphs(spark):
     assert cc == {0}
 
 
+def test_connected_components_fails_loud_past_max_iters(spark):
+    """A 30-node chain needs ~30 rounds: at the default cap of 20 the
+    labels have not converged, so the kernel raises instead of returning
+    wrong cluster ids."""
+    chain = spark.createDataFrame([(i, i + 1) for i in range(29)], "doc_a bigint, doc_b bigint")
+    with pytest.raises(RuntimeError, match="still falling"):
+        llmops.connected_components(chain).collect()
+
+
 def test_dedup_clusters_cover_pairs(spark, sf_dir):
     pairs = llmops.minhash_near_dup_detail(spark, sf_dir).collect()
     clusters = {r.doc_id: r.cluster_id for r in llmops.dedup_clusters_detail(spark, sf_dir).collect()}
