@@ -384,6 +384,7 @@ def _relax(
     max_rounds: int,
     cadence: int,
     fail: str,
+    frontier_first: bool = False,
 ) -> tuple[DataFrame, int]:
     """Semi-naive relaxation to fixpoint, the one loop behind min-label
     components (CC, and SCC's directed reachability), condensation
@@ -401,7 +402,9 @@ def _relax(
     change has already delivered it (edges are static), so per-round work
     follows the still-converging fringe and the loop exits the round the
     update is empty — rounds = the depth the values travel, not
-    ``max_rounds``.
+    ``max_rounds``.  ``frontier_first`` makes the frontier the left
+    (streamed) side of the round's join, the order sssp_weighted's loop
+    has always planned; the other callers stream the edges.
 
     Scale shape:
     - ONE exchange per round: the offers repartition to the state's
@@ -424,15 +427,19 @@ def _relax(
     own py4j round-trip, paid per round.  Holds no module state: SCC runs
     two of these loops from driver threads at once."""
     v = state.columns[1]
+    # a bare-column offer (``label``) is combined as is, so it adds no
+    # alias to the plan; a computed one is projected as ``__c`` first
+    offered = offer if offer == v else "__c"
     for rnd in range(max_rounds):
+        if frontier_first:
+            hop = frontier.join(edges, frontier.node == edges.src)
+        else:
+            hop = edges.join(frontier, edges.src == frontier.node)
         cand = (
-            edges.join(frontier, edges.src == frontier.node)
-            # the offer carries v's own name, so a bare-column offer
-            # (``label``) adds no alias to the plan
-            .selectExpr("dst AS node", f"{offer} AS {v}")
+            hop.selectExpr("dst AS node", f"{offer} AS {offered}")
             .repartition(parts, "node")
             .groupBy("node")
-            .agg(F.expr(f"{combine}({v})").alias("__c"))
+            .agg(F.expr(f"{combine}({offered})").alias("__c"))
         )
         upd = (
             cand.join(state, "node")
@@ -1795,6 +1802,7 @@ def sssp_weighted(
         f"sssp_weighted: relaxation still improving after {max_rounds} "
         f"rounds — raise max_rounds (weighted hop diameter exceeds the "
         f"budget) or switch to Δ-stepping for this weight distribution",
+        frontier_first=True,
     )
     # rounds that IMPROVED a distance — the bound an unrolled-relaxation
     # oracle must meet (r11 ADVICE)

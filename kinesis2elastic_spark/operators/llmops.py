@@ -1091,9 +1091,10 @@ def _connected_components_body(edges: DataFrame, src: str, dst: str, max_iters: 
     ``count()`` action.  Labels are monotone non-increasing under min
     propagation, so ``sum(label)`` strictly decreases until the fixed
     point: equal consecutive sums == converged (no per-row change join
-    needed).  A sum still falling after ``max_iters`` rounds raises
-    ``RuntimeError`` rather than returning cluster ids that have not
-    converged.
+    needed; round 0 compares against the initial labels' sum, so an
+    empty edge list converges at once).  A sum still falling after
+    ``max_iters`` rounds raises ``RuntimeError`` rather than returning
+    cluster ids that have not converged.
 
     This stays a kernel of its own rather than a call of
     ``graph.connected_components_exact`` (the frontier loop,
@@ -1136,12 +1137,17 @@ def _connected_components_body(edges: DataFrame, src: str, dst: str, max_iters: 
     # hash(b)→hash(node) partitioning and the distinct fuses in place
     # (the old select(a).distinct().repartition paid a session-width
     # distinct exchange plus the repartition).
+    # the initial sum rides the init pin, so round 0 compares against it:
+    # a graph already at its fixed point (no edges, or self-loops only)
+    # converges in round 0, and sum() over no rows is NULL on both sides
+    obs = Observation()
     labels = pin(
         sym.select(F.col("b").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
+        .observe(obs, F.sum("label").alias("label_sum"))
     )
-    prev_sum = None
+    prev_sum = obs.get["label_sum"]
     for _ in range(max_iters):
         neighbor_labels = sym.join(labels, sym.b == labels.node).selectExpr(
             "a AS node", "label"
@@ -1162,7 +1168,7 @@ def _connected_components_body(edges: DataFrame, src: str, dst: str, max_iters: 
         )
         label_sum = obs.get["label_sum"]
         labels = new_labels
-        if prev_sum is not None and label_sum == prev_sum:
+        if label_sum == prev_sum:
             break
         prev_sum = label_sum
     else:

@@ -128,6 +128,14 @@ def test_connected_components_fails_loud_past_max_iters(spark):
         llmops.connected_components(chain).collect()
 
 
+def test_connected_components_of_no_pairs_is_empty(spark):
+    """A corpus with no near-dup pairs is valid input: the kernel returns
+    no rows rather than running to the cap and raising."""
+    none = spark.createDataFrame([], "doc_a bigint, doc_b bigint")
+    assert llmops.connected_components(none).count() == 0
+    assert llmops.connected_components(none, max_iters=1).count() == 0
+
+
 def test_dedup_clusters_cover_pairs(spark, sf_dir):
     pairs = llmops.minhash_near_dup_detail(spark, sf_dir).collect()
     clusters = {r.doc_id: r.cluster_id for r in llmops.dedup_clusters_detail(spark, sf_dir).collect()}
