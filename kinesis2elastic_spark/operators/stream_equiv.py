@@ -8,20 +8,21 @@ function, then reduce the materialized streaming state against its batch
 twin and emit oracle-recomputable exact columns + equivalence flags.  That
 turns each streaming leg into a driver hash row.
 
-Each query:
+Each query runs its leg through ``_drained``, which owns the scratch dir,
+the checkpoint, the trigger, the wait and the pin of the read-back:
 
-1. writes the source table split into two micro-batches of parquet under a
-   fresh tempdir (write batch → drain → write batch → drain, the same
+1. it lands the source table as file groups under the scratch dir, one
+   group per drain (write group → drain → write group → drain, the same
    ordering discipline as the pytest suite — ``availableNow`` would
    otherwise fold both into one batch);
-2. runs the REAL streaming pipeline (writeStream.foreachBatch + checkpoint,
-   not a hand-called batch body) to completion;
-3. reads the persisted streaming state back and compares it EXACTLY
+2. it runs the REAL streaming pipeline (writeStream.foreachBatch +
+   checkpoint, not a hand-called batch body) to completion after each;
+3. it reads the persisted streaming state back and compares it EXACTLY
    (same-engine, so even rounded doubles are bit-identical) against the
    registered batch operator on the same split;
-4. returns a reduction whose data columns DuckDB recomputes from the raw
-   table and whose flags assert the equivalence — localCheckpoint-ed so the
-   result outlives the tempdir.
+4. it returns a reduction whose data columns DuckDB recomputes from the
+   raw table and whose flags assert the equivalence — the read-back is
+   localCheckpoint-ed so the result outlives the scratch dir.
 
 Scale note: the equivalence harness is test-scale by design (it drains a
 bounded stream); the OPERATORS it exercises are the production paths whose
@@ -40,14 +41,36 @@ from pyspark.sql import Window as W
 
 from ..catalog import load
 
-_DRAIN_TIMEOUT_MS = 300_000
+_DRAIN_TIMEOUT_S = 300
 
 
-def _drain(query) -> None:
-    query.awaitTermination(_DRAIN_TIMEOUT_MS // 1000)
-    if query.isActive:  # pragma: no cover - only on a hung stream
-        query.stop()
-        raise TimeoutError("streaming drain did not complete")
+def _drained(body) -> DataFrame:
+    """Run one stream-vs-batch leg in a fresh scratch dir and return the
+    frame it reads back, pinned before the dir is removed.
+
+    ``body(work, drain)`` lands its file groups under ``work`` and calls
+    ``drain(writer)`` after each.  ``drain`` starts the sink ``writer``
+    with its checkpoint at ``work/ck`` under an ``availableNow`` trigger,
+    waits for it to finish and returns the query's progress list.  A
+    failed query re-raises its exception from ``drain``; one still live
+    after ``_DRAIN_TIMEOUT_S`` is stopped and raises ``TimeoutError``, so
+    a restart never races it on the same checkpoint."""
+    work = tempfile.mkdtemp(prefix="k2e_stream_")
+    ckpt = os.path.join(work, "ck")
+
+    def drain(writer) -> list:
+        q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+        if not q.awaitTermination(_DRAIN_TIMEOUT_S):
+            q.stop()
+            raise TimeoutError(
+                f"streaming drain did not finish within {_DRAIN_TIMEOUT_S}s"
+            )
+        return q.recentProgress
+
+    try:
+        return body(work, drain).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 def _two_batch_source(df: DataFrame, split_col: str, src: str) -> None:
@@ -76,7 +99,7 @@ def frames_equal_flag(a: DataFrame, b: DataFrame, flag: str) -> DataFrame:
 
 def q_stream_shard_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B91 streaming form, oracle-backed: documents arrive in two
-    micro-batches through ``incremental_shard_stream`` (foreachBatch,
+    micro-batches through ``shard_stream_batch`` (foreachBatch,
     availableNow, per-batch dynamic partition overwrite); the rolled-up
     streaming manifest must equal BOTH the deterministic per-shard
     accounting DuckDB recomputes from the raw table (hashed columns) and
@@ -87,65 +110,53 @@ def q_stream_shard_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     and fully oracle-recomputable — the streaming state itself is under
     the hash gate, not just a boolean about it."""
     from ..operators.corpus import shard_id_col
-    from ..streaming.shard_stream import (
-        incremental_shard_stream,
-        read_stream_manifest,
-    )
+    from ..streaming.shard_stream import read_stream_manifest, shard_stream_batch
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    work = tempfile.mkdtemp(prefix="k2e_stream_shard_")
-    try:
+
+    def run(work, drain):
         src, dst = os.path.join(work, "src"), os.path.join(work, "dst")
-
-        def start():
-            return incremental_shard_stream(
-                spark,
-                spark.readStream.schema("doc_id long, text string").parquet(
-                    src + "/*"
-                ),
-                dst,
+        sink = (
+            spark.readStream.schema("doc_id long, text string")
+            .parquet(src + "/*")
+            .writeStream.foreachBatch(
+                lambda df, bid: shard_stream_batch(df.sparkSession, df, bid, dst)
             )
-
+        )
         _two_batch_source(docs, "doc_id", src)
-        _drain(start())
+        drain(sink)
         _write_second_batch(docs, "doc_id", src)
-        _drain(start())
+        drain(sink)
+        return read_stream_manifest(spark, dst)
 
-        stream_m = read_stream_manifest(spark, dst).select(
-            "shard_id",
-            F.col("n_rows").alias("n_docs"),
-            F.col("min_key").alias("min_doc_id"),
-            F.col("max_key").alias("max_doc_id"),
+    stream_m = _drained(run).select(
+        "shard_id",
+        F.col("n_rows").alias("n_docs"),
+        F.col("min_key").alias("min_doc_id"),
+        F.col("max_key").alias("max_doc_id"),
+    )
+    batch_m = (
+        docs.select(shard_id_col(F.col("doc_id")), "doc_id")
+        .groupBy("shard_id")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.min("doc_id").alias("min_doc_id"),
+            F.max("doc_id").alias("max_doc_id"),
         )
-        batch_m = (
-            docs.select(shard_id_col(F.col("doc_id")), "doc_id")
-            .groupBy("shard_id")
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.min("doc_id").alias("min_doc_id"),
-                F.max("doc_id").alias("max_doc_id"),
-            )
-        )
-        equiv = frames_equal_flag(stream_m, batch_m, "ok")
-        out = (
-            stream_m.crossJoin(F.broadcast(equiv))
-            .select(
-                "shard_id",
-                "n_docs",
-                "min_doc_id",
-                "max_doc_id",
-                F.col("ok").alias("stream_equals_batch_ok"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return out
+    )
+    equiv = frames_equal_flag(stream_m, batch_m, "ok")
+    return stream_m.crossJoin(F.broadcast(equiv)).select(
+        "shard_id",
+        "n_docs",
+        "min_doc_id",
+        "max_doc_id",
+        F.col("ok").alias("stream_equals_batch_ok"),
+    )
 
 
 def q_stream_dedup_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B87 streaming form, oracle-backed: the two-batch drain of
-    ``incremental_dedup_stream`` (even doc_ids arrive first and build the
+    ``dedup_stream_batch`` (even doc_ids arrive first and build the
     band index; odd doc_ids arrive second and dedup against it) must
     produce EXACTLY the verified cross-pair set of the batch operator
     ``minhash_incremental_detail`` on the same even/odd split — same
@@ -165,40 +176,29 @@ def q_stream_dedup_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact_set_pairs,
         minhash_incremental_detail,
     )
-    from ..streaming.dedup_stream import incremental_dedup_stream
+    from ..streaming.dedup_stream import PAIRS_SCHEMA, dedup_stream_batch
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    work = tempfile.mkdtemp(prefix="k2e_stream_dedup_")
-    try:
+
+    def run(work, drain):
         src, state = os.path.join(work, "src"), os.path.join(work, "state")
-
-        def start():
-            return incremental_dedup_stream(
-                spark,
-                spark.readStream.schema("doc_id long, text string").parquet(
-                    src + "/*"
-                ),
-                state,
+        sink = (
+            spark.readStream.schema("doc_id long, text string")
+            .parquet(src + "/*")
+            .writeStream.foreachBatch(
+                lambda df, bid: dedup_stream_batch(df.sparkSession, df, bid, state)
             )
-
+        )
         _two_batch_source(docs, "doc_id", src)
-        _drain(start())
+        drain(sink)
         _write_second_batch(docs, "doc_id", src)
-        _drain(start())
+        drain(sink)
+        # no pairs dir when batch 2 had no candidates at all
+        return _read_or_empty(
+            spark, os.path.join(state, "pairs"), PAIRS_SCHEMA
+        ).select("doc_new", "doc_old", "jaccard")
 
-        pairs_path = os.path.join(state, "pairs")
-        if os.path.isdir(pairs_path):
-            stream_pairs = spark.read.parquet(pairs_path).select(
-                "doc_new", "doc_old", "jaccard"
-            )
-        else:  # no candidates at all in batch 2
-            stream_pairs = spark.createDataFrame(
-                [], "doc_new long, doc_old long, jaccard double"
-            )
-        stream_pairs = stream_pairs.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
+    stream_pairs = _drained(run)
     batch_pairs = minhash_incremental_detail(spark, sf_dir).localCheckpoint(
         eager=True
     )
@@ -257,31 +257,23 @@ def q_stream_rollup_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type"
     )
-    work = tempfile.mkdtemp(prefix="k2e_stream_rollup_")
-    try:
+
+    def run(work, drain):
         src, state = os.path.join(work, "src"), os.path.join(work, "state")
-
-        def start():
-            return (
-                spark.readStream.schema(
-                    "event_id long, user_id long, ts timestamp, event_type string"
-                )
-                .parquet(src + "/*")
-                .writeStream.foreachBatch(continuous_distinct_rollup_writer(spark, state))
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
+        sink = (
+            spark.readStream.schema(
+                "event_id long, user_id long, ts timestamp, event_type string"
             )
-
+            .parquet(src + "/*")
+            .writeStream.foreachBatch(continuous_distinct_rollup_writer(spark, state))
+        )
         _two_batch_source(ev, "event_id", src)
-        _drain(start())
+        drain(sink)
         _write_second_batch(ev, "event_id", src)
-        _drain(start())
+        drain(sink)
+        return read_distinct_rollup(spark, state)
 
-        est = read_distinct_rollup(spark, state).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
+    est = _drained(run)
     exact = ev.groupBy(
         F.date_trunc("hour", "ts").alias("bucket"), "event_type"
     ).agg(F.countDistinct("user_id").cast("long").alias("n_users_exact"))
@@ -347,6 +339,7 @@ def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
     return spark.createDataFrame([], schema)
 
 
+
 def q_stream_tumble_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B27+B29 oracle-backed: the streaming tumbling-window aggregate
     (``windows.tumbling_counts`` — watermark + window + agg) drained over
@@ -369,52 +362,39 @@ def q_stream_tumble_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type", "value"
     )
-    work = tempfile.mkdtemp(prefix="k2e_stream_tumble_")
-    try:
-        src = os.path.join(work, "src")
+
+    def complete_leg(work, drain):
+        src, out_dir = os.path.join(work, "src"), os.path.join(work, "out")
         _b1, b2, _tmid = _time_split_batches(ev, "ts", src)
-        complete_dir = os.path.join(work, "out_complete")
-        append_dir = os.path.join(work, "out_append")
-
-        def start_complete():
-            return (
-                tumbling_counts(_events_stream(spark, src))
-                .writeStream.foreachBatch(_overwrite_sink(complete_dir))
-                .outputMode("complete")
-                .option("checkpointLocation", os.path.join(work, "ck_complete"))
-                .trigger(availableNow=True)
-                .start()
-            )
-
-        def start_append():
-            return (
-                tumbling_counts(_events_stream(spark, src))
-                .writeStream.format("parquet")
-                .option("path", append_dir)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(work, "ck_append"))
-                .trigger(availableNow=True)
-                .start()
-            )
-
-        _drain(start_complete())
+        sink = (
+            tumbling_counts(_events_stream(spark, src))
+            .writeStream.foreachBatch(_overwrite_sink(out_dir))
+            .outputMode("complete")
+        )
+        drain(sink)
         b2.coalesce(1).write.parquet(src + "/b2")
-        _drain(start_complete())
-        stream_out = (
-            _read_or_empty(spark, complete_dir, out_schema).localCheckpoint(eager=True)
-        )
+        drain(sink)
+        return _read_or_empty(spark, out_dir, out_schema)
 
-        # append-mode late-drop leg: fresh checkpoint sees b1+b2 as its
-        # first batch, then the replayed-oldest rows arrive late
-        _drain(start_append())
+    def append_leg(work, drain):
+        # a fresh checkpoint sees b1+b2 as its first batch, then the
+        # replayed-oldest rows arrive late
+        src, out_dir = os.path.join(work, "src"), os.path.join(work, "out")
+        _b1, b2, _tmid = _time_split_batches(ev, "ts", src)
+        b2.coalesce(1).write.parquet(src + "/b2")
+        sink = (
+            tumbling_counts(_events_stream(spark, src))
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+            .outputMode("append")
+        )
+        drain(sink)
         ev.orderBy("ts").limit(100).coalesce(1).write.parquet(src + "/b3")
-        _drain(start_append())
-        append_out = (
-            _read_or_empty(spark, append_dir, out_schema).localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        drain(sink)
+        return _read_or_empty(spark, out_dir, out_schema)
 
+    stream_out = _drained(complete_leg)
+    append_out = _drained(append_leg)
     batch_twin = tumbling_counts(ev)  # same code path, batch evaluation
     eq = frames_equal_flag(stream_out, batch_twin, "stream_equals_batch_ok")
     # closed-window subset: append emitted > 0 windows, every one of them
@@ -455,35 +435,26 @@ def q_stream_session_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type", "value"
     )
-    work = tempfile.mkdtemp(prefix="k2e_stream_session_")
-    try:
-        src = os.path.join(work, "src")
+
+    def run(work, drain):
+        src, out_dir = os.path.join(work, "src"), os.path.join(work, "out")
         _b1, b2, _tmid = _time_split_batches(ev, "ts", src)
-
-        out_dir = os.path.join(work, "out")
-
-        def start():
-            return (
-                session_counts(_events_stream(spark, src))
-                .writeStream.foreachBatch(_overwrite_sink(out_dir))
-                .outputMode("complete")
-                .option("checkpointLocation", os.path.join(work, "ck"))
-                .trigger(availableNow=True)
-                .start()
-            )
-
-        _drain(start())
+        sink = (
+            session_counts(_events_stream(spark, src))
+            .writeStream.foreachBatch(_overwrite_sink(out_dir))
+            .outputMode("complete")
+        )
+        drain(sink)
         b2.coalesce(1).write.parquet(src + "/b2")
-        _drain(start())
-        stream_out = _read_or_empty(
+        drain(sink)
+        return _read_or_empty(
             spark,
             out_dir,
             "session_start timestamp, session_end timestamp, user_id bigint,"
             " n_events bigint, session_value double",
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        )
 
+    stream_out = _drained(run)
     batch_twin = session_counts(ev)
     eq = frames_equal_flag(stream_out, batch_twin, "stream_equals_batch_ok")
     return stream_out.crossJoin(F.broadcast(eq)).select(
@@ -509,31 +480,23 @@ def q_stream_sliding_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type", "value"
     )
-    work = tempfile.mkdtemp(prefix="k2e_stream_sliding_")
-    try:
-        src = os.path.join(work, "src")
+
+    def run(work, drain):
+        src, out_dir = os.path.join(work, "src"), os.path.join(work, "out")
         _b1, b2, _tmid = _time_split_batches(ev, "ts", src)
-        out_dir = os.path.join(work, "out")
-
-        def start():
-            return (
-                sliding_counts(_events_stream(spark, src))
-                .writeStream.foreachBatch(_overwrite_sink(out_dir))
-                .outputMode("complete")
-                .option("checkpointLocation", os.path.join(work, "ck"))
-                .trigger(availableNow=True)
-                .start()
-            )
-
-        _drain(start())
+        sink = (
+            sliding_counts(_events_stream(spark, src))
+            .writeStream.foreachBatch(_overwrite_sink(out_dir))
+            .outputMode("complete")
+        )
+        drain(sink)
         b2.coalesce(1).write.parquet(src + "/b2")
-        _drain(start())
-        stream_out = _read_or_empty(
+        drain(sink)
+        return _read_or_empty(
             spark, out_dir, "window_start timestamp, user_id bigint, n bigint"
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        )
 
+    stream_out = _drained(run)
     batch_twin = sliding_counts(ev)
     eq = frames_equal_flag(stream_out, batch_twin, "stream_equals_batch_ok")
     return stream_out.crossJoin(F.broadcast(eq)).select(
@@ -556,40 +519,28 @@ def q_stream_dedup_w_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type", "value"
     )
-    work = tempfile.mkdtemp(prefix="k2e_stream_dedupw_")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
+
+    def run(work, drain):
+        src, out_dir = os.path.join(work, "src"), os.path.join(work, "out")
         ev.coalesce(1).write.parquet(src + "/b1")
-
-        out_dir = os.path.join(work, "out")
-
-        def start():
-            return (
-                streaming_dedup(_events_stream(spark, src))
-                .writeStream.format("parquet")
-                .option("path", out_dir)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(work, "ck"))
-                .trigger(availableNow=True)
-                .start()
-            )
-
-        _drain(start())
+        sink = (
+            streaming_dedup(_events_stream(spark, src))
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+            .outputMode("append")
+        )
+        drain(sink)
         # replay the newest 200 events: ~the last hour lands inside the
         # watermark horizon (state dedup), the rest below it (late drop)
         ev.orderBy(F.col("ts").desc()).limit(200).coalesce(1).write.parquet(
             src + "/b2"
         )
-        _drain(start())
-        stream_out = (
-            _read_or_empty(spark, out_dir, _EVENT_COLS)
-            .select("event_id", "event_type")
-            .localCheckpoint(eager=True)
+        drain(sink)
+        return _read_or_empty(spark, out_dir, _EVENT_COLS).select(
+            "event_id", "event_type"
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
+    stream_out = _drained(run)
     once = ev.select("event_id", "event_type")
     eq = frames_equal_flag(stream_out, once, "each_event_exactly_once_ok")
     return stream_out.crossJoin(F.broadcast(eq)).select(
@@ -609,30 +560,23 @@ def q_stream_stateful_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type", "value"
     )
-    work = tempfile.mkdtemp(prefix="k2e_stream_stateful_")
-    try:
-        src = os.path.join(work, "src")
-        _b1, b2, _tmid = _time_split_batches(ev, "ts", src)
 
-        out_dir = os.path.join(work, "out")
+    def run(work, drain):
+        src, out_dir = os.path.join(work, "src"), os.path.join(work, "out")
+        _b1, b2, _tmid = _time_split_batches(ev, "ts", src)
 
         def fb(bdf: DataFrame, _bid: int) -> None:
             bdf.write.mode("append").parquet(out_dir)
 
-        def start():
-            return (
-                running_totals_stateful(_events_stream(spark, src))
-                .writeStream.foreachBatch(fb)
-                .outputMode("update")
-                .option("checkpointLocation", os.path.join(work, "ck"))
-                .trigger(availableNow=True)
-                .start()
-            )
-
-        _drain(start())
+        sink = (
+            running_totals_stateful(_events_stream(spark, src))
+            .writeStream.foreachBatch(fb)
+            .outputMode("update")
+        )
+        drain(sink)
         b2.coalesce(1).write.parquet(src + "/b2")
-        _drain(start())
-        final = (
+        drain(sink)
+        return (
             _read_or_empty(
                 spark, out_dir, "user_id bigint, n_events bigint, total_value double"
             )
@@ -645,12 +589,9 @@ def q_stream_stateful_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # non-final total; r5 ADVICE)
                 F.max_by("total_value", "n_events").alias("total_value"),
             )
-            .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
-    return final.select("user_id", "n_events", "total_value")
+    return _drained(run).select("user_id", "n_events", "total_value")
 
 
 STREAM_JOIN_WINDOW_MIN = 120  # funnel match window (click → purchase)
@@ -683,36 +624,24 @@ def q_stream_static_join_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id long, user_id long, event_type string, value double,"
         " c_mktsegment string"
     )
-    work = tempfile.mkdtemp(prefix="k2e_stream_sjoin_")
-    try:
-        src = os.path.join(work, "src")
+
+    def run(work, drain):
+        src, out_dir = os.path.join(work, "src"), os.path.join(work, "out")
         _b1, b2, _tmid = _time_split_batches(ev, "ts", src)
-        out_dir = os.path.join(work, "out")
-
-        def start():
-            enriched = (
-                _events_stream(spark, src)
-                .join(F.broadcast(dim), "user_id")
-                .select("event_id", "user_id", "event_type", "value", "c_mktsegment")
-            )
-            return (
-                enriched.writeStream.format("parquet")
-                .option("path", out_dir)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(work, "ck"))
-                .trigger(availableNow=True)
-                .start()
-            )
-
-        _drain(start())
-        b2.coalesce(1).write.parquet(src + "/b2")
-        _drain(start())
-        stream_out = _read_or_empty(spark, out_dir, out_schema).localCheckpoint(
-            eager=True
+        sink = (
+            _events_stream(spark, src)
+            .join(F.broadcast(dim), "user_id")
+            .select("event_id", "user_id", "event_type", "value", "c_mktsegment")
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+            .outputMode("append")
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        drain(sink)
+        b2.coalesce(1).write.parquet(src + "/b2")
+        drain(sink)
+        return _read_or_empty(spark, out_dir, out_schema)
 
+    stream_out = _drained(run)
     batch_twin = ev.join(F.broadcast(dim), "user_id").select(
         "event_id", "user_id", "event_type", "value", "c_mktsegment"
     )
@@ -761,64 +690,54 @@ def q_stream_stream_join_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id long, click_id long, purchase_id long,"
         " click_ts timestamp, purchase_ts timestamp"
     )
-    work = tempfile.mkdtemp(prefix="k2e_stream_ssjoin_")
-    try:
-        src = os.path.join(work, "src")
-        _b1, b2, _tmid = _time_split_batches(ev, "ts", src)
-        out_dir = os.path.join(work, "out")
 
-        def pairs_of(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
-            c = clicks.filter(F.col("event_type") == "click").select(
-                F.col("user_id").alias("c_user"),
-                F.col("event_id").alias("click_id"),
-                F.col("ts").alias("click_ts"),
-            )
-            p = purchases.filter(F.col("event_type") == "purchase").select(
-                F.col("user_id").alias("p_user"),
-                F.col("event_id").alias("purchase_id"),
-                F.col("ts").alias("purchase_ts"),
-            )
-            return c.join(
-                p,
-                (F.col("c_user") == F.col("p_user"))
-                & (F.col("purchase_ts") >= F.col("click_ts"))
-                & (
-                    F.col("purchase_ts")
-                    <= F.col("click_ts")
-                    + F.expr(f"INTERVAL {STREAM_JOIN_WINDOW_MIN} MINUTES")
-                ),
-            ).select(
-                F.col("c_user").alias("user_id"),
-                "click_id",
-                "purchase_id",
-                "click_ts",
-                "purchase_ts",
-            )
-
-        def start():
-            # two independent file streams over the same arrivals; the
-            # over-span watermark bounds state formally without evicting
-            clicks = _events_stream(spark, src).withWatermark("ts", "366 days")
-            purchases = _events_stream(spark, src).withWatermark("ts", "366 days")
-            return (
-                pairs_of(clicks, purchases)
-                .writeStream.format("parquet")
-                .option("path", out_dir)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(work, "ck"))
-                .trigger(availableNow=True)
-                .start()
-            )
-
-        _drain(start())
-        b2.coalesce(1).write.parquet(src + "/b2")
-        _drain(start())
-        stream_out = _read_or_empty(spark, out_dir, out_schema).localCheckpoint(
-            eager=True
+    def pairs_of(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
+        c = clicks.filter(F.col("event_type") == "click").select(
+            F.col("user_id").alias("c_user"),
+            F.col("event_id").alias("click_id"),
+            F.col("ts").alias("click_ts"),
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        p = purchases.filter(F.col("event_type") == "purchase").select(
+            F.col("user_id").alias("p_user"),
+            F.col("event_id").alias("purchase_id"),
+            F.col("ts").alias("purchase_ts"),
+        )
+        return c.join(
+            p,
+            (F.col("c_user") == F.col("p_user"))
+            & (F.col("purchase_ts") >= F.col("click_ts"))
+            & (
+                F.col("purchase_ts")
+                <= F.col("click_ts")
+                + F.expr(f"INTERVAL {STREAM_JOIN_WINDOW_MIN} MINUTES")
+            ),
+        ).select(
+            F.col("c_user").alias("user_id"),
+            "click_id",
+            "purchase_id",
+            "click_ts",
+            "purchase_ts",
+        )
 
+    def run(work, drain):
+        src, out_dir = os.path.join(work, "src"), os.path.join(work, "out")
+        _b1, b2, _tmid = _time_split_batches(ev, "ts", src)
+        # two independent file streams over the same arrivals; the
+        # over-span watermark bounds state formally without evicting
+        clicks = _events_stream(spark, src).withWatermark("ts", "366 days")
+        purchases = _events_stream(spark, src).withWatermark("ts", "366 days")
+        sink = (
+            pairs_of(clicks, purchases)
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+            .outputMode("append")
+        )
+        drain(sink)
+        b2.coalesce(1).write.parquet(src + "/b2")
+        drain(sink)
+        return _read_or_empty(spark, out_dir, out_schema)
+
+    stream_out = _drained(run)
     batch_twin = pairs_of(ev, ev)
     eq = frames_equal_flag(stream_out, batch_twin, "stream_equals_batch_ok")
     # pure integer division (both engines truncate nonnegative µs the same)
@@ -863,29 +782,21 @@ def q_stream_cms_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.cms_stream import continuous_cms_writer, read_cms
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    work = tempfile.mkdtemp(prefix="k2e_stream_cms_")
-    try:
+
+    def run(work, drain):
         src, state = os.path.join(work, "src"), os.path.join(work, "state")
-
-        def start():
-            return (
-                spark.readStream.schema("doc_id long, text string")
-                .parquet(src + "/*")
-                .writeStream.foreachBatch(continuous_cms_writer(spark, state))
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-
+        sink = (
+            spark.readStream.schema("doc_id long, text string")
+            .parquet(src + "/*")
+            .writeStream.foreachBatch(continuous_cms_writer(spark, state))
+        )
         _two_batch_source(docs, "doc_id", src)
-        _drain(start())
+        drain(sink)
         _write_second_batch(docs, "doc_id", src)
-        _drain(start())
+        drain(sink)
+        return read_cms(spark, state)
 
-        stream_cms = read_cms(spark, state).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
+    stream_cms = _drained(run)
     toks = doc_token_stream(docs)
     batch_cms = cms_partials(toks).selectExpr("row", "bucket", "cnt")
     eq = frames_equal_flag(stream_cms, batch_cms, "stream_equals_batch_cms_ok")
@@ -959,32 +870,22 @@ def q_stream_timeout_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id long, session_start timestamp, session_last timestamp,"
         " n_events long, sum_v_micro long"
     )
-    work = tempfile.mkdtemp(prefix="k2e_stream_timeout_")
-    try:
-        src = os.path.join(work, "src")
+
+    def run(work, drain):
+        src, out_dir = os.path.join(work, "src"), os.path.join(work, "out")
         _b1, b2, _tmid = _time_split_batches(ev, "ts", src)
-        out_dir = os.path.join(work, "out")
-
-        def start():
-            return (
-                sessionize_stateful_timeout(_events_stream(spark, src))
-                .writeStream.format("parquet")
-                .option("path", out_dir)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(work, "ck"))
-                .trigger(availableNow=True)
-                .start()
-            )
-
-        _drain(start())
-        b2.coalesce(1).write.parquet(src + "/b2")
-        _drain(start())
-        stream_out = _read_or_empty(spark, out_dir, out_schema).localCheckpoint(
-            eager=True
+        sink = (
+            sessionize_stateful_timeout(_events_stream(spark, src))
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+            .outputMode("append")
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        drain(sink)
+        b2.coalesce(1).write.parquet(src + "/b2")
+        drain(sink)
+        return _read_or_empty(spark, out_dir, out_schema)
 
+    stream_out = _drained(run)
     # batch twin: lag-gap sessionization over the full table, micro-units
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     gap_us = F.lit(SESSION_GAP_US)
@@ -1065,6 +966,8 @@ def q_stream_rocksdb_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The provider is a session-wide conf read at query start; the prior
     values are restored in ``finally`` so no other query inherits it."""
+    from ..streaming.windows import use_rocksdb_state
+
     ev = load(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
     prov_key = "spark.sql.streaming.stateStore.providerClass"
     chg_key = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
@@ -1075,73 +978,48 @@ def q_stream_rocksdb_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         except Exception:
             return None
 
-    old_prov, old_chg = _get(prov_key), _get(chg_key)
-    work = tempfile.mkdtemp(prefix="k2e_stream_rocksdb_")
-    progresses = []
-    try:
-        from ..streaming.windows import use_rocksdb_state
-
-        src = os.path.join(work, "src")
+    def run(work, drain):
+        src, out_dir = os.path.join(work, "src"), os.path.join(work, "out")
         _b1, b2, _tmid = _time_split_batches(ev, "ts", src)
-        out_dir = os.path.join(work, "out")
-        use_rocksdb_state(spark)
-
-        def start():
-            agg = (
-                _events_stream(spark, src)
-                .groupBy("event_type")
-                .agg(
-                    F.count("*").cast("long").alias("n_events"),
-                    F.sum(
-                        F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("long")
-                    )
-                    .cast("long")
-                    .alias("sum_v_micro"),
-                )
+        agg = (
+            _events_stream(spark, src)
+            .groupBy("event_type")
+            .agg(
+                F.count("*").cast("long").alias("n_events"),
+                F.sum(F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("long"))
+                .cast("long")
+                .alias("sum_v_micro"),
             )
-            return (
-                agg.writeStream.foreachBatch(_overwrite_sink(out_dir))
-                .outputMode("complete")
-                .option("checkpointLocation", os.path.join(work, "ck"))
-                .trigger(availableNow=True)
-                .start()
-            )
-
-        for write_b2 in (False, True):
-            if write_b2:
-                b2.coalesce(1).write.parquet(src + "/b2")
-            q = start()
-            # a False return means the drain timed out with the query still
-            # live — restarting on the same checkpoint would then race the
-            # first run (r7 ADVICE); fail loudly instead
-            if not q.awaitTermination(600):
-                q.stop()
-                raise TimeoutError(
-                    "q_stream_rocksdb_equiv: availableNow drain did not "
-                    f"finish within 600s (restart leg={write_b2})"
-                )
-            progresses.extend(q.recentProgress or [])
-        out_schema = "event_type string, n_events long, sum_v_micro long"
-        final = _read_or_empty(spark, out_dir, out_schema).localCheckpoint(
-            eager=True
         )
+        sink = agg.writeStream.foreachBatch(_overwrite_sink(out_dir)).outputMode(
+            "complete"
+        )
+        progresses = drain(sink)
+        b2.coalesce(1).write.parquet(src + "/b2")
+        progresses += drain(sink)
+        data_batches = [
+            p for p in progresses if p.stateOperators and p.numInputRows > 0
+        ]
+        served = bool(data_batches) and all(
+            any("rocksdb" in m.lower() for m in (so.customMetrics or {}))
+            for p in data_batches
+            for so in p.stateOperators
+        )
+        out_schema = "event_type string, n_events long, sum_v_micro long"
+        return _read_or_empty(spark, out_dir, out_schema).withColumn(
+            "rocksdb_state_ok", F.lit(served)
+        )
+
+    old_prov, old_chg = _get(prov_key), _get(chg_key)
+    try:
+        use_rocksdb_state(spark)
+        return _drained(run)
     finally:
         for k, old in ((prov_key, old_prov), (chg_key, old_chg)):
             if old is None:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, old)
-        shutil.rmtree(work, ignore_errors=True)
-
-    data_batches = [
-        p for p in progresses if p.stateOperators and p.numInputRows > 0
-    ]
-    served = bool(data_batches) and all(
-        any("rocksdb" in m.lower() for m in (so.customMetrics or {}))
-        for p in data_batches
-        for so in p.stateOperators
-    )
-    return final.withColumn("rocksdb_state_ok", F.lit(served))
 
 
 N_BACKPRESSURE_FILES = 6
@@ -1165,42 +1043,39 @@ def q_stream_backpressure_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     must equal DuckDB's one-shot batch aggregate (hashed columns:
     per-type exact count + micro-unit sum)."""
     ev = load(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
-    work = tempfile.mkdtemp(prefix="k2e_stream_bp_")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
-        # Chop the backlog into N POSITIONAL slices — no value-range math,
-        # so no spurious red on the degenerate all-equal-ts / all-equal-id
-        # shapes the r7/r8 range splits tripped over (r8 ADVICE), and no
-        # eager min/max driver actions.  coalesce(1) first: within ONE
-        # partition monotonically_increasing_id is contiguous from 0, so
-        # residues mod N provably cycle and >= 2 slices are non-empty for
-        # any >= 2-row input (across partitions the id bases are
-        # partitionId * 2^33, whose residues can collide — e.g. two
-        # single-row partitions at indices 0 and 3 both land residue 0).
-        # Single-task is fine: this is test scaffolding writing the
-        # backlog files, and the complete-mode aggregate unions all
-        # slices, so ANY partition of the rows exercises the limiter
-        # equally.  One localCheckpoint pins the nondeterministic ids so
-        # all N slice filters see the same values.
-        sliced = (
-            ev.coalesce(1)
-            .withColumn(
-                "__fidx",
-                F.monotonically_increasing_id() % N_BACKPRESSURE_FILES,
-            )
-            .localCheckpoint(eager=True)
+    # Chop the backlog into N POSITIONAL slices — no value-range math,
+    # so no spurious red on the degenerate all-equal-ts / all-equal-id
+    # shapes the r7/r8 range splits tripped over (r8 ADVICE), and no
+    # eager min/max driver actions.  coalesce(1) first: within ONE
+    # partition monotonically_increasing_id is contiguous from 0, so
+    # residues mod N provably cycle and >= 2 slices are non-empty for
+    # any >= 2-row input (across partitions the id bases are
+    # partitionId * 2^33, whose residues can collide — e.g. two
+    # single-row partitions at indices 0 and 3 both land residue 0).
+    # Single-task is fine: this is test scaffolding writing the
+    # backlog files, and the complete-mode aggregate unions all
+    # slices, so ANY partition of the rows exercises the limiter
+    # equally.  One localCheckpoint pins the nondeterministic ids so
+    # all N slice filters see the same values.
+    sliced = (
+        ev.coalesce(1)
+        .withColumn(
+            "__fidx",
+            F.monotonically_increasing_id() % N_BACKPRESSURE_FILES,
         )
-        n_nonempty = 0
-        n_rows_total = 0
-        for i in range(N_BACKPRESSURE_FILES):
-            p = sliced.filter(F.col("__fidx") == i).drop("__fidx")
-            c = p.count()
-            n_rows_total += c
-            if c > 0:
-                n_nonempty += 1
+        .localCheckpoint(eager=True)
+    )
+    slices = [
+        sliced.filter(F.col("__fidx") == i).drop("__fidx")
+        for i in range(N_BACKPRESSURE_FILES)
+    ]
+    counts = [p.count() for p in slices]
+    n_nonempty = sum(1 for c in counts if c > 0)
+
+    def run(work, drain):
+        src, out_dir = os.path.join(work, "src"), os.path.join(work, "out")
+        for i, p in enumerate(slices):
             p.coalesce(1).write.parquet(f"{src}/b{i:02d}")
-        out_dir = os.path.join(work, "out")
         agg = (
             spark.readStream.schema(_EVENT_COLS)
             .option("maxFilesPerTrigger", "1")
@@ -1213,39 +1088,21 @@ def q_stream_backpressure_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sum_v_micro"),
             )
         )
-        q = (
-            agg.writeStream.foreachBatch(_overwrite_sink(out_dir))
-            .outputMode("complete")
-            .option("checkpointLocation", os.path.join(work, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError(
-                "q_stream_backpressure_equiv: availableNow drain did not "
-                "finish within 600s"
+        progress = drain(
+            agg.writeStream.foreachBatch(_overwrite_sink(out_dir)).outputMode(
+                "complete"
             )
-        n_data_batches = sum(
-            1 for p in (q.recentProgress or []) if p.numInputRows > 0
         )
+        n_data_batches = sum(1 for p in progress if p.numInputRows > 0)
+        # a <2-row backlog cannot populate two slices; the limiter check
+        # is vacuous there rather than spuriously red
+        ok = n_data_batches >= n_nonempty and (n_nonempty > 1 or sum(counts) < 2)
         out_schema = "event_type string, n_events long, sum_v_micro long"
-        final = _read_or_empty(spark, out_dir, out_schema).localCheckpoint(
-            eager=True
+        return _read_or_empty(spark, out_dir, out_schema).withColumn(
+            "n_batches_ok", F.lit(bool(ok))
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return final.withColumn(
-        "n_batches_ok",
-        # a <2-row backlog cannot populate two slices; the limiter check is
-        # vacuous there rather than spuriously red
-        F.lit(
-            bool(
-                n_data_batches >= n_nonempty
-                and (n_nonempty > 1 or n_rows_total < 2)
-            )
-        ),
-    )
+
+    return _drained(run)
 
 
 REPLAY_FAULT_BATCH = 1  # fail the first attempt of the SECOND data batch
@@ -1277,10 +1134,9 @@ def q_stream_replay_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     attempted ≥ 2×, proving recovery re-delivered it rather than
     skipping ahead)."""
     ev = load(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
-    work = tempfile.mkdtemp(prefix="k2e_stream_replay_")
-    try:
-        src = os.path.join(work, "src")
-        os.makedirs(src)
+
+    def run(work, drain):
+        src, out_dir = os.path.join(work, "src"), os.path.join(work, "out")
         i_min, i_max = ev.agg(F.min("event_id"), F.max("event_id")).first()
         step = max(1, (int(i_max) - int(i_min) + 1) // 4)
         for i in range(4):
@@ -1288,7 +1144,6 @@ def q_stream_replay_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
             if i < 3:
                 p = p.filter(F.col("event_id") < F.lit(int(i_min) + (i + 1) * step))
             p.coalesce(1).write.parquet(f"{src}/b{i:02d}")
-        out_dir = os.path.join(work, "out")
         marker = os.path.join(work, "fault_fired")
         attempts_dir = os.path.join(work, "attempts")
         os.makedirs(attempts_dir)
@@ -1304,70 +1159,47 @@ def q_stream_replay_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
                 raise RuntimeError("injected-replay-fault")
             bdf.write.mode("overwrite").parquet(out_dir)
 
-        def start():
-            agg = (
-                spark.readStream.schema(_EVENT_COLS)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(src + "/*")
-                .groupBy("event_type")
-                .agg(
-                    F.count("*").cast("long").alias("n_events"),
-                    F.sum(
-                        F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("long")
-                    )
-                    .cast("long")
-                    .alias("sum_v_micro"),
-                    F.min("event_id").cast("long").alias("min_id"),
-                    F.max("event_id").cast("long").alias("max_id"),
-                )
+        agg = (
+            spark.readStream.schema(_EVENT_COLS)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src + "/*")
+            .groupBy("event_type")
+            .agg(
+                F.count("*").cast("long").alias("n_events"),
+                F.sum(F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("long"))
+                .cast("long")
+                .alias("sum_v_micro"),
+                F.min("event_id").cast("long").alias("min_id"),
+                F.max("event_id").cast("long").alias("max_id"),
             )
-            return (
-                agg.writeStream.foreachBatch(faulty_sink)
-                .outputMode("complete")
-                .option("checkpointLocation", os.path.join(work, "ck"))
-                .trigger(availableNow=True)
-                .start()
-            )
-
-        q1 = start()
+        )
+        sink = agg.writeStream.foreachBatch(faulty_sink).outputMode("complete")
         crashed = False
         try:
-            if not q1.awaitTermination(600):
-                q1.stop()
-                raise TimeoutError(
-                    "q_stream_replay_equiv: faulted drain neither failed "
-                    "nor finished within 600s"
-                )
+            drain(sink)
         except Exception as e:  # noqa: BLE001 - StreamingQueryException expected
             if "injected-replay-fault" not in str(e):
                 raise
             crashed = True
-        q2 = start()
-        if not q2.awaitTermination(600):
-            q2.stop()
-            raise TimeoutError(
-                "q_stream_replay_equiv: recovery drain did not finish "
-                "within 600s"
-            )
+        drain(sink)  # recovery on the same checkpoint
         fault_attempts = [
             f
             for f in os.listdir(attempts_dir)
             if f.startswith(f"b{REPLAY_FAULT_BATCH}_")
         ]
-        fault_ok = crashed and os.path.exists(marker)
-        replay_ok = len(fault_attempts) >= 2
         out_schema = (
             "event_type string, n_events long, sum_v_micro long, "
             "min_id long, max_id long"
         )
-        final = _read_or_empty(spark, out_dir, out_schema).localCheckpoint(
-            eager=True
+        return (
+            _read_or_empty(spark, out_dir, out_schema)
+            .withColumn(
+                "fault_injected_ok", F.lit(bool(crashed and os.path.exists(marker)))
+            )
+            .withColumn("batch_replayed_ok", F.lit(len(fault_attempts) >= 2))
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return final.withColumn("fault_injected_ok", F.lit(bool(fault_ok))).withColumn(
-        "batch_replayed_ok", F.lit(bool(replay_ok))
-    )
+
+    return _drained(run)
 
 
 OUTER_JOIN_WM_DELAY = "1 day"
@@ -1415,35 +1247,33 @@ def q_stream_outer_join_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id long, click_id long, click_ts timestamp,"
         " purchase_id long, purchase_ts timestamp"
     )
-    work = tempfile.mkdtemp(prefix="k2e_stream_oj_")
-    try:
-        src = os.path.join(work, "src")
+
+    def run(work, drain):
+        src, out_dir = os.path.join(work, "src"), os.path.join(work, "out")
         _b1, b2, _tmid = _time_split_batches(ev, "ts", src)
         t_max = ev.agg(F.max("ts")).first()[0]
-        out_dir = os.path.join(work, "out")
-
-        def start():
-            clicks = (
-                _events_stream(spark, src)
-                .withWatermark("ts", OUTER_JOIN_WM_DELAY)
-                .filter(F.col("event_type") == "click")
-                .select(
-                    F.col("user_id").alias("c_user"),
-                    F.col("event_id").alias("click_id"),
-                    F.col("ts").alias("click_ts"),
-                )
+        clicks = (
+            _events_stream(spark, src)
+            .withWatermark("ts", OUTER_JOIN_WM_DELAY)
+            .filter(F.col("event_type") == "click")
+            .select(
+                F.col("user_id").alias("c_user"),
+                F.col("event_id").alias("click_id"),
+                F.col("ts").alias("click_ts"),
             )
-            purchases = (
-                _events_stream(spark, src)
-                .withWatermark("ts", OUTER_JOIN_WM_DELAY)
-                .filter(F.col("event_type") == "purchase")
-                .select(
-                    F.col("user_id").alias("p_user"),
-                    F.col("event_id").alias("purchase_id"),
-                    F.col("ts").alias("purchase_ts"),
-                )
+        )
+        purchases = (
+            _events_stream(spark, src)
+            .withWatermark("ts", OUTER_JOIN_WM_DELAY)
+            .filter(F.col("event_type") == "purchase")
+            .select(
+                F.col("user_id").alias("p_user"),
+                F.col("event_id").alias("purchase_id"),
+                F.col("ts").alias("purchase_ts"),
             )
-            joined = clicks.join(
+        )
+        sink = (
+            clicks.join(
                 purchases,
                 (F.col("c_user") == F.col("p_user"))
                 & (F.col("purchase_ts") >= F.col("click_ts"))
@@ -1453,22 +1283,18 @@ def q_stream_outer_join_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
                     + F.expr(f"INTERVAL {STREAM_JOIN_WINDOW_MIN} MINUTES")
                 ),
                 "leftOuter",
-            ).select(
+            )
+            .select(
                 F.col("c_user").alias("user_id"),
                 "click_id",
                 "click_ts",
                 "purchase_id",
                 "purchase_ts",
             )
-            return (
-                joined.writeStream.format("parquet")
-                .option("path", out_dir)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(work, "ck"))
-                .trigger(availableNow=True)
-                .start()
-            )
-
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+            .outputMode("append")
+        )
         sentinels = spark.createDataFrame(
             [(10**12, -1, "click", 0.0), (10**12 + 1, -2, "purchase", 0.0)],
             "event_id long, user_id long, event_type string, value double",
@@ -1482,14 +1308,12 @@ def q_stream_outer_join_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "value",
         )
-        _drain(start())
+        drain(sink)
         b2.unionByName(sentinels).coalesce(1).write.parquet(src + "/b2")
-        _drain(start())
-        stream_out = _read_or_empty(spark, out_dir, out_schema).localCheckpoint(
-            eager=True
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        drain(sink)
+        return _read_or_empty(spark, out_dir, out_schema)
+
+    stream_out = _drained(run)
 
     c = ev.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("c_user"),
@@ -1549,11 +1373,10 @@ def q_stream_update_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually changed).  Two drains over the time-split fixture also
     exercise update-mode state recovery from the checkpoint."""
     ev = load(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
-    work = tempfile.mkdtemp(prefix="k2e_stream_upd_")
-    try:
-        src = os.path.join(work, "src")
+
+    def run(work, drain):
+        src, out_dir = os.path.join(work, "src"), os.path.join(work, "out")
         b1, b2, _tmid = _time_split_batches(ev, "ts", src)
-        out_dir = os.path.join(work, "out")
 
         def log_sink(bdf: DataFrame, bid: int) -> None:
             (
@@ -1562,34 +1385,24 @@ def q_stream_update_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .parquet(out_dir)
             )
 
-        def start():
-            agg = (
-                _events_stream(spark, src)
-                .groupBy("event_type")
-                .agg(
-                    F.count("*").cast("long").alias("n_events"),
-                    F.sum(
-                        F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("long")
-                    )
-                    .cast("long")
-                    .alias("sum_v_micro"),
-                )
+        agg = (
+            _events_stream(spark, src)
+            .groupBy("event_type")
+            .agg(
+                F.count("*").cast("long").alias("n_events"),
+                F.sum(F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("long"))
+                .cast("long")
+                .alias("sum_v_micro"),
             )
-            return (
-                agg.writeStream.foreachBatch(log_sink)
-                .outputMode("update")
-                .option("checkpointLocation", os.path.join(work, "ck"))
-                .trigger(availableNow=True)
-                .start()
-            )
-
-        _drain(start())
+        )
+        sink = agg.writeStream.foreachBatch(log_sink).outputMode("update")
+        drain(sink)
         b2.coalesce(1).write.parquet(src + "/b2")
-        _drain(start())
+        drain(sink)
         log_schema = (
             "event_type string, n_events long, sum_v_micro long, batch_id long"
         )
-        log = _read_or_empty(spark, out_dir, log_schema).localCheckpoint(eager=True)
+        log = _read_or_empty(spark, out_dir, log_schema)
         # keys in both fixture batches must have been emitted >= twice
         both = (
             b1.select("event_type")
@@ -1613,17 +1426,18 @@ def q_stream_update_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .collect()
         }
-        changed_only_ok = late_emits == b2_keys
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return log.withColumn("incremental_ok", F.lit(bool(incremental_ok))).withColumn(
+            "changed_only_ok", F.lit(late_emits == b2_keys)
+        )
+
     wlast = W.partitionBy("event_type").orderBy(F.desc("batch_id"))
-    final = (
-        log.withColumn("rn", F.row_number().over(wlast))
+    return (
+        _drained(run)
+        .withColumn("rn", F.row_number().over(wlast))
         .filter(F.col("rn") == 1)
-        .select("event_type", "n_events", "sum_v_micro")
-    )
-    return final.withColumn("incremental_ok", F.lit(bool(incremental_ok))).withColumn(
-        "changed_only_ok", F.lit(bool(changed_only_ok))
+        .select(
+            "event_type", "n_events", "sum_v_micro", "incremental_ok", "changed_only_ok"
+        )
     )
 
 
@@ -1650,30 +1464,24 @@ def q_stream_matview_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..streaming.matview_stream import matview_writer, read_matview
 
-    work = tempfile.mkdtemp(prefix="k2e_stream_mv_")
-    try:
+
+    def run(work, drain):
         src, state = os.path.join(work, "src"), os.path.join(work, "state")
-
-        def start():
-            return (
-                spark.readStream.schema(
-                    "o_orderkey long, o_orderstatus string, "
-                    "o_totalprice double, o_orderdate timestamp"
-                )
-                .parquet(src + "/*")
-                .writeStream.foreachBatch(matview_writer(spark, state))
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
+        sink = (
+            spark.readStream.schema(
+                "o_orderkey long, o_orderstatus string, "
+                "o_totalprice double, o_orderdate timestamp"
             )
-
+            .parquet(src + "/*")
+            .writeStream.foreachBatch(matview_writer(spark, state))
+        )
         _two_batch_source(o, "o_orderkey", src)
-        _drain(start())
+        drain(sink)
         _write_second_batch(o, "o_orderkey", src)
-        _drain(start())
-        stream_mv = read_matview(spark, state).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        drain(sink)
+        return read_matview(spark, state)
+
+    stream_mv = _drained(run)
 
     from ..operators.tableops import mv_aggregate, mv_project
 
@@ -1717,29 +1525,21 @@ def q_stream_quantile_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = load(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    work = tempfile.mkdtemp(prefix="k2e_stream_qh_")
-    try:
+
+    def run(work, drain):
         src, state = os.path.join(work, "src"), os.path.join(work, "state")
-
-        def start():
-            return (
-                spark.readStream.schema(
-                    "event_id long, event_type string, value double"
-                )
-                .parquet(src + "/*")
-                .writeStream.foreachBatch(continuous_qhist_writer(spark, state))
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-
+        sink = (
+            spark.readStream.schema("event_id long, event_type string, value double")
+            .parquet(src + "/*")
+            .writeStream.foreachBatch(continuous_qhist_writer(spark, state))
+        )
         _two_batch_source(ev, "event_id", src)
-        _drain(start())
+        drain(sink)
         _write_second_batch(ev, "event_id", src)
-        _drain(start())
-        stream_hist = read_qhist(spark, state).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        drain(sink)
+        return read_qhist(spark, state)
+
+    stream_hist = _drained(run)
 
     batch_hist = qhist_partials(ev.select("event_type", "value"))
     eq = frames_equal_flag(stream_hist, batch_hist, "stream_equals_batch_hist_ok")
@@ -1852,31 +1652,24 @@ def q_stream_cdc_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("percentile(cast(ts as bigint), 0.5)").alias("m")
     ).first()["m"]
     split = F.col("ts").cast("bigint") <= float(med)
-    work = tempfile.mkdtemp(prefix="k2e_stream_cdc_")
-    try:
+
+    def run(work, drain):
         src, state = os.path.join(work, "src"), os.path.join(work, "state")
-
-        def start():
-            return (
-                spark.readStream.schema(
-                    "event_id long, user_id long, event_type string, "
-                    "ts timestamp, value double"
-                )
-                .parquet(src + "/*")
-                .writeStream.foreachBatch(cdc_writer(spark, state))
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-
-        os.makedirs(src, exist_ok=True)
         ev.filter(split).coalesce(1).write.parquet(src + "/b1")
-        _drain(start())
+        sink = (
+            spark.readStream.schema(
+                "event_id long, user_id long, event_type string, "
+                "ts timestamp, value double"
+            )
+            .parquet(src + "/*")
+            .writeStream.foreachBatch(cdc_writer(spark, state))
+        )
+        drain(sink)
         ev.filter(~split).coalesce(1).write.parquet(src + "/b2")
-        _drain(start())
-        stream_state = read_cdc_table(spark, state).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        drain(sink)
+        return read_cdc_table(spark, state)
+
+    stream_state = _drained(run)
 
     # in-engine one-shot twin: the same argmax state machine over all events
     batch_state = (
@@ -1927,6 +1720,7 @@ def q_stream_cdf_view_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_cdc_table,
         sync_view_from_feed,
     )
+    from ..operators.timetravel import read_asof
 
     ev = load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts", "value"
@@ -1936,30 +1730,23 @@ def q_stream_cdf_view_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).first()["m"]
     split = F.col("ts").cast("bigint") <= float(med)
     cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    work = tempfile.mkdtemp(prefix="k2e_stream_cdfview_")
-    try:
+
+    def run(work, drain):
         src, state = os.path.join(work, "src"), os.path.join(work, "state")
         view = os.path.join(work, "view")
-
-        def start():
-            return (
-                spark.readStream.schema(
-                    "event_id long, user_id long, event_type string, "
-                    "ts timestamp, value double"
-                )
-                .parquet(src + "/*")
-                .writeStream.foreachBatch(cdc_writer(spark, state))
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-
-        os.makedirs(src, exist_ok=True)
         ev.filter(split).coalesce(1).write.parquet(src + "/b1")
-        _drain(start())
+        sink = (
+            spark.readStream.schema(
+                "event_id long, user_id long, event_type string, "
+                "ts timestamp, value double"
+            )
+            .parquet(src + "/*")
+            .writeStream.foreachBatch(cdc_writer(spark, state))
+        )
+        drain(sink)
         s1 = sync_view_from_feed(spark, state, view, ["event_type"], cents)
         ev.filter(~split).coalesce(1).write.parquet(src + "/b2")
-        _drain(start())
+        drain(sink)
         s2 = sync_view_from_feed(spark, state, view, ["event_type"], cents)
         incremental_ok = bool(
             s1["applied_to"] is not None
@@ -1967,9 +1754,7 @@ def q_stream_cdf_view_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
             and s2["applied_from"] > -1
             and s2["n_changes"] > 0
         )
-        from ..operators.timetravel import read_asof
-
-        got_view = read_asof(spark, view).localCheckpoint(eager=True)
+        got_view = read_asof(spark, view)
         recompute = (
             read_cdc_table(spark, state)
             .groupBy("event_type")
@@ -1980,14 +1765,32 @@ def q_stream_cdf_view_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         a = sorted(map(tuple, got_view.collect()))
         b = sorted(map(tuple, recompute.collect()))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return got_view.select(
-        F.col("event_type").alias("last_event_type"),
-        F.col("n_rows").alias("n_keys"),
-        F.col("sum_val").alias("sum_value_cents"),
-        F.lit(incremental_ok).alias("incremental_ok"),
-        F.lit(bool(a == b)).alias("view_equals_recompute_ok"),
+        return got_view.select(
+            F.col("event_type").alias("last_event_type"),
+            F.col("n_rows").alias("n_keys"),
+            F.col("sum_val").alias("sum_value_cents"),
+            F.lit(incremental_ok).alias("incremental_ok"),
+            F.lit(bool(a == b)).alias("view_equals_recompute_ok"),
+        )
+
+    return _drained(run)
+
+
+def _orders_by_status(sink: DataFrame, exactly_once: bool) -> DataFrame:
+    """Per-status count / exact cents / min-max key of a streamed orders
+    sink, with its ``exactly_once_ok`` flag — the hashed shape of the
+    Delta and Iceberg source/sink legs."""
+    return (
+        sink.groupBy(F.col("o_orderstatus").alias("status"))
+        .agg(
+            F.count("*").cast("long").alias("n_orders"),
+            F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long"))
+            .cast("long")
+            .alias("sum_cents"),
+            F.min("o_orderkey").cast("long").alias("min_key"),
+            F.max("o_orderkey").cast("long").alias("max_key"),
+        )
+        .withColumn("exactly_once_ok", F.lit(exactly_once))
     )
 
 
@@ -2016,59 +1819,33 @@ def q_stream_delta_src_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.dataSource.register(DeltaStreamDataSource)
     except Exception:
         pass  # already registered in this session
-    work = tempfile.mkdtemp(prefix="k2e_stream_dsrc_")
-    try:
-        table = os.path.join(work, "t")
-        out = os.path.join(work, "out")
-        ck = os.path.join(work, "ckpt")
-        k2 = F.col("o_orderkey") % 2
+    k2 = F.col("o_orderkey") % 2
 
-        def drain():
-            _drain(
-                spark.readStream.format("delta_interop")
-                .option("path", table)
-                .load()
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
-            )
-
+    def run(work, drain):
+        table, out = os.path.join(work, "t"), os.path.join(work, "out")
         dl.delta_append(
             spark, table, o.filter(k2 == 0), partition_by=["o_orderstatus"]
         )
-        drain()
+        sink = (
+            spark.readStream.format("delta_interop")
+            .option("path", table)
+            .load()
+            .writeStream.format("parquet")
+            .option("path", out)
+        )
+        drain(sink)
         n_first = spark.read.parquet(out).count()
         dl.delta_append(
             spark, table, o.filter(k2 == 1), partition_by=["o_orderstatus"]
         )
-        drain()
-        sink = spark.read.parquet(out)
-        n_total = sink.count()
+        drain(sink)
+        sink_rows = spark.read.parquet(out)
         exactly_once = bool(
-            n_first == o.filter(k2 == 0).count() and n_total == o.count()
+            n_first == o.filter(k2 == 0).count() and sink_rows.count() == o.count()
         )
-        got = (
-            sink.groupBy(F.col("o_orderstatus").alias("status"))
-            .agg(
-                F.count("*").cast("long").alias("n_orders"),
-                F.sum(
-                    F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast(
-                        "long"
-                    )
-                )
-                .cast("long")
-                .alias("sum_cents"),
-                F.min("o_orderkey").cast("long").alias("min_key"),
-                F.max("o_orderkey").cast("long").alias("max_key"),
-            )
-            .withColumn("exactly_once_ok", F.lit(exactly_once))
-            .localCheckpoint(eager=True)  # materialize before the rmtree
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return got
+        return _orders_by_status(sink_rows, exactly_once)
+
+    return _drained(run)
 
 
 def q_stream_delta_sink_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2086,57 +1863,30 @@ def q_stream_delta_sink_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    work = tempfile.mkdtemp(prefix="k2e_stream_dsink_")
-    try:
-        src = os.path.join(work, "src")
-        table = os.path.join(work, "t")
-        ck = os.path.join(work, "ckpt")
 
-        def drain():
-            _drain(
-                spark.readStream.schema(
-                    "o_orderkey long, o_orderstatus string, o_totalprice double"
-                )
-                .parquet(src + "/*")
-                .writeStream.foreachBatch(
-                    dl.delta_stream_sink(
-                        table, "k2e-sink", partition_by=["o_orderstatus"]
-                    )
-                )
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
+    def run(work, drain):
+        src, table = os.path.join(work, "src"), os.path.join(work, "t")
+        sink = (
+            spark.readStream.schema(
+                "o_orderkey long, o_orderstatus string, o_totalprice double"
             )
-
+            .parquet(src + "/*")
+            .writeStream.foreachBatch(
+                dl.delta_stream_sink(table, "k2e-sink", partition_by=["o_orderstatus"])
+            )
+        )
         _two_batch_source(o, "o_orderkey", src)
-        drain()
+        drain(sink)
         _write_second_batch(o, "o_orderkey", src)
-        drain()
-        sink = dl.read_delta(spark, table)
+        drain(sink)
+        table_rows = dl.read_delta(spark, table)
         txns = dl.delta_snapshot(table)["txns"]
         exactly_once = bool(
-            sink.count() == o.count() and txns.get("k2e-sink") == 1
+            table_rows.count() == o.count() and txns.get("k2e-sink") == 1
         )
-        got = (
-            sink.groupBy(F.col("o_orderstatus").alias("status"))
-            .agg(
-                F.count("*").cast("long").alias("n_orders"),
-                F.sum(
-                    F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast(
-                        "long"
-                    )
-                )
-                .cast("long")
-                .alias("sum_cents"),
-                F.min("o_orderkey").cast("long").alias("min_key"),
-                F.max("o_orderkey").cast("long").alias("max_key"),
-            )
-            .withColumn("exactly_once_ok", F.lit(exactly_once))
-            .localCheckpoint(eager=True)  # materialize before the rmtree
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return got
+        return _orders_by_status(table_rows, exactly_once)
+
+    return _drained(run)
 
 
 def q_stream_iceberg_src_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2157,55 +1907,31 @@ def q_stream_iceberg_src_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.dataSource.register(IcebergStreamDataSource)
     except Exception:
         pass  # already registered in this session
-    work = tempfile.mkdtemp(prefix="k2e_stream_isrc_")
-    try:
-        table = os.path.join(work, "t")
-        out = os.path.join(work, "out")
-        ck = os.path.join(work, "ckpt")
-        k2 = F.col("o_orderkey") % 2
+    k2 = F.col("o_orderkey") % 2
 
-        def drain():
-            _drain(
-                spark.readStream.format("iceberg_interop")
-                .option("path", table)
-                .load()
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
-            )
-
+    def run(work, drain):
+        table, out = os.path.join(work, "t"), os.path.join(work, "out")
         im.iceberg_append(spark, table, o.filter(k2 == 0))
-        drain()
+        sink = (
+            spark.readStream.format("iceberg_interop")
+            .option("path", table)
+            .load()
+            .writeStream.format("parquet")
+            .option("path", out)
+        )
+        drain(sink)
         n_first = spark.read.parquet(out).count()
         im.iceberg_append(spark, table, o.filter(k2 == 1))
-        drain()
-        sink = spark.read.parquet(out)
+        drain(sink)
+        sink_rows = spark.read.parquet(out)
         exactly_once = bool(
-            n_first == o.filter(k2 == 0).count()
-            and sink.count() == o.count()
+            n_first == o.filter(k2 == 0).count() and sink_rows.count() == o.count()
         )
-        got = (
-            sink.groupBy(F.col("o_orderstatus").alias("status"))
-            .agg(
-                F.count("*").cast("long").alias("n_orders"),
-                F.sum(
-                    F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast(
-                        "long"
-                    )
-                )
-                .cast("long")
-                .alias("sum_cents"),
-                F.min("o_orderkey").cast("long").alias("min_key"),
-                F.max("o_orderkey").cast("long").alias("max_key"),
-            )
-            .withColumn("exactly_once_ok", F.lit(exactly_once))
-            .localCheckpoint(eager=True)  # materialize before the rmtree
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return got
+        return _orders_by_status(sink_rows, exactly_once)
+
+    return _drained(run)
+
+
 
 
 QUERIES = {

@@ -6,9 +6,10 @@ re-shingled.
 
 State layout under ``state_dir`` (all parquet, all partitioned by
 ``batch_id`` so a replayed micro-batch dynamic-overwrites ITS OWN
-partition — the same idempotent-upsert idiom as the continuous rollup,
-making the whole pipeline effectively exactly-once on top of
-foreachBatch's at-least-once):
+partition instead of appending a second copy — which makes the whole
+pipeline effectively exactly-once on top of foreachBatch's
+at-least-once; the continuous rollup's touched-bucket merge is NOT this
+idiom, see ``rollup.py``):
 
 - ``band_index/``  (doc_id, band_id, band_hash, batch_id) — 24 bytes/row
   + partition key; THE index a 100 TB corpus persists once.

@@ -16,20 +16,16 @@ oracle pins the streaming state machine row-for-row):
    batch id (B138 protocol: data under ``data/c{batch_id}/``, then the
    atomic manifest rename IS the commit).
 
-r11 unification (r10 verdict #4): this writer previously used its own
-versioned-directory convention (``versioned_state.py``, now the qhist
-writer's only client); publishing through the B138 manifest protocol
-instead means (a) replay idempotence falls out of commit ATOMICITY — a
-crash between the data write and the manifest rename leaves an orphan
-``data/c{N}/`` that no manifest references, so the replayed batch
-re-reads the latest manifest STRICTLY BELOW its batch id (the pre-batch
-state, never its own partial output), deterministically rewrites the
-same data, and re-renames the manifest — and (b) the whole time-travel
-read surface works over the streaming table for free:
+The commit is ``state_commit.commit_batch_state`` — the replay-safe step
+the B102 CMS and B136 histogram writers share — so replay idempotence
+falls out of commit ATOMICITY (a crash between the data write and the
+manifest rename leaves an orphan ``data/c{N}/`` that no manifest
+references; the replayed batch re-reads the latest snapshot STRICTLY
+BELOW its batch id and deterministically re-publishes), and the whole
+time-travel read surface works over the streaming table for free:
 ``read_asof(version=batch_id)`` is the MV as of any retained batch.
-Retention is the B145 ``vacuum`` (keep_last=2 — a replay of batch N
-needs its merge source N-1, never anything older), and reads below the
-floor fail loudly instead of re-reading vacuumed files.
+Retention keeps the last 2 snapshots, and reads below the floor fail
+loudly instead of re-reading vacuumed files.
 
 At 100 TB: per-batch cost = one delta scan + an |MV|-sized merge; the
 manifest dance is metadata-rate.  (An ACID table format's MERGE INTO
@@ -42,19 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.tableops import MV_STATE_SCHEMA, mv_aggregate, mv_merge, mv_project
-from ..operators.timetravel import (
-    commit_snapshot,
-    read_asof,
-    snapshot_versions,
-    vacuum,
-)
-
-
-def _prev_version(table_dir: str, batch_id: int) -> int | None:
-    """Latest committed version STRICTLY below ``batch_id`` — the
-    pre-batch state a (possibly replayed) batch merges from."""
-    vs = [v for v in snapshot_versions(table_dir) if v < int(batch_id)]
-    return max(vs, default=None)
+from ..operators.timetravel import read_asof
+from .state_commit import commit_batch_state
 
 
 def matview_writer(spark: SparkSession, state_dir: str):
@@ -63,27 +48,13 @@ def matview_writer(spark: SparkSession, state_dir: str):
 
     def fb(batch_df: DataFrame, batch_id: int) -> None:
         delta = mv_aggregate(mv_project(batch_df))
-        prev_v = _prev_version(state_dir, int(batch_id))
-        if prev_v is None:
-            merged = delta
-        else:
-            prev = read_asof(spark, state_dir, prev_v, schema=MV_STATE_SCHEMA)
-            merged = mv_merge(prev, delta)
-        # materialize BEFORE writing: data/c{batch_id} may exist from a
-        # failed prior attempt of this same batch and the overwrite would
-        # otherwise race the lazy read of it
-        merged = merged.localCheckpoint(eager=True)
-        commit_snapshot(
+        commit_batch_state(
             spark,
             state_dir,
-            merged.coalesce(1),
-            int(batch_id),
-            carry_forward=False,  # each version IS the whole state table
+            batch_id,
+            MV_STATE_SCHEMA,
+            lambda prev: delta if prev is None else mv_merge(prev, delta),
         )
-        # retention: a replay of this batch needs prev_v, never older;
-        # min_age_s=0 is safe here because this maintainer is the table's
-        # only writer (no concurrent uncommitted files to protect)
-        vacuum(state_dir, keep_last=2)
 
     return fb
 

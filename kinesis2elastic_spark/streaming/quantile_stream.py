@@ -22,17 +22,15 @@ The grid covers [0, 1024): the events fixture's value domain tops out
 at ~560 at sf0.1, so real data has ~1.8x headroom before the overflow
 bucket sees any mass.
 
-Per micro-batch (the B126 matview writer's versioned-state discipline —
-see ``versioned_state.py``):
+Per micro-batch:
 1. partial-aggregate the batch into (group, bin, cnt) cells — at most
    |groups| x (``QHIST_BINS``+1) rows out regardless of batch size;
-2. read the highest state version STRICTLY BELOW this batch id (the
-   pre-batch state — bounded by the same cell count);
-3. merge by addition; 4. localCheckpoint, write ``v{batch_id}``, prune
-   versions older than the merge source.
-Replay after a crash between state write and checkpoint commit re-reads
-the same pre-batch version and deterministically overwrites its own —
-idempotent by construction (crash-replay pytest in test_streaming.py).
+2. add-merge them into the PRE-batch histogram and publish the sum as
+   snapshot ``batch_id`` through ``state_commit.commit_batch_state`` —
+   the replay-safe commit the B126 matview and B102 CMS writers share: a
+   replay after a crash between state write and checkpoint commit
+   re-merges from the same pre-batch snapshot, idempotent by
+   construction (crash-replay pytest in test_streaming.py).
 
 At 100 TB: per-batch shuffle <= |groups|x4097 counter cells per map
 partition; state is a fixed-size table (<=2 versions retained); quantile
@@ -44,7 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .versioned_state import latest_version, prune_below, version_path
+from ..operators.timetravel import read_asof
+from .state_commit import add_counts, commit_batch_state
 
 QHIST_BINS = 4096
 QHIST_W_MICRO = 250_000  # 0.25-unit bins: real grid covers [0, 1024)
@@ -67,29 +66,15 @@ def qhist_partials(df: DataFrame) -> DataFrame:
 def merge_qhist(
     spark: SparkSession, state_dir: str, partials: DataFrame, batch_id: int
 ) -> None:
-    """Add-merge one batch's counter cells into version ``v{batch_id}``,
-    merging from the pre-batch version (replay-idempotent)."""
-    prev_v = latest_version(state_dir, below=int(batch_id))
+    """Add-merge one batch's counter cells into snapshot ``batch_id``."""
     cells = partials.selectExpr("event_type", "bin", "cnt")
-    if prev_v is None:
-        src = cells
-    else:
-        prev = spark.read.schema(QHIST_STATE_SCHEMA).parquet(
-            version_path(state_dir, prev_v)
-        )
-        src = prev.unionByName(cells)
-    merged = (
-        src.groupBy("event_type", "bin")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-        # materialize BEFORE writing: v{batch_id} may exist from a failed
-        # prior attempt of this same batch and overwrite would otherwise
-        # race the lazy read of it
-        .localCheckpoint(eager=True)
+    commit_batch_state(
+        spark,
+        state_dir,
+        batch_id,
+        QHIST_STATE_SCHEMA,
+        lambda prev: add_counts(prev, cells, ["event_type", "bin"]),
     )
-    merged.coalesce(1).write.mode("overwrite").parquet(
-        version_path(state_dir, int(batch_id))
-    )
-    prune_below(state_dir, prev_v)
 
 
 def continuous_qhist_writer(spark: SparkSession, state_dir: str):
@@ -107,9 +92,4 @@ def continuous_qhist_writer(spark: SparkSession, state_dir: str):
 
 
 def read_qhist(spark: SparkSession, state_dir: str) -> DataFrame:
-    v = latest_version(state_dir)
-    if v is None:
-        return spark.createDataFrame([], QHIST_STATE_SCHEMA)
-    return spark.read.schema(QHIST_STATE_SCHEMA).parquet(
-        version_path(state_dir, v)
-    )
+    return read_asof(spark, state_dir, None, schema=QHIST_STATE_SCHEMA)

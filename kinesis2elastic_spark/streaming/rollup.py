@@ -17,6 +17,12 @@ per-partition swaps (parquet dir replace).
 Late data needs no special path: a late event lands in an old bucket and
 that bucket is simply rewritten — the materialization is eventually exact
 (contrast with watermark-dropped windows in pure streaming aggregation).
+
+Replay: the merge reads the touched buckets' CURRENT partials, which
+already include a batch that is replayed after its write landed.
+``hll_union_agg`` is idempotent, so the distinct rollup converges
+anyway; the sum-of-sums rollup is not, and counts such a batch twice
+(exactly-once needs the pre-batch state, as ``state_commit.py`` keeps).
 """
 
 from __future__ import annotations
@@ -83,7 +89,8 @@ def _merge_touched_partitions(
 
 def merge_rollup(spark: SparkSession, state_path: str, batch_partials: DataFrame) -> None:
     """Merge batch partials into the materialized rollup, rewriting only
-    the touched bucket partitions."""
+    the touched bucket partitions.  Not replay-safe: a batch merged twice
+    is summed twice."""
     _merge_touched_partitions(
         spark,
         state_path,

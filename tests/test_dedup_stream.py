@@ -18,8 +18,7 @@ def _run_drain(spark, src_dir, state_dir):
         spark.readStream.schema("doc_id long, text string").parquet(src_dir + "/*"),
         state_dir,
     )
-    q.awaitTermination(120)
-    assert not q.isActive
+    assert q.awaitTermination(120), "drain did not finish within 120s"
 
 
 def test_incremental_dedup_stream_two_batches(spark, tmp_path):

@@ -156,7 +156,7 @@ def test_partitioned_streaming_ingest(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120), "drain did not finish within 120s"
 
     spark.createDataFrame(rows1, schema).coalesce(1).write.parquet(src + "/b1")
     drain()

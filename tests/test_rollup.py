@@ -70,7 +70,7 @@ def test_streaming_drives_rollup(spark, tmp_path):
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
-    q.awaitTermination()
+    assert q.awaitTermination(120), "drain did not finish within 120s"
     got = {r.bucket.hour: r.n for r in read_rollup(spark, state).collect()}
     assert got == {0: 2, 1: 2, 2: 2}
 
@@ -133,7 +133,7 @@ def test_cms_merge_equals_one_shot(spark, sf_dir, tmp_path):
     state = str(tmp_path / "cms")
     for par in (0, 1):
         half = docs.filter((F.col("doc_id") % 2) == par)
-        merge_cms(spark, state, cms_partials(doc_token_stream(half)))
+        merge_cms(spark, state, cms_partials(doc_token_stream(half)), par)
     got = {(r.row, r.bucket): r.cnt for r in read_cms(spark, state).collect()}
     want = {
         (r.row, r.bucket): r.cnt
@@ -141,5 +141,5 @@ def test_cms_merge_equals_one_shot(spark, sf_dir, tmp_path):
     }
     assert got == want
     total_before = sum(got.values())
-    merge_cms(spark, state, cms_partials(doc_token_stream(docs.limit(5))))
+    merge_cms(spark, state, cms_partials(doc_token_stream(docs.limit(5))), 2)
     assert sum(r.cnt for r in read_cms(spark, state).collect()) > total_before

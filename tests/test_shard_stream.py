@@ -19,8 +19,7 @@ def _run_drain(spark, src_dir, dst):
         spark.readStream.schema("doc_id long, text string").parquet(src_dir + "/*"),
         dst,
     )
-    q.awaitTermination(120)
-    assert not q.isActive
+    assert q.awaitTermination(120), "drain did not finish within 120s"
 
 
 def test_shard_stream_two_batches_match_batch_layout(spark, tmp_path):

@@ -9,6 +9,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
+from kinesis2elastic_spark.operators.timetravel import snapshot_versions
 from kinesis2elastic_spark.streaming import windows as sw
 
 
@@ -392,7 +393,7 @@ def test_sessionize_stateful_timeout_emission_paths(spark, tmp_path_factory):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120), "drain did not finish within 120s"
     out_schema = (
         "user_id long, session_start timestamp, session_last timestamp,"
         " n_events long, sum_v_micro long"
@@ -413,8 +414,6 @@ def test_matview_writer_replay_idempotent(spark, tmp_path_factory):
     must leave the versioned MV state byte-identical — the writer merges
     from the highest version strictly BELOW its batch id, never from its
     own partial output."""
-    import os
-
     from kinesis2elastic_spark.streaming.matview_stream import (
         matview_writer,
         read_matview,
@@ -457,9 +456,8 @@ def test_matview_writer_replay_idempotent(spark, tmp_path_factory):
         tuple(r) for r in mv_aggregate(mv_project(mk(rows1 + rows2))).collect()
     }
     assert got == oneshot
-    # pruning holds state at <=2 versions
-    versions = [d for d in os.listdir(state) if d.startswith("v")]
-    assert len(versions) <= 2, versions
+    # vacuum holds state at <=2 snapshots
+    assert len(snapshot_versions(state)) <= 2, snapshot_versions(state)
 
 
 def test_qhist_merge_and_bin_guarantee(spark, tmp_path_factory):
@@ -508,8 +506,6 @@ def test_qhist_writer_replay_idempotent(spark, tmp_path_factory):
     leave the versioned histogram state identical — the writer merges
     from the highest version strictly BELOW its batch id, never from
     its own partial output (closes the r9 known double-merge hole)."""
-    import os
-
     from kinesis2elastic_spark.streaming.quantile_stream import (
         continuous_qhist_writer,
         qhist_partials,
@@ -534,72 +530,97 @@ def test_qhist_writer_replay_idempotent(spark, tmp_path_factory):
         for r in qhist_partials(b0.unionByName(b1)).collect()
     }
     assert got == oneshot
-    # pruning holds state at <=2 versions
-    versions = [d for d in os.listdir(state) if d.startswith("v")]
-    assert len(versions) <= 2, versions
+    # vacuum holds state at <=2 snapshots
+    assert len(snapshot_versions(state)) <= 2, snapshot_versions(state)
 
 
 def test_qhist_stream_crash_replay(spark, tmp_path_factory):
-    """B136 end-to-end dirty restart (the q_stream_replay_equiv fault
-    pattern applied to STATE maintenance): the qhist writer crashes on
-    its first attempt at batch 1 AFTER writing v1 but before the
-    checkpoint commits; a second query on the SAME checkpoint replays
-    batch 1, which must overwrite v1 from v0 rather than double-merge
-    its own partial write."""
+    """B136/B102 end-to-end dirty restart (the q_stream_replay_equiv fault
+    pattern applied to STATE maintenance): each counter writer (quantile
+    histogram, count-min sketch) crashes on its first attempt at batch 1
+    AFTER committing its state but before the checkpoint commits; a
+    second query on the SAME checkpoint replays batch 1, which must
+    re-merge from the batch-0 state rather than count itself twice."""
     import os
 
+    from kinesis2elastic_spark.operators.corpus import cms_partials, doc_token_stream
+    from kinesis2elastic_spark.streaming.cms_stream import (
+        continuous_cms_writer,
+        read_cms,
+    )
     from kinesis2elastic_spark.streaming.quantile_stream import (
         continuous_qhist_writer,
         qhist_partials,
         read_qhist,
     )
 
-    work = tmp_path_factory.mktemp("qh_crash")
-    src, state = str(work / "src"), str(work / "state")
-    ckpt = str(work / "ckpt")
-    schema = "event_type string, value double"
-    b0 = spark.createDataFrame([("a", 1.0), ("a", 2.0), ("b", 3.5)], schema)
-    b1 = spark.createDataFrame([("a", 1.0), ("b", 10.25)], schema)
-    b0.coalesce(1).write.parquet(src + "/f0")
-    b1.coalesce(1).write.parquet(src + "/f1")
-    marker = str(work / "fault_fired")
-    inner = continuous_qhist_writer(spark, state)
+    cases = [
+        (
+            "qhist",
+            "event_type string, value double",
+            [("a", 1.0), ("a", 2.0), ("b", 3.5)],
+            [("a", 1.0), ("b", 10.25)],
+            continuous_qhist_writer,
+            qhist_partials,
+            read_qhist,
+        ),
+        (
+            "cms",
+            "doc_id long, text string",
+            [(1, "alpha beta"), (2, "beta gamma gamma")],
+            [(3, "alpha delta"), (4, "gamma")],
+            continuous_cms_writer,
+            lambda df: cms_partials(doc_token_stream(df)).selectExpr(
+                "row", "bucket", "cnt"
+            ),
+            read_cms,
+        ),
+    ]
+    for name, schema, rows0, rows1, writer, partials, read in cases:
+        work = tmp_path_factory.mktemp(f"{name}_crash")
+        src, state = str(work / "src"), str(work / "state")
+        ckpt = str(work / "ckpt")
+        b0 = spark.createDataFrame(rows0, schema)
+        b1 = spark.createDataFrame(rows1, schema)
+        b0.coalesce(1).write.parquet(src + "/f0")
+        b1.coalesce(1).write.parquet(src + "/f1")
+        marker = str(work / "fault_fired")
+        inner = writer(spark, state)
 
-    def faulty_fb(bdf, bid):
-        inner(bdf, bid)  # state version IS written...
-        if int(bid) == 1 and not os.path.exists(marker):
-            with open(marker, "w"):
-                pass
-            # ...then the "crash" lands before the checkpoint commit
-            raise RuntimeError("injected-qhist-fault")
+        def faulty_fb(bdf, bid):
+            inner(bdf, bid)  # state version IS written...
+            if int(bid) == 1 and not os.path.exists(marker):
+                with open(marker, "w"):
+                    pass
+                # ...then the "crash" lands before the checkpoint commit
+                raise RuntimeError("injected-state-fault")
 
-    def start():
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src + "/*")
-            .writeStream.foreachBatch(faulty_fb)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
+        def start():
+            return (
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", "1")
+                .parquet(src + "/*")
+                .writeStream.foreachBatch(faulty_fb)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
 
-    q1 = start()
-    crashed = False
-    try:
-        q1.awaitTermination(300)
-    except Exception as e:  # noqa: BLE001 - StreamingQueryException expected
-        assert "injected-qhist-fault" in str(e)
-        crashed = True
-    assert crashed and os.path.exists(marker)
-    q2 = start()
-    assert q2.awaitTermination(300)
-    got = {(r.event_type, r.bin): r.cnt for r in read_qhist(spark, state).collect()}
-    oneshot = {
-        (r.event_type, r.bin): r.cnt
-        for r in qhist_partials(b0.unionByName(b1)).collect()
-    }
-    assert got == oneshot
+        q1 = start()
+        crashed = False
+        try:
+            q1.awaitTermination(300)
+        except Exception as e:  # noqa: BLE001 - StreamingQueryException expected
+            assert "injected-state-fault" in str(e)
+            crashed = True
+        assert crashed and os.path.exists(marker), name
+        q2 = start()
+        assert q2.awaitTermination(300), name
+        got = {tuple(r)[:-1]: r.cnt for r in read(spark, state).collect()}
+        oneshot = {
+            tuple(r)[:-1]: r.cnt for r in partials(b0.unionByName(b1)).collect()
+        }
+        assert got == oneshot, name
 
 
 def test_matview_commits_are_time_travelable(spark, tmp_path_factory):

@@ -4,6 +4,10 @@ Runs every ``queries()`` entry on Spark and (where present) its
 ``oracle_sql()`` on DuckDB over the same parquet, then compares
 row-count + column names + order-insensitive canonicalized value hash.
 
+DuckDB runs under a fixed memory limit and thread count (it would take
+80 % of RAM by default), and each oracle query under a fixed wall cap: a
+timer interrupts the connection, and an interrupted oracle is a FAIL.
+
 Usage:  python tools/check_oracle.py [sf_dir] [query ...]
 """
 
@@ -14,6 +18,7 @@ import hashlib
 import math
 import os
 import sys
+import threading
 import time
 import traceback
 
@@ -24,6 +29,10 @@ import duckdb
 import __spark_entry__ as entrymod
 from kinesis2elastic_spark.catalog import TABLES
 from kinesis2elastic_spark.session import get_spark
+
+DUCKDB_MEMORY_LIMIT = "4GB"
+DUCKDB_THREADS = 2
+ORACLE_WALL_CAP_S = 1020
 
 
 def canon(v) -> str:
@@ -65,6 +74,8 @@ def main() -> int:
 
     spark = get_spark("oracle-check")
     con = duckdb.connect()
+    con.execute(f"SET memory_limit='{DUCKDB_MEMORY_LIMIT}'")
+    con.execute(f"SET threads={DUCKDB_THREADS}")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
@@ -89,14 +100,27 @@ def main() -> int:
             print(f"rows-only  {name}: {len(srows)} rows  ({time.time()-t0:.1f}s)")
             n_rows_only += 1
             continue
+        timed_out = threading.Event()
+
+        def cap() -> None:
+            timed_out.set()
+            con.interrupt()
+
+        timer = threading.Timer(ORACLE_WALL_CAP_S, cap)
+        timer.start()
         try:
             res = con.execute(oracles[name])
             ocols = [d[0] for d in res.description]
             orows = res.fetchall()
         except Exception:
-            print(f"FAIL  {name}: duckdb error\n{traceback.format_exc()}")
+            if timed_out.is_set():
+                print(f"FAIL  {name}: duckdb timeout after {ORACLE_WALL_CAP_S}s")
+            else:
+                print(f"FAIL  {name}: duckdb error\n{traceback.format_exc()}")
             n_fail += 1
             continue
+        finally:
+            timer.cancel()
         sn, sc, sh = table_hash(scols, srows)
         on, oc, oh = table_hash(ocols, orows)
         ok = (sn, sc, sh) == (on, oc, oh)
