@@ -85,7 +85,6 @@ def _write_second_batch(df: DataFrame, split_col: str, src: str) -> None:
     df.filter((F.col(split_col) % 2) == 1).coalesce(1).write.parquet(src + "/b2")
 
 
-
 def frames_equal_flag(a: DataFrame, b: DataFrame, flag: str) -> DataFrame:
     """One-row DataFrame with boolean ``flag``: True iff ``a`` and ``b``
     hold exactly the same multiset of rows (exceptAll both ways — row
@@ -99,7 +98,7 @@ def frames_equal_flag(a: DataFrame, b: DataFrame, flag: str) -> DataFrame:
 
 def q_stream_shard_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B91 streaming form, oracle-backed: documents arrive in two
-    micro-batches through ``shard_stream_batch`` (foreachBatch,
+    micro-batches through ``incremental_shard_stream`` (foreachBatch,
     availableNow, per-batch dynamic partition overwrite); the rolled-up
     streaming manifest must equal BOTH the deterministic per-shard
     accounting DuckDB recomputes from the raw table (hashed columns) and
@@ -110,18 +109,16 @@ def q_stream_shard_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     and fully oracle-recomputable — the streaming state itself is under
     the hash gate, not just a boolean about it."""
     from ..operators.corpus import shard_id_col
-    from ..streaming.shard_stream import read_stream_manifest, shard_stream_batch
+    from ..streaming.shard_stream import incremental_shard_stream, read_stream_manifest
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
 
     def run(work, drain):
         src, dst = os.path.join(work, "src"), os.path.join(work, "dst")
-        sink = (
-            spark.readStream.schema("doc_id long, text string")
-            .parquet(src + "/*")
-            .writeStream.foreachBatch(
-                lambda df, bid: shard_stream_batch(df.sparkSession, df, bid, dst)
-            )
+        sink = incremental_shard_stream(
+            spark,
+            spark.readStream.schema("doc_id long, text string").parquet(src + "/*"),
+            dst,
         )
         _two_batch_source(docs, "doc_id", src)
         drain(sink)
@@ -156,7 +153,7 @@ def q_stream_shard_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_stream_dedup_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B87 streaming form, oracle-backed: the two-batch drain of
-    ``dedup_stream_batch`` (even doc_ids arrive first and build the
+    ``incremental_dedup_stream`` (even doc_ids arrive first and build the
     band index; odd doc_ids arrive second and dedup against it) must
     produce EXACTLY the verified cross-pair set of the batch operator
     ``minhash_incremental_detail`` on the same even/odd split — same
@@ -176,18 +173,16 @@ def q_stream_dedup_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact_set_pairs,
         minhash_incremental_detail,
     )
-    from ..streaming.dedup_stream import PAIRS_SCHEMA, dedup_stream_batch
+    from ..streaming.dedup_stream import PAIRS_SCHEMA, incremental_dedup_stream
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
 
     def run(work, drain):
         src, state = os.path.join(work, "src"), os.path.join(work, "state")
-        sink = (
-            spark.readStream.schema("doc_id long, text string")
-            .parquet(src + "/*")
-            .writeStream.foreachBatch(
-                lambda df, bid: dedup_stream_batch(df.sparkSession, df, bid, state)
-            )
+        sink = incremental_dedup_stream(
+            spark,
+            spark.readStream.schema("doc_id long, text string").parquet(src + "/*"),
+            state,
         )
         _two_batch_source(docs, "doc_id", src)
         drain(sink)
@@ -337,7 +332,6 @@ def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
     if os.path.isdir(path):
         return spark.read.schema(schema).parquet(path)
     return spark.createDataFrame([], schema)
-
 
 
 def q_stream_tumble_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1930,8 +1924,6 @@ def q_stream_iceberg_src_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _orders_by_status(sink_rows, exactly_once)
 
     return _drained(run)
-
-
 
 
 QUERIES = {

@@ -32,6 +32,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..functions.numerics import stable_round
 from ..operators.llmops import _shingles, minhash_band_rows
@@ -161,17 +162,12 @@ def incremental_dedup_stream(
     stream_df: DataFrame,
     state_dir: str,
     **kwargs,
-):
-    """Wire a streaming documents source through the incremental dedup:
-    ``availableNow`` drains what exists and stops (deterministic tests /
-    batch-cadence production runs); drop the trigger for continuous."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda df, bid: dedup_stream_batch(
-                df.sparkSession, df, bid, state_dir, **kwargs
-            )
-        )
-        .option("checkpointLocation", os.path.join(state_dir, "checkpoint"))
-        .trigger(availableNow=True)
-        .start()
+) -> DataStreamWriter:
+    """Wire a streaming documents source through the incremental dedup and
+    return the unstarted writer: the caller sets its checkpoint and
+    trigger and starts it (``availableNow`` drains what exists and stops,
+    for tests and batch-cadence production runs; no trigger runs it
+    continuously)."""
+    return stream_df.writeStream.foreachBatch(
+        lambda df, bid: dedup_stream_batch(df.sparkSession, df, bid, state_dir, **kwargs)
     )

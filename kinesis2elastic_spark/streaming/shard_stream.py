@@ -34,6 +34,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 
 def shard_stream_batch(
@@ -88,19 +89,15 @@ def incremental_shard_stream(
     dst: str,
     key_col: str = "doc_id",
     n_shards: int | None = None,
-):
-    """Wire a streaming documents source into the shard layout:
-    ``availableNow`` drains what exists and stops (deterministic tests /
-    batch-cadence production); drop the trigger for continuous."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            lambda df, bid: shard_stream_batch(
-                df.sparkSession, df, bid, dst, key_col=key_col, n_shards=n_shards
-            )
+) -> DataStreamWriter:
+    """Wire a streaming documents source into the shard layout and return
+    the unstarted writer: the caller sets its checkpoint and trigger and
+    starts it (``availableNow`` drains what exists and stops, for tests
+    and batch-cadence production; no trigger runs it continuously)."""
+    return stream_df.writeStream.foreachBatch(
+        lambda df, bid: shard_stream_batch(
+            df.sparkSession, df, bid, dst, key_col=key_col, n_shards=n_shards
         )
-        .option("checkpointLocation", os.path.join(dst, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
     )
 
 

@@ -12,11 +12,16 @@ BASE = " ".join(f"w{i}" for i in range(30))
 
 
 def _run_drain(spark, src_dir, state_dir):
-    q = incremental_dedup_stream(
-        spark,
-        # glob: each batch lands as its own subdirectory of parquet files
-        spark.readStream.schema("doc_id long, text string").parquet(src_dir + "/*"),
-        state_dir,
+    q = (
+        incremental_dedup_stream(
+            spark,
+            # glob: each batch lands as its own subdirectory of parquet files
+            spark.readStream.schema("doc_id long, text string").parquet(src_dir + "/*"),
+            state_dir,
+        )
+        .option("checkpointLocation", os.path.join(state_dir, "checkpoint"))
+        .trigger(availableNow=True)
+        .start()
     )
     assert q.awaitTermination(120), "drain did not finish within 120s"
 

@@ -14,10 +14,15 @@ from kinesis2elastic_spark.streaming.shard_stream import (
 
 
 def _run_drain(spark, src_dir, dst):
-    q = incremental_shard_stream(
-        spark,
-        spark.readStream.schema("doc_id long, text string").parquet(src_dir + "/*"),
-        dst,
+    q = (
+        incremental_shard_stream(
+            spark,
+            spark.readStream.schema("doc_id long, text string").parquet(src_dir + "/*"),
+            dst,
+        )
+        .option("checkpointLocation", os.path.join(dst, "_checkpoint"))
+        .trigger(availableNow=True)
+        .start()
     )
     assert q.awaitTermination(120), "drain did not finish within 120s"
 

@@ -168,10 +168,15 @@ def leg_b_incremental_dedup(spark, sf_dir: str, n_batches: int) -> list[dict]:
     for i in range(n_batches):
         shutil.copytree(f"{staged}/b{i:02d}", f"{src}/b{i:02d}")
         t0 = time.time()
-        q = incremental_dedup_stream(
-            spark,
-            spark.readStream.schema("doc_id long, text string").parquet(src + "/*"),
-            state,
+        q = (
+            incremental_dedup_stream(
+                spark,
+                spark.readStream.schema("doc_id long, text string").parquet(src + "/*"),
+                state,
+            )
+            .option("checkpointLocation", os.path.join(state, "checkpoint"))
+            .trigger(availableNow=True)
+            .start()
         )
         q.awaitTermination(600)
         wall = time.time() - t0
